@@ -6,15 +6,13 @@ import org.apache.spark.sql.SparkSession
   * REAL merge count (thousands, the road to a deployable tokenizer's
   * 32k) on a corpus 100× the driver's largest, in minutes?
   *
-  * The distributed per-round path (q82's trainer) is the ORACLE-GATED
-  * surface — one Spark job + one 1-row collect per merge, correct but
-  * O(100)-merge-bounded in practice. The scale path measured here is
-  * [[graft.operators.Bpe#trainLocalMerges]]: ONE Spark job collapses
+  * The trainer measured here is q82's:
+  * [[graft.operators.Bpe#trainLocalMerges]] — ONE Spark job collapses
   * the corpus to its (bounded, optionally sampled) vocabulary, then
   * the driver-local incremental merge loop runs every round job-free.
-  * BpeLocalSpec pins local ≡ distributed on identical input; this
-  * probe reports the wall-clock split (corpus→vocab collect vs merge
-  * loop) and the achieved merges/second.
+  * q82 runs it at the oracle-gated `bpeMerges` rounds; this probe
+  * asks for thousands, and reports the wall-clock split (corpus→vocab
+  * collect vs merge loop) and the achieved merges/second.
   *
   * The corpus is [[graft.operators.SyntheticCorpus.ensureText]] — the
   * probe generator with a REALISTIC (Zipf-drawn, `vocabWords`-sized)

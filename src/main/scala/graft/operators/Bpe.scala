@@ -22,16 +22,19 @@ import org.apache.spark.sql.functions._
   *  - the corpus collapses to its VOCABULARY `(word, freq)` — one
   *    corpus-wide shuffle, after which every training round works on
   *    vocabulary-sized data (Heaps' law: ~√corpus), never the corpus;
-  *  - each word's segmentation is carried as a delimited string
-  *    `(h)(e)(l)(l)(o)`; a merge of pair (l, r) is ONE engine-portable
-  *    `replace(seg, '(l)(r)', '(lr)')` — left-to-right non-overlapping,
-  *    exactly BPE's merge rule, identical bytes on both engines;
-  *  - one round = count adjacent pairs (weighted by word freq) → pick
-  *    the max (count desc, pair asc — total order, deterministic) →
-  *    apply the merge. The driver loop holds ONE collected row per
-  *    round (the q38 fixpoint pattern); rounds cap at
-  *    [[graft.config.Tuning.bpeMerges]] and stop early when no pair
-  *    repeats (count < 2 — every later round would pick nothing too).
+  *  - the vocabulary is collected ONCE and every round runs on the
+  *    driver ([[Bpe.localMergeLoop]]): one round = count adjacent
+  *    pairs (weighted by word freq) → pick the max (count desc, pair
+  *    asc in UTF-8 byte order — total order, deterministic) → apply
+  *    the merge left-to-right, non-overlapping. Pair counts are kept
+  *    incrementally, so a round costs the words the merge touches, not
+  *    a Spark job. Rounds cap at [[graft.config.Tuning.bpeMerges]] and
+  *    stop early when no pair repeats (count < 2 — every later round
+  *    would pick nothing too);
+  *  - application surfaces carry each word's segmentation as a
+  *    delimited string `(h)(e)(l)(l)(o)`; a trained merge of pair
+  *    (l, r) is ONE engine-portable `replace(seg, '(l)(r)', '(lr)')`
+  *    — exactly BPE's merge rule, identical bytes on both engines.
   *
   * The DuckDB oracle replays the SAME rounds as an UNROLLED chain of
   * MATERIALIZED CTEs (one `b{i}` argmax + one `s{i}` re-segmentation
@@ -47,13 +50,12 @@ import org.apache.spark.sql.functions._
   * `///` missing-value marker (readport.py:358-364). A byte-level
   * escape would lift it; not needed for the corpus surface.
   *
-  * Scale shape: training aggregations run on the vocabulary table
-  * (map-side-combinable sum per pair), each round's result is
-  * localCheckpoint-truncated (the q38 lineage rule), and the apply
-  * side (q83) is one vocabulary join against the exploded corpus —
-  * AQE broadcasts the vocab map while it fits, shuffles past that.
-  * Nothing corpus-sized ever reaches the driver; the one collected
-  * row per round is the argmax pair.
+  * Scale shape: training is one Spark job (the corpus → vocabulary
+  * collapse and its collect — vocabulary-sized, bounded by the
+  * training knobs, see [[Bpe!.trainLocalMerges]]), and the apply side
+  * (q83) is one vocabulary join against the exploded corpus — AQE
+  * broadcasts the vocab map while it fits, shuffles past that.
+  * Nothing corpus-sized ever reaches the driver.
   */
 object Bpe {
 
@@ -227,7 +229,7 @@ object Bpe {
     * as the engines' `regexp_replace(w, '(.)', '($1)')` (Java regex and
     * DuckDB RE2 `.` both match a code point, not a UTF-16 unit).
     * `toCharArray` would shear supplementary characters into lone
-    * surrogates and diverge from the distributed trainer on non-BMP
+    * surrogates and diverge from the engines' segmentation on non-BMP
     * text — every JVM-side splitter must go through here.
     */
   private[operators] def splitCodePoints(word: String): Array[String] = {
@@ -444,12 +446,11 @@ object Bpe {
     }
   }
 
-  /** The DRIVER-LOCAL merge loop over a collected `(word, freq)`
-    * vocabulary — bit-identical rounds to the distributed trainer on
-    * the same input (BpeLocalSpec pins this), at job-free per-round
-    * cost: this is what lets training reach a REAL vocabulary size
-    * (thousands of merges) where the distributed loop's
-    * one-Spark-job-per-merge granularity caps out at O(100) rounds.
+  /** The merge loop over a collected `(word, freq)` vocabulary — every
+    * trainer's rounds. Bit-identical to the per-round replace/argmax
+    * the DuckDB oracle replays (BpeLocalSpec pins it against a
+    * distributed reference), at job-free per-round cost, so training
+    * reaches a REAL vocabulary size (thousands of merges).
     * The vocabulary is bounded (Heaps' law: ~√corpus, and the
     * [[graft.config.Tuning.bpeSampleMod]] sample bounds it further),
     * so driver memory holds it the way it holds a collected codebook.
@@ -461,8 +462,7 @@ object Bpe {
     * full scan of the live pair-count map with the engines' total
     * order (count desc, then (l, r) ascending in UTF-8 byte order) —
     * O(distinct pairs) per round, no heap needed at tested scales.
-    * Early-stops when no pair repeats (count < 2), like the
-    * distributed loop.
+    * Early-stops when no pair repeats (count < 2).
     */
   def localMergeLoop(vocab: Seq[(String, Long)], rounds: Int,
       escape: Boolean = false): Seq[Merge] = {
@@ -474,8 +474,8 @@ object Bpe {
       if (escape) utf8Lt(esc(a), esc(b)) else utf8Lt(a, b)
     val words = vocab.iterator.map { case (w, _) =>
       splitCodePoints(w) // NOT toCharArray: lone surrogates would
-                         // diverge from the distributed trainer's
-                         // code-point regex on non-BMP text
+                         // diverge from the engines' code-point
+                         // regex on non-BMP text
     }.toArray
     val freqs = vocab.iterator.map(_._2).toArray
     val counts = new java.util.HashMap[(String, String), Long]()
@@ -580,17 +580,17 @@ final class Bpe(val tuning: Tuning) extends Serializable {
   // ------------------------------------------------------------------
   // The delimiter escape (Tuning.bpeEscape — see Bpe.esc for the
   // encoding's properties). When ON, paren-bearing words join the
-  // vocabulary: seg strings hold ESCAPED token content, merge rounds
-  // run entirely in the escaped domain (pair extraction, argmax order,
-  // replace patterns), and only the OUTPUT boundaries unescape (the
-  // merge table's l/r/merged, the token-id vocabulary) — token COUNTS
-  // never need to. Every helper below is the identity when off, so
-  // the historical bytes are untouched.
+  // vocabulary: seg strings hold ESCAPED token content (apply-side
+  // replace patterns, and the oracle's rounds end to end), the trainer
+  // breaks argmax ties in the escaped byte order
+  // (Bpe.localMergeLoop), and the oracle unescapes only at the OUTPUT
+  // boundaries (the merge table's l/r/merged, the token-id
+  // vocabulary) — token COUNTS never need to. Every helper below is
+  // the identity when off, so the historical bytes are untouched.
   // ------------------------------------------------------------------
   private val escapeOn = tuning.bpeEscape == 1
 
   private def escStr(x: String): String = if (escapeOn) Bpe.esc(x) else x
-  private def unescStr(x: String): String = if (escapeOn) Bpe.unesc(x) else x
 
   /** A word's initial seg string, Spark side: escape (when on), then
     * wrap each atom — an escape pair or a single code point, leftmost
@@ -649,32 +649,6 @@ final class Bpe(val tuning: Tuning) extends Serializable {
   private def trainViewBounded: Boolean =
     sampleMod > 1 || minFreq > 1 || vocabCap > 0
 
-  /** Trained merges per (corpus dir canonical path + content
-    * fingerprint + rounds) — training is deterministic, so a second
-    * query (q83 after q82, or a bench's second pass) replays the memo
-    * instead of the loop. Driver-side state is bounded: ≤ bpeMerges
-    * rows of short strings per corpus.
-    */
-  @transient private lazy val memo =
-    scala.collection.mutable.HashMap[String, Seq[Merge]]()
-
-  /** Memo key = corpus path + file-listing fingerprint + parquet
-    * footer ROW COUNT + rounds. The row count closes the listing
-    * fingerprint's stale-cache window (a corpus regenerated in place
-    * with same-sized files inside the mtime granularity): content that
-    * changes the row count re-keys even when the listing doesn't.
-    * Remaining contract: a same-rowcount same-size in-place rewrite
-    * within one mtime tick replays the memo — acceptable for the
-    * fixture workflow, and any on-disk artifact keyed the same way
-    * shares it.
-    */
-  private def memoKey(s: SparkSession, d: String): String =
-    new java.io.File(d).getCanonicalPath + ":" +
-      ArtifactLake.fingerprint(new java.io.File(s"$d/documents.parquet")) +
-      ":" + Tables.footerCount(s, s"$d/documents.parquet").getOrElse(-1L) +
-      ":" + nRounds + ":" + sampleMod + ":" + minFreq + ":" + vocabCap +
-      (if (nfcOn) ":nfc" else "") + (if (escapeOn) ":esc" else "") + (if (pretokOn) ":ptk" else "")
-
   /** `(w, freq, seg)` — the vocabulary with each word's initial
     * character segmentation. The corpus collapses here; everything
     * after is vocabulary-sized. `sampled = true` is the TRAINING view:
@@ -726,74 +700,29 @@ final class Bpe(val tuning: Tuning) extends Serializable {
   private def segToks(seg: Column): Column =
     regexp_extract_all(seg, lit("""\(([^()]*)\)"""), lit(1))
 
-  /** The training loop — see the module doc for the per-round shape. */
+  /** The trained merge table over this registry's corpus — see the
+    * module doc for the round shape.
+    */
   private def train(s: SparkSession, d: String): Seq[Merge] =
-    trainOver(s, memoKey(s, d), vocab(s, d, sampled = true))
+    trainLocalMerges(s, d, nRounds)
 
   /** The curated twin of [[train]]: the merge rounds over the
     * boilerplate-STRIPPED corpus (`cur` = [[Search.stripRuns]] output,
     * passed in so one q89 invocation materializes the strip once).
-    * Memoized separately — the curated vocabulary differs wherever a
-    * shared run was cut.
     */
   private def trainCurated(s: SparkSession, d: String,
       cur: DataFrame): Seq[Merge] =
-    trainOver(s, memoKey(s, d) + ":curated", vocabOf(s, cur, sampled = true))
+    trainOver(vocabOf(s, cur, sampled = true), nRounds)
 
-  /** Memoized merge rounds over an arbitrary initial vocabulary view —
-    * the shared trunk of [[train]] / [[trainCurated]] / the escape
-    * fixture's trainer (`vocab0` is by-name: a memo hit builds no
-    * plan).
+  /** The shared trunk of every trainer: collect the `(w, freq)`
+    * training vocabulary (one Spark job) and run `rounds` merges of
+    * [[Bpe.localMergeLoop]] on it. Deliberately not memoized: every
+    * call pays, and a timed query reports, its full training cost.
     */
-  private def trainOver(s: SparkSession, key: String,
-      vocab0: => DataFrame): Seq[Merge] = synchronized {
-    memo.getOrElseUpdate(key, mergeRounds(s, vocab0))
-  }
-
-  /** The distributed merge-round loop over an initial vocabulary
-    * segmentation — one pair aggregation + one collected argmax row
-    * per round (see the module doc).
-    */
-  private def mergeRounds(s: SparkSession, vocab0: DataFrame): Seq[Merge] = {
-      import s.implicits._
-      var seg = vocab0.localCheckpoint(true)
-      val out = Vector.newBuilder[Merge]
-      var r = 0
-      var done = false
-      while (r < nRounds && !done) {
-        val best = seg
-          .select($"freq", segToks($"seg").as("t"))
-          .filter(size($"t") >= 2)
-          .select($"freq", expr(
-            """zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),
-                 (a, b) -> named_struct('l', a, 'r', b))""").as("ps"))
-          .select(explode($"ps").as("p"), $"freq")
-          .groupBy($"p.l".as("l"), $"p.r".as("r"))
-          .agg(sum($"freq").as("cnt"))
-          .filter($"cnt" >= 2)
-          .orderBy($"cnt".desc, $"l", $"r")
-          .limit(1)
-          .collect()
-        if (best.isEmpty) done = true
-        else {
-          // the argmax row lives in the SEG domain (escaped under the
-          // delimiter escape): the replace pattern uses it as-is, the
-          // output merge tuple decodes to real text
-          val (lE, rE, cnt) = (best(0).getString(0), best(0).getString(1),
-            best(0).getLong(2))
-          val (l, rr) = (unescStr(lE), unescStr(rE))
-          val m = l + rr
-          out += ((r + 1L, l, rr, m, cnt))
-          val old = seg
-          seg = seg.withColumn("seg", call_function("replace",
-              $"seg", lit(s"($lE)($rE)"), lit(s"($lE$rE)")))
-            .localCheckpoint(true)
-          old.unpersist()
-        }
-        r += 1
-      }
-      seg.unpersist()
-      out.result()
+  private def trainOver(vocab0: DataFrame, rounds: Int): Seq[Merge] = {
+    val vb = vocab0.select("w", "freq").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    Bpe.localMergeLoop(vb, rounds, escapeOn)
   }
 
   /** The vocabulary with its FINAL segmentation — the trained merges
@@ -815,11 +744,11 @@ final class Bpe(val tuning: Tuning) extends Serializable {
         lit(s"(${escStr(l)})(${escStr(r)})"), lit(s"(${escStr(m)})"))
     }
 
-  /** The driver-local trainer over this registry's sampled vocabulary
-    * — ONE Spark job (the vocabulary collapse + collect), then
-    * [[Bpe.localMergeLoop]] for the rounds. Bit-identical to [[train]]
-    * on the same input (BpeLocalSpec), and the path that reaches real
-    * vocabulary sizes: `rounds` is a parameter, not the registry knob,
+  /** The trainer over this registry's sampled vocabulary — ONE Spark
+    * job (the vocabulary collapse + collect), then
+    * [[Bpe.localMergeLoop]] for the rounds. [[train]] is this at
+    * `rounds = bpeMerges`, so q82's oracle-gated table is a prefix of
+    * any deeper run on the same corpus; `rounds` is a parameter
     * because the caller asking for 32k merges is a training-prep run,
     * not an oracle-gated query.
     *
@@ -847,12 +776,8 @@ final class Bpe(val tuning: Tuning) extends Serializable {
     * working set is O(collected vocabulary + distinct adjacent pairs),
     * both bounded by the same knobs.
     */
-  def trainLocalMerges(s: SparkSession, d: String, rounds: Int): Seq[Merge] = {
-    import s.implicits._
-    val vb = vocab(s, d, sampled = true)
-      .select($"w", $"freq").as[(String, Long)].collect().toSeq
-    Bpe.localMergeLoop(vb, rounds, escapeOn)
-  }
+  def trainLocalMerges(s: SparkSession, d: String, rounds: Int): Seq[Merge] =
+    trainOver(vocab(s, d, sampled = true), rounds)
 
   // ------------------------------------------------------------------
   // Oracle SQL: the unrolled MATERIALIZED-CTE replay of the rounds.
@@ -945,13 +870,17 @@ final class Bpe(val tuning: Tuning) extends Serializable {
     */
   private val q82 = Q(
     "q82_bpe_train",
-    (s, d) => {
-      import s.implicits._
-      train(s, d)
-        .toDF("rank", "l", "r", "merged", "pair_count")
-        .orderBy($"rank")
-    },
+    (s, d) => mergeTable(s, train(s, d)),
     Some(trainDumpSql("", "documents")))
+
+  /** A trained merge table as q82/q93/q96 serve it. The trainer emits
+    * rows in rank order and a local relation keeps that order, so no
+    * sort is planned (one would cost a range-partition shuffle).
+    */
+  private def mergeTable(s: SparkSession, merges: Seq[Merge]): DataFrame = {
+    import s.implicits._
+    merges.toDF("rank", "l", "r", "merged", "pair_count")
+  }
 
   /** The merge-table dump oracle over a corpus relation `rel` — the
     * b$i argmax rows in rank order, decoded to real text under the
@@ -2071,8 +2000,7 @@ final class Bpe(val tuning: Tuning) extends Serializable {
       " FROM documents WHERE doc_id % 50 = 3)"
 
   private def trainFixture(s: SparkSession, d: String): Seq[Merge] =
-    trainOver(s, memoKey(s, d) + ":pfix",
-      vocabOf(s, spread(parenFixture(s, d)), sampled = true))
+    trainOver(vocabOf(s, spread(parenFixture(s, d)), sampled = true), nRounds)
 
   /** q93: the escape-mode merge table over the paren fixture — every
     * training round's argmax (computed in the escaped seg domain on
@@ -2082,12 +2010,7 @@ final class Bpe(val tuning: Tuning) extends Serializable {
     */
   private val q93 = Q(
     "q93_bpe_escape_train",
-    (s, d) => {
-      import s.implicits._
-      escTwin.trainFixture(s, d)
-        .toDF("rank", "l", "r", "merged", "pair_count")
-        .orderBy($"rank")
-    },
+    (s, d) => mergeTable(s, escTwin.trainFixture(s, d)),
     Some(escTwin.trainDumpSql(escTwin.parenFixtureSql + ",\n      ", "pfix")))
 
   /** q94: the escape-mode tokenize face — q83's per-document token
@@ -2102,7 +2025,7 @@ final class Bpe(val tuning: Tuning) extends Serializable {
     Some(escTwin.tokenizeDumpSql(escTwin.parenFixtureSql + ",\n      ", "pfix")))
 
   /** The import gate's stored artifact: the escape-mode paren-fixture
-    * corpus sharded with ITS OWN trained merges (the q93/q94 memoized
+    * corpus sharded with ITS OWN trained merges (the q93/q94
     * fixture trainer — fixture-sized, 2% of docs), keyed like every
     * lake on corpus path + content fingerprint + knobs. Built through
     * the standard [[installShards]] recipe, so the vocab parquet the
@@ -2209,8 +2132,7 @@ final class Bpe(val tuning: Tuning) extends Serializable {
       " AS text FROM documents WHERE doc_id % 50 = 9)"
 
   private def trainPretokFixture(s: SparkSession, d: String): Seq[Merge] =
-    trainOver(s, memoKey(s, d) + ":tfix",
-      vocabOf(s, spread(pretokFixture(s, d)), sampled = true))
+    trainOver(vocabOf(s, spread(pretokFixture(s, d)), sampled = true), nRounds)
 
   /** q96: the pretok-mode merge table over the contraction fixture —
     * every training round's argmax over the PRETOKEN vocabulary,
@@ -2222,12 +2144,7 @@ final class Bpe(val tuning: Tuning) extends Serializable {
     */
   private val q96 = Q(
     "q96_bpe_pretok_train",
-    (s, d) => {
-      import s.implicits._
-      ptkTwin.trainPretokFixture(s, d)
-        .toDF("rank", "l", "r", "merged", "pair_count")
-        .orderBy($"rank")
-    },
+    (s, d) => mergeTable(s, ptkTwin.trainPretokFixture(s, d)),
     Some(ptkTwin.trainDumpSql(ptkTwin.pretokFixtureSql + ",\n      ", "tfix")))
 
   /** q97: the pretok-mode tokenize face — q83's per-document counts

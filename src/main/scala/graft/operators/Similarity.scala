@@ -2713,10 +2713,17 @@ final class Similarity(val tuning: Tuning) extends Serializable {
           }
         }
         it.foreach { case (nid, sub, cent) =>
-          if (nid != cur) { flush(); cur = nid; open = true }
-          val idx = sub * w + cix(cent)
-          var qi = 0
-          while (qi < nq) { acc(qi) += luts(qi)(idx); qi += 1 }
+          if (nid != cur) { flush(); cur = nid; open = false }
+          // a stale index can hold a code whose centroid the codebook
+          // no longer has: skip that addend, as DenseLut.pd2's null
+          // does; a vector with no known code is never ranked
+          val ci = cix.getOrElse(cent, -1)
+          if (ci >= 0) {
+            open = true
+            val idx = sub * w + ci
+            var qi = 0
+            while (qi < nq) { acc(qi) += luts(qi)(idx); qi += 1 }
+          }
         }
         flush()
         qids.iterator.zipWithIndex.flatMap { case (q, qi) =>

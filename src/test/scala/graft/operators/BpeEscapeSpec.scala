@@ -79,7 +79,7 @@ class BpeEscapeSpec extends SparkTestBase {
   test("escape-on admits every word: distributed ≡ driver-local") {
     import spark.implicits._
     val t = Tuning(bpeMerges = 10, bpeEscape = 1)
-    val dist = merges(t)
+    val dist = BpeDistributedReference.merges(spark, dir, t)
     val local = new Bpe(t).trainLocalMerges(spark, dir, 10)
     assert(dist == local)
     // paren characters reach the trained vocabulary (the corpus's
@@ -100,7 +100,7 @@ class BpeEscapeSpec extends SparkTestBase {
     val vb = Seq(("(a", 2L), ("*a", 2L))
     val esc = Bpe.localMergeLoop(vb, 1, escape = true)
     assert(esc.head._2 == "*" && esc.head._3 == "a")
-    // …and the distributed trainer agrees on the same corpus
+    // …and the distributed reference agrees on the same corpus
     import spark.implicits._
     val d2 = java.nio.file.Files
       .createTempDirectory("graft-bpe-esc-tie").toString
@@ -108,9 +108,9 @@ class BpeEscapeSpec extends SparkTestBase {
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length($"text").cast("long"))
       .write.parquet(s"$d2/documents.parquet")
-    val dist = new Bpe(Tuning(bpeMerges = 1, bpeEscape = 1))
-      .all.find(_.name == "q82_bpe_train").get.spark(spark, d2)
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    val dist = BpeDistributedReference
+      .merges(spark, d2, Tuning(bpeMerges = 1, bpeEscape = 1))
+      .map(m => (m._2, m._3))
     assert(dist == Seq(("*", "a")))
   }
 

@@ -3,8 +3,9 @@ package graft.operators
 import graft.SparkTestBase
 import graft.config.Tuning
 
-/** The driver-local BPE trainer ([[Bpe.localMergeLoop]]) must be
-  * bit-identical to the distributed oracle-gated trainer on the same
+/** The driver-local BPE trainer ([[Bpe.localMergeLoop]], which every
+  * registered trainer runs) must be bit-identical to the per-round
+  * distributed reference ([[BpeDistributedReference]]) on the same
   * input — rank, pair, merged token, and weighted count, every round —
   * with and without the training-sample knob. Plus hand-sized pins of
   * the two semantics that make or break equivalence: left-to-right
@@ -14,12 +15,8 @@ import graft.config.Tuning
 class BpeLocalSpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
 
-  private def distMerges(t: Tuning): Seq[(Long, String, String, String, Long)] = {
-    val q82 = new Bpe(t).all.find(_.name == "q82_bpe_train").get
-    q82.spark(spark, sf).collect().map(r =>
-      (r.getLong(0), r.getString(1), r.getString(2), r.getString(3),
-        r.getLong(4))).toSeq
-  }
+  private def distMerges(t: Tuning): Seq[(Long, String, String, String, Long)] =
+    BpeDistributedReference.merges(spark, sf, t)
 
   test("local ≡ distributed on the full corpus") {
     val t = Tuning(bpeMerges = 12)
@@ -54,7 +51,7 @@ class BpeLocalSpec extends SparkTestBase {
   }
 
   test("non-BMP words split by code point, not UTF-16 unit") {
-    // U+1F600 is a surrogate pair in UTF-16; the distributed trainer's
+    // U+1F600 is a surrogate pair in UTF-16; the engines' segmentation
     // regex '(.)' matches the code point, so the local loop must learn
     // the (emoji, emoji) pair — toCharArray would shear it into four
     // lone surrogates and learn surrogate pairs instead

@@ -83,17 +83,46 @@ class BpeSpec extends SparkTestBase {
 
   test("bounded training still yields a coherent oracle-shaped trajectory") {
     // the floor+cap registry trains fewer/different merges but the
-    // same structural invariants hold, and the distributed trainer
+    // same structural invariants hold, and the distributed reference
     // stays bit-identical to the local loop on the SAME bounded vocab
     val t = Tuning(bpeMerges = 8, bpeMinFreq = 2, bpeVocabCap = 12)
-    val rows = q(t, "q82_bpe_train").collect()
+    val rows = BpeDistributedReference.merges(spark, sf, t)
     assert(rows.nonEmpty)
-    rows.foreach(r => assert(r.getString(3) == r.getString(1) + r.getString(2)))
+    rows.foreach(r => assert(r._4 == r._2 + r._3))
     import spark.implicits._
     val vb = new Bpe(t).trainingVocab(spark, sf)
       .select($"w", $"freq").as[(String, Long)].collect().toSeq
     val local = Bpe.localMergeLoop(vb, 8)
-    assert(rows.map(r => (r.getLong(0), r.getString(1), r.getString(2),
-      r.getString(3), r.getLong(4))).toSeq == local)
+    assert(rows == local)
+    // and q82 serves exactly that table under the bounded registry
+    assert(q(t, "q82_bpe_train").collect().map(r => (r.getLong(0),
+      r.getString(1), r.getString(2), r.getString(3), r.getLong(4))).toSeq
+      == local)
+  }
+
+  test("q82 runs a fixed number of Spark jobs, whatever the round count") {
+    // training collects the vocabulary once and merges on the driver:
+    // building and collecting q82 costs the same jobs at 8 rounds as at
+    // 40, where a per-round loop would add jobs with every round
+    def jobs(t: Tuning): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          n.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.ListenerDrain(sc)
+      sc.addSparkListener(l)
+      try {
+        val rows = q(t, "q82_bpe_train").collect()
+        assert(rows.length == t.bpeMerges)
+        org.apache.spark.ListenerDrain(sc)
+        n.get()
+      } finally sc.removeSparkListener(l)
+    }
+    val (j8, j40) = (jobs(Tuning(bpeMerges = 8)), jobs(Tuning(bpeMerges = 40)))
+    assert(j8 == j40, s"jobs grow with rounds: $j8 at 8, $j40 at 40")
+    assert(j40 <= 5, s"q82 ran $j40 jobs")
   }
 }

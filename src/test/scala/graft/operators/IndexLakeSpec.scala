@@ -171,4 +171,31 @@ class IndexLakeSpec extends SparkTestBase {
       }
     }
   }
+
+  test("q48 drops a stored code whose centroid the codebook lost (stale index)") {
+    withTempRoot {
+      import spark.implicits._
+      val s1 = new Similarity(knobs)
+      def q48(sim: Similarity) =
+        sim.all.find(_.name == "q48_pq_adc_topk").get.spark(spark, sf)
+          .select($"q_id", $"n_id").as[(Long, Long)].collect()
+      val fresh = q48(s1)
+      val victim = fresh.head._2
+      // stale the stored codes in place: every code row of the victim
+      // names a centroid absent from the stored codebook
+      val p = s"${s1.indexPath(sf)}/pq_codes"
+      val codes = spark.read.parquet(p).select($"n_id", $"sub", $"cent")
+        .as[(Long, Int, Long)].collect()
+      assert(codes.exists(_._1 == victim))
+      codes.toSeq.map { case (n, sb, c) => (n, sb, if (n == victim) -1L else c) }
+        .toDF("n_id", "sub", "cent").coalesce(1)
+        .write.mode("overwrite").parquet(p)
+      // a fresh registry serves the stale artifact without a crash, and
+      // the vector with no known code is no longer ranked
+      val stale = q48(new Similarity(knobs))
+      assert(stale.nonEmpty)
+      assert(!stale.exists(_._2 == victim), "a stale code row was ranked")
+      assert(stale.map(_._1).toSet == fresh.map(_._1).toSet)
+    }
+  }
 }
