@@ -1228,29 +1228,32 @@ final class Bpe(val tuning: Tuning) extends Serializable {
   }
 
   // ------------------------------------------------------------------
-  // SHARD-LAKE DML: the vector store's segment recipe applied to the
-  // training-shard lake, so a daily-growing corpus appends instead of
-  // re-paying the full pack. New documents are encoded with the
-  // FROZEN tokenizer (the stored merges + id table — never retrained)
-  // and installed as a content-keyed `deltas/add-<key>` segment; the
-  // read faces below serve base ∪ segments. The REGISTERED queries
+  // SHARD-LAKE DML: the gen+adds store lifecycle ([[ArtifactLake]])
+  // applied to the training-shard lake, so a daily-growing corpus
+  // appends instead of re-paying the full pack. New documents are
+  // encoded with the FROZEN tokenizer (the stored merges + id table —
+  // never retrained) and installed as a content-keyed
+  // `deltas/add-<key>` segment; the read faces below serve
+  // base ∪ segments. The REGISTERED queries
   // (q87/q90) read `data/` only — base-only by design (the q43
   // pattern), so the oracle-pinned bytes never move under DML.
   // ------------------------------------------------------------------
 
   /** Append a batch of NEW documents (`doc_id` castable to LONG,
-    * `text` STRING) to the installed shard lake as one delta segment.
-    * Returns true iff THIS call installed it.
+    * `text` STRING) to the installed shard lake as one delta segment,
+    * through the shared [[ArtifactLake.dmlAdd]] recipe. Returns true
+    * iff THIS call installed it.
     *
-    * Contract (the [[Similarity.addVectors]] recipe):
+    * Contract:
     *  - CONTENT KEY: one aggregate pass derives an order-independent
     *    128-bit key over (doc_id, text); a replay of the same batch —
     *    Structured Streaming's at-least-once re-run, a retried job —
-    *    finds the installed segment and no-ops. At-least-once replay ×
-    *    idempotent install = effectively-once ingest.
+    *    finds the installed (or folded) segment and no-ops. At-least-
+    *    once replay × idempotent install = effectively-once ingest.
     *  - ID GUARD: a DIFFERENT batch claiming doc_ids already in the
-    *    lake (base or any segment) fails loudly; the [lo, hi] batch
-    *    envelope makes the conflict scan parquet-stats-prunable.
+    *    lake (base or any segment, each layer's `data` table) fails
+    *    loudly; the [lo, hi] batch envelope makes the conflict scan
+    *    parquet-stats-prunable.
     *  - FROZEN ENCODE: sequences come from [[serveTokenize]] — subword
     *    tokens the corpus never produced map to UNK (-1), exactly as
     *    ad-hoc serving does, so stored segment bytes ≡ a from-scratch
@@ -1260,55 +1263,15 @@ final class Bpe(val tuning: Tuning) extends Serializable {
     */
   def addShardDocs(s: SparkSession, d: String, docs: DataFrame,
       curated: Boolean = false): Boolean = synchronized {
-    import s.implicits._
     val p = if (curated) ensureCuratedShards(s, d) else ensureShards(s, d)
-    val norm = docs.selectExpr(
-        "cast(doc_id as bigint) as doc_id", "cast(text as string) as text")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // NULL text hashes through an explicit is-null flag (a bare
-      // coalesce sentinel would collide a NULL with a real text equal
-      // to the sentinel string)
-      val st = norm.selectExpr(
-        "count(1) as cnt", "count(distinct doc_id) as dcnt",
-        "min(doc_id) as lo", "max(doc_id) as hi",
-        "bit_xor(xxhash64(doc_id, isnull(text), coalesce(text, ''))) as h1",
-        "bit_xor(xxhash64(coalesce(text, ''), isnull(text), doc_id)) as h2").head()
-      val cnt = st.getAs[Long]("cnt")
-      if (cnt == 0L) return false
-      require(st.getAs[Long]("dcnt") == cnt,
-        "addShardDocs: duplicate doc_id within the batch")
-      val key = f"${st.getAs[Long]("h1")}%016x${st.getAs[Long]("h2")}%016x"
-      val target = new java.io.File(s"$p/deltas/add-$key")
-      // the retry no-op precedes the id guard: a re-sent batch carries
-      // already-indexed ids by definition. Consumed names are checked
-      // FIRST — a vacuumed segment's bytes live on in its generation,
-      // so its replay must still no-op after the dir is gone
-      if (shardView(p).consumed.contains(s"add-$key")) return false
-      if (new java.io.File(target, "_SUCCESS").isFile) return false
-      val (lo, hi) = (st.getAs[Long]("lo"), st.getAs[Long]("hi"))
-      val taken = shardDocSeqs(s, d, curated)
-        .select($"doc_id").filter($"doc_id".between(lo, hi))
-      val idsDf = norm.select($"doc_id")
-      val probe = if (cnt <= 1000000L) broadcast(idsDf) else idsDf
-      val dup = taken.join(probe, "doc_id").select($"doc_id").distinct()
-        .orderBy($"doc_id").limit(8).as[Long].collect()
-      require(dup.isEmpty,
-        s"addShardDocs: doc ids already in the lake: ${dup.mkString(", ")}")
-      val enc = serveTokenize(s, d,
-        norm.select($"doc_id".as("id"), $"text"), curated)
-      val nFiles = math.min(64L, math.max(1L, (cnt + 65535L) / 65536L)).toInt
-      val installed = ArtifactLake.ensure(target) { staging =>
-        enc.select($"id".as("doc_id"), $"n_tokens", $"token_ids")
+    ArtifactLake.dmlAdd(s, p, docs, "addShardDocs",
+      tuning.storeMaxSegments, Bpe.shardAdds, idTable = "data")(
+      (norm, root, nFiles) =>
+        serveTokenize(s, d, norm.select(col("doc_id").as("id"), col("text")), curated)
+          .select(col("id").as("doc_id"), col("n_tokens"), col("token_ids"))
           .repartition(nFiles)
-          .write.mode("overwrite").parquet(s"${staging.getAbsolutePath}/data")
-      }
-      if (installed) {
-        Bpe.shardAdds.incrementAndGet()
-        maybeCompactShards(s, d, curated)
-      }
-      installed
-    } finally norm.unpersist()
+          .write.mode("overwrite").parquet(s"$root/data"))(
+      () => { compactShards(s, d, curated); () })
   }
 
   /** Continuous document ingest — [[addShardDocs]] attached to any
@@ -1341,126 +1304,43 @@ final class Bpe(val tuning: Tuning) extends Serializable {
       curated: Boolean = false): DataFrame = {
     import s.implicits._
     val p = if (curated) ensureCuratedShards(s, d) else ensureShards(s, d)
-    val v = shardView(p)
     val base = s.read.parquet(s"$p/data")
       .select($"doc_id", $"n_tokens", $"token_ids")
-    (v.gen.toSeq ++ v.adds).foldLeft(base)((acc, f) =>
+    ArtifactLake.deltaView(p).overlays.foldLeft(base)((acc, f) =>
       acc.unionByName(s.read.parquet(s"${f.getAbsolutePath}/data")
         .select($"doc_id", $"n_tokens", $"token_ids")))
   }
 
-  /** One composition snapshot of the DML'd lake: the newest complete
-    * generation (if any), the segment names it subsumes, and the
-    * installed delta segments NOT yet folded — the serve-side union
-    * list, bounded by [[maybeCompactShards]].
-    */
-  private final case class ShardViewState(gen: Option[java.io.File],
-    consumed: Set[String], adds: Seq[java.io.File])
-
-  private def shardView(p: String): ShardViewState = {
-    def complete(dir: java.io.File, prefix: String): Seq[java.io.File] =
-      if (!dir.isDirectory) Seq.empty
-      else dir.listFiles().toSeq
-        .filter(f => f.getName.startsWith(prefix) &&
-          new java.io.File(f, "_SUCCESS").isFile)
-        .sortBy(_.getName)
-    val gen = complete(new java.io.File(s"$p/gens"), "gen-").lastOption
-    val consumed: Set[String] = gen.map { g =>
-      val src = scala.io.Source.fromFile(
-        new java.io.File(g, "consumed.txt"), "UTF-8")
-      try src.getLines().filter(_.nonEmpty).toSet finally src.close()
-    }.getOrElse(Set.empty)
-    val adds = complete(new java.io.File(s"$p/deltas"), "add-")
-      .filterNot(f => consumed.contains(f.getName))
-    ShardViewState(gen, consumed, adds)
-  }
-
-  /** The WAL's bounded-segment pattern ([[Similarity]]'s
-    * `maybeCompact`) applied to the shard lake: after every DML
-    * install, fold once the unconsumed segment count exceeds
-    * [[graft.config.Tuning.storeMaxSegments]], so a daily-growing
-    * corpus's per-serve union list stays bounded without operator
-    * intervention.
-    */
-  private def maybeCompactShards(s: SparkSession, d: String,
-      curated: Boolean): Unit = {
-    val p = if (curated) ensureCuratedShards(s, d) else ensureShards(s, d)
-    if (shardView(p).adds.length > tuning.storeMaxSegments) {
-      compactShards(s, d, curated)
-      ()
-    }
-  }
-
   /** Fold the previous generation and every unconsumed delta segment
-    * into ONE new `gens/gen-NNNNN-<key>` generation — sized to the
-    * DML'd docs, never the corpus (the oracle-pinned base `data/` is
-    * immutable and never re-read by a fold). `consumed.txt` records
-    * the cumulative segment names subsumed; serving unions base ∪
-    * newest gen ∪ unconsumed only. Nothing is deleted (a reader
-    * racing the fold serves either view, identical by construction);
-    * [[vacuumShards]] is the explicit maintenance-window deletion.
-    * Returns true iff THIS call installed a generation.
+    * into ONE new generation ([[ArtifactLake.compactStore]]) — sized to
+    * the DML'd docs, never the corpus (the oracle-pinned base `data/`
+    * is immutable and never re-read by a fold). Runs automatically once
+    * the unconsumed segments exceed
+    * [[graft.config.Tuning.storeMaxSegments]]. Returns true iff THIS
+    * call installed a generation.
     */
   def compactShards(s: SparkSession, d: String,
       curated: Boolean = false): Boolean = synchronized {
     import s.implicits._
     val p = if (curated) ensureCuratedShards(s, d) else ensureShards(s, d)
-    val v = shardView(p)
-    if (v.adds.isEmpty) return false
-    val consumed = (v.consumed ++ v.adds.map(_.getName)).toSeq.sorted
-    val seq = v.gen.map(_.getName.drop(4).takeWhile(_ != '-').toInt)
-      .getOrElse(0) + 1
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(consumed.mkString("|").getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val target = new java.io.File(f"$p/gens/gen-$seq%05d-$key")
-    if (new java.io.File(target, "_SUCCESS").isFile) return false
-    val parts = (v.gen.toSeq ++ v.adds).map(f => s"${f.getAbsolutePath}/data")
-    val folded = s.read.parquet(parts: _*)
-      .select($"doc_id", $"n_tokens", $"token_ids")
-    val installed = ArtifactLake.ensure(target) { staging =>
-      folded.write.mode("overwrite")
-        .parquet(s"${staging.getAbsolutePath}/data")
-      val w = new java.io.OutputStreamWriter(
-        new java.io.FileOutputStream(
-          new java.io.File(staging, "consumed.txt")), "UTF-8")
-      try consumed.foreach(n => { w.write(n); w.write('\n') })
-      finally w.close()
+    val installed = ArtifactLake.compactStore(p) { (v, out) =>
+      s.read.parquet(v.overlays.map(f => s"${f.getAbsolutePath}/data"): _*)
+        .select($"doc_id", $"n_tokens", $"token_ids")
+        .write.mode("overwrite").parquet(s"$out/data")
     }
     if (installed) Bpe.shardCompactions.incrementAndGet()
     installed
   }
 
-  /** Delete delta segments a generation has subsumed, AND every
-    * generation older than the newest complete one — explicit
-    * maintenance-window space reclamation (folding itself deletes
-    * nothing). A vacuumed batch's at-least-once replay still no-ops:
-    * its name lives in `consumed.txt`, which [[addShardDocs]] checks
-    * before the on-disk marker. Superseded generations are safe to
-    * drop under the same guarantee: each fold's `consumed.txt` is
-    * CUMULATIVE and its data subsumes the previous generation's, so
-    * the newest complete generation carries everything an older one
-    * did. Returns the number of dirs removed.
+  /** Maintenance-window reclamation ([[ArtifactLake.vacuumStore]]):
+    * folded segments and superseded generations. A vacuumed batch's
+    * replay still no-ops — its name lives on in the newest
+    * generation's cumulative `consumed.txt`. Returns dirs removed.
     */
   def vacuumShards(s: SparkSession, d: String,
       curated: Boolean = false): Int = synchronized {
-    val p = if (curated) ensureCuratedShards(s, d) else ensureShards(s, d)
-    val v = shardView(p)
-    val deltas = new java.io.File(s"$p/deltas")
-    val deadSegs =
-      if (!deltas.isDirectory) Seq.empty[java.io.File]
-      else deltas.listFiles().toSeq
-        .filter(f => v.consumed.contains(f.getName))
-    val deadGens = v.gen match {
-      case None => Seq.empty[java.io.File]
-      case Some(g) =>
-        Option(new java.io.File(s"$p/gens").listFiles()).toSeq.flatten
-          .filter(f => f.getName.startsWith("gen-") &&
-            f.getName < g.getName)
-    }
-    val dead = deadSegs ++ deadGens
-    dead.foreach(ArtifactLake.deleteTree)
-    dead.length
+    ArtifactLake.vacuumStore(
+      if (curated) ensureCuratedShards(s, d) else ensureShards(s, d))
   }
 
   /** Decode `(doc_id, token_ids)` sequences back to subword tokens

@@ -760,101 +760,15 @@ final class Dedup(val tuning: Tuning) extends Serializable {
   // base table mirrors the corpus parquet the DuckDB oracle replays.
   // ------------------------------------------------------------------
 
-  /** One atomic snapshot of the lake's layered composition — the
-    * rebase-aware generalization of the bare generation pointer every
-    * serve/DML entry resolves ONCE and passes down (the snapshot-
-    * isolation rationale: re-reading per helper would let a racing
-    * compact/rebase yield a MIXED view): `base` = the newest full-
-    * compaction base ([[rebase]]; None = the root corpus-derived
-    * tables), `gen` = the current generation UNLESS the base subsumes
-    * it (its tables are already folded in), `rawGen` = the unfiltered
-    * pointer (sequence numbering and name salting must advance past
-    * subsumed generations too), `consumed` = every delta-segment name
-    * folded into base and/or gen. Any interleaving with a racing
-    * rebase lands on a data-identical composition: a rebase is
-    * content-neutral, and the subsumption filter excludes a folded
-    * generation whenever its base is visible.
-    */
-  private final case class SigView(
-      base: Option[java.io.File],
-      gen: Option[java.io.File],
-      rawGen: Option[java.io.File],
-      consumed: Set[String])
-
-  private def sigView(d: String): SigView = {
-    val p = sigPath(d)
-    val base = ArtifactLake.currentBase(p)
-    val subs = ArtifactLake.subsumedGens(base)
-    val rawGen = ArtifactLake.currentGen(p)
-    val gen = rawGen.filterNot(g => subs.contains(g.getName))
-    SigView(base, gen, rawGen,
-      ArtifactLake.consumedNames(base) ++ ArtifactLake.consumedNames(gen))
-  }
-
-  /** UNCONSUMED add segments under the signature lake — segments the
-    * snapshot's base or generation has folded are excluded.
-    */
-  private def sigDeltaDirs(d: String, v: SigView): Seq[java.io.File] =
-    ArtifactLake.segmentDirs(sigPath(d), "add-")
-      .filterNot(f => v.consumed.contains(f.getName))
-
-  /** All LIVE tombstoned ids as one `doc_id` column — the snapshot
-    * generation's carried-forward tombstones plus the tombstone
-    * segments neither base nor generation consumed; None when neither
-    * exists (spares serving the anti-join). A rebase base carries no
-    * tombstones by construction (the fold applies them physically).
-    */
-  private def sigTombstonedIds(s: SparkSession, d: String,
-      v: SigView): Option[DataFrame] = {
-    val genTs = ArtifactLake.tableIfPresent(v.gen, "tombstones")
-      .map(g => s.read.parquet(g.getAbsolutePath))
-    val segs = ArtifactLake.segmentDirs(sigPath(d), "del-")
-      .filterNot(f => v.consumed.contains(f.getName))
-      .map(dir => s.read.parquet(s"${dir.getAbsolutePath}/ids"))
-    (genTs.toSeq ++ segs) match {
-      case Seq() => None
-      case all => Some(all.reduce(_ unionByName _))
-    }
-  }
-
-  /** `bottom layer ∪ snapshot generation's fold ∪ unconsumed segments`
-    * for one lake table — the shared union shape behind every live
-    * view. `baseReplacesRoot` selects the bottom layer's semantics
-    * when a rebase base exists: the derived tables (bands/sig) are
-    * fully folded into the base, which therefore REPLACES the root
-    * scan; the docs chain's root is the external corpus parquet, which
-    * a base only ever EXTENDS (its docs table holds DML-added text —
-    * the corpus text is never copied).
-    */
-  private def withSigDeltas(s: SparkSession, d: String, v: SigView,
-      root: DataFrame, table: String, baseReplacesRoot: Boolean): DataFrame = {
-    val baseTable = v.base.flatMap(b => ArtifactLake.tableIfPresent(Some(b), table))
-    val b0 = (baseTable, v.base) match {
-      case (Some(bt), _) if baseReplacesRoot => s.read.parquet(bt.getAbsolutePath)
-      case (None, Some(_)) if baseReplacesRoot =>
-        // base installed but this fold was EMPTY (everything
-        // tombstoned): an absent table means zero rows, not "fall
-        // back to the root scan" — that would resurrect the store
-        root.limit(0)
-      case (Some(bt), _) => root.unionByName(s.read.parquet(bt.getAbsolutePath))
-      case _ => root
-    }
-    val b1 = ArtifactLake.tableIfPresent(v.gen, table)
-      .fold(b0)(g => b0.unionByName(s.read.parquet(g.getAbsolutePath)))
-    sigDeltaDirs(d, v).foldLeft(b1)((acc, dir) =>
-      acc.unionByName(s.read.parquet(s"${dir.getAbsolutePath}/$table")))
-  }
-
   /** The LIVE band table: (base or root) ∪ gen ∪ unconsumed add
     * segments, minus tombstoned documents. Bucket sizes (the
     * serve-side cap) count live members only.
     */
-  private def liveBands(s: SparkSession, d: String, v: SigView): DataFrame = {
-    val all = withSigDeltas(s, d, v,
-      s.read.parquet(s"${sigPath(d)}/bands"), "bands", baseReplacesRoot = true)
-    sigTombstonedIds(s, d, v).fold(all)(ts =>
-      all.join(broadcast(ts), Seq("doc_id"), "left_anti"))
-  }
+  private def liveBands(s: SparkSession, d: String,
+      v: ArtifactLake.DeltaView): DataFrame =
+    ArtifactLake.minusTombstones(ArtifactLake.withLayers(s, v,
+        s.read.parquet(s"${sigPath(d)}/bands"), "bands", baseReplacesRoot = true),
+      ArtifactLake.liveTombstones(s, v), "doc_id")
 
   /** The LIVE bucket-size ledger, summed across layers — the serve
     * paths' over-cap input, NEVER a bands aggregate: the bottom layer
@@ -867,22 +781,11 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     * DedupLakeSpec's ledger test).
     */
   private def liveBandStats(s: SparkSession, d: String,
-      v: SigView): Option[DataFrame] = {
-    val p = sigPath(d)
-    def read(f: java.io.File): Option[DataFrame] =
-      if (ArtifactLake.hasParquet(f)) Some(s.read.parquet(f.getAbsolutePath))
-      else None
-    val bottom = v.base match {
-      case Some(b) => read(new java.io.File(b, "band_stats"))
-      case None => read(new java.io.File(s"$p/band_stats"))
-    }
-    val segs = (sigDeltaDirs(d, v) ++
-        ArtifactLake.segmentDirs(p, "del-")
-          .filterNot(f => v.consumed.contains(f.getName)))
-      .flatMap(dir => read(new java.io.File(dir, "band_stats")))
-    val layers = bottom.toSeq ++
-      ArtifactLake.tableIfPresent(v.gen, "band_stats")
-        .map(g => s.read.parquet(g.getAbsolutePath)).toSeq ++ segs
+      v: ArtifactLake.DeltaView): Option[DataFrame] = {
+    val layers = (v.base.map(_.getAbsolutePath).getOrElse(sigPath(d)) +:
+      (v.overlays ++ v.dels).map(_.getAbsolutePath))
+      .map(r => new java.io.File(r, "band_stats")).filter(ArtifactLake.hasParquet)
+      .map(f => s.read.parquet(f.getAbsolutePath))
     layers match {
       case Seq() => None
       case Seq(one) => Some(one)
@@ -900,7 +803,7 @@ final class Dedup(val tuning: Tuning) extends Serializable {
       : (Map[String, Long], Map[String, Long]) = {
     import s.implicits._
     ensureSigIndex(s, d)
-    val v = sigView(d)
+    val v = ArtifactLake.deltaView(sigPath(d))
     val ledger = liveBandStats(s, d, v)
       .map(_.filter(col("cnt") =!= 0L).select(col("band_key"), col("cnt"))
         .as[(String, Long)].collect().toMap)
@@ -913,12 +816,11 @@ final class Dedup(val tuning: Tuning) extends Serializable {
 
   /** The LIVE simhash table: (base or root) ∪ gen ∪ add segments,
     * minus tombstones. */
-  private def liveSigs(s: SparkSession, d: String, v: SigView): DataFrame = {
-    val all = withSigDeltas(s, d, v,
-      s.read.parquet(s"${sigPath(d)}/sig"), "sig", baseReplacesRoot = true)
-    sigTombstonedIds(s, d, v).fold(all)(ts =>
-      all.join(broadcast(ts), Seq("doc_id"), "left_anti"))
-  }
+  private def liveSigs(s: SparkSession, d: String,
+      v: ArtifactLake.DeltaView): DataFrame =
+    ArtifactLake.minusTombstones(ArtifactLake.withLayers(s, v,
+        s.read.parquet(s"${sigPath(d)}/sig"), "sig", baseReplacesRoot = true),
+      ArtifactLake.liveTombstones(s, v), "doc_id")
 
   /** `(doc_id, text)` for candidate verify: the corpus table ∪ the
     * base's and generation's folded batch text ∪ each unconsumed add
@@ -926,9 +828,10 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     * corpus parquet — the segment carries it, the way the vector
     * store's segments carry raw floats for exact refine).
     */
-  private def liveDocs(s: SparkSession, d: String, v: SigView): DataFrame = {
+  private def liveDocs(s: SparkSession, d: String,
+      v: ArtifactLake.DeltaView): DataFrame = {
     import s.implicits._
-    withSigDeltas(s, d, v,
+    ArtifactLake.withLayers(s, v,
       t(s, d, "documents").select($"doc_id", $"text"), "docs",
       baseReplacesRoot = false)
   }
@@ -1004,7 +907,7 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     // ONE composition snapshot for the whole serve (bands,
     // tombstones, and verify text all composed against the same view —
     // a racing compact/rebase cannot yield a mixed view)
-    val v = sigView(d)
+    val v = ArtifactLake.deltaView(sigPath(d))
     val bposts = shinglePostingsOf(batch).cache()
     val bbands = bandedKeys(bposts)
     val corpus = liveBands(s, d, v)
@@ -1098,7 +1001,7 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     import s.implicits._
     ensureSigIndex(s, d)
     // one composition snapshot per serve ([[serveNearDups]])
-    val v = sigView(d)
+    val v = ArtifactLake.deltaView(sigPath(d))
     val bsig = simhashSigOf(batch.toDF("doc_id", "text"))
       .select($"doc_id".as("probe_id"), $"simhash")
     bsig.join(
@@ -1146,7 +1049,7 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     */
   def liveSignatures(s: SparkSession, d: String): DataFrame = {
     ensureSigIndex(s, d)
-    liveSigs(s, d, sigView(d))
+    liveSigs(s, d, ArtifactLake.deltaView(sigPath(d)))
   }
 
   /** Register [[liveSignatures]] as a session temp view (default
@@ -1177,8 +1080,8 @@ final class Dedup(val tuning: Tuning) extends Serializable {
       $simhashSqlDuck
       SELECT doc_id, simhash FROM sh ORDER BY doc_id"""))
 
-  /** One-row operational profile of the dedup lake —
-    * [[Similarity.storeStats]]'s twin: generation, segment counts, and
+  /** One-row operational profile of the dedup lake, in the columns of
+    * [[Similarity.storeStats]]: generation, segment counts, and
     * per-layer `sig`-row volumes (base build, generation fold,
     * unconsumed add segments, live tombstones), all from footers and
     * listings — zero executor scans, pollable at any corpus size, and
@@ -1200,14 +1103,11 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     // stance, applied to the dedup side too); an unbuilt lake reports
     // generation −1, zero segments, zero base rows
     val p = sigPath(d)
-    val v = sigView(d)
+    val v = ArtifactLake.deltaView(p)
     // post-rebase the generation pointer reads as RESET (−1): the base
     // subsumed it, and the new epoch's first compact starts a new one
     val genSeq = v.gen.map(_.getName.split('-')(1).toLong).getOrElse(-1L)
     val baseEpoch = v.base.map(_.getName.split('-')(1).toLong).getOrElse(0L)
-    val adds = sigDeltaDirs(d, v)
-    val dels = ArtifactLake.segmentDirs(p, "del-")
-      .filterNot(f => v.consumed.contains(f.getName))
     def cnt(path: String): Long = Tables.layerCount(s, path)
     val baseRows = v.base match {
       case Some(b) => ArtifactLake.tableIfPresent(Some(b), "sig")
@@ -1216,12 +1116,12 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     }
     val genRows = ArtifactLake.tableIfPresent(v.gen, "sig")
       .map(f => cnt(f.getAbsolutePath)).getOrElse(0L)
-    val segRows = adds.map(dir => cnt(s"${dir.getAbsolutePath}/sig")).sum
+    val segRows = v.adds.map(dir => cnt(s"${dir.getAbsolutePath}/sig")).sum
     val tsRows = ArtifactLake.tableIfPresent(v.gen, "tombstones")
       .map(f => cnt(f.getAbsolutePath)).getOrElse(0L) +
-      dels.map(dir => cnt(s"${dir.getAbsolutePath}/ids")).sum
+      v.dels.map(dir => cnt(s"${dir.getAbsolutePath}/ids")).sum
     Seq((genSeq, baseEpoch, v.consumed.size.toLong,
-      adds.size.toLong, dels.size.toLong,
+      v.adds.size.toLong, v.dels.size.toLong,
       baseRows, genRows, segRows, tsRows,
       baseRows + genRows + segRows - tsRows))
       .toDF("generation", "base_epoch", "consumed_segments",
@@ -1282,10 +1182,9 @@ final class Dedup(val tuning: Tuning) extends Serializable {
       // epoch-salt a name a generation already consumed; replay-vs-
       // genuine-re-add is decided by id liveness below
       // ([[Similarity.addVectors]])
-      val v = sigView(d)
-      val genSeq = v.rawGen.map(_.getName.drop(4).takeWhile(_ != '-').toInt).getOrElse(0)
-      val folded = v.consumed.contains(s"add-$key")
-      val name = if (folded) s"add-g$genSeq-$key" else s"add-$key"
+      val v = ArtifactLake.deltaView(sigPath(d))
+      val name = v.segmentName("add", key)
+      val folded = name != s"add-$key"
       val target = new java.io.File(s"${sigPath(d)}/deltas/$name")
       // retry no-op BEFORE the id guard (an at-least-once re-send carries
       // already-indexed ids by definition — [[Similarity.addVectors]])
@@ -1300,7 +1199,8 @@ final class Dedup(val tuning: Tuning) extends Serializable {
       // yielding duplicate doc_id rows in the lake.
       val takenBase = liveDocs(s, d, v)
         .filter($"doc_id".between(lo, hi)).select($"doc_id")
-      val takenAll = sigTombstonedIds(s, d, v).fold(takenBase)(takenBase.unionByName(_))
+      val takenAll = ArtifactLake.liveTombstones(s, v)
+        .fold(takenBase)(takenBase.unionByName(_))
       val idsDf = norm.select($"doc_id")
       // broadcast only clearly-small batches; beyond ~1M ids a forced
       // broadcast costs real driver heap and risks the broadcast
@@ -1331,27 +1231,10 @@ final class Dedup(val tuning: Tuning) extends Serializable {
       }
       if (installed) {
         Dedup.sigAdds.incrementAndGet()
-        maybeCompactSig(s, d)
+        ArtifactLake.maybeCompact(sigPath(d), tuning.storeMaxSegments)(compact(s, d))
       }
       installed
     } finally norm.unpersist()
-  }
-
-  /** The automatic compaction trigger on the signature lake —
-    * [[Similarity]]'s `maybeCompact` twin: after every DML install,
-    * fold a new generation once the unconsumed segment count exceeds
-    * [[graft.config.Tuning.storeMaxSegments]]. Folding deletes nothing
-    * ([[vacuum]] stays the explicit maintenance-window step).
-    */
-  private def maybeCompactSig(s: SparkSession, d: String): Unit = {
-    val v = sigView(d)
-    val n = sigDeltaDirs(d, v).length +
-      ArtifactLake.segmentDirs(sigPath(d), "del-")
-        .count(f => !v.consumed.contains(f.getName))
-    if (n > tuning.storeMaxSegments) {
-      compact(s, d)
-      ()
-    }
   }
 
   /** Retire documents from serving via one immutable, content-keyed
@@ -1387,11 +1270,9 @@ final class Dedup(val tuning: Tuning) extends Serializable {
       val key = f"${st.getAs[Long]("h1")}%016x${st.getAs[Long]("h2")}%016x"
       // epoch-salt when a generation consumed this tombstone: an id
       // re-added after its compact must be removable again
-      val v = sigView(d)
-      val genSeq = v.rawGen.map(_.getName.drop(4).takeWhile(_ != '-').toInt).getOrElse(0)
-      val name = if (v.consumed.contains(s"del-$key"))
-        s"del-g$genSeq-$key" else s"del-$key"
-      val target = new java.io.File(s"${sigPath(d)}/deltas/$name")
+      val v = ArtifactLake.deltaView(sigPath(d))
+      val target = new java.io.File(
+        s"${sigPath(d)}/deltas/${v.segmentName("del", key)}")
       if (new java.io.File(target, "_SUCCESS").isFile) return false
       val nFiles = math.min(64L, math.max(1L, (cnt + 65535L) / 65536L)).toInt
       val installed = ArtifactLake.ensure(target) { staging =>
@@ -1414,81 +1295,40 @@ final class Dedup(val tuning: Tuning) extends Serializable {
       }
       if (installed) {
         Dedup.sigRemoves.incrementAndGet()
-        maybeCompactSig(s, d)
+        ArtifactLake.maybeCompact(sigPath(d), tuning.storeMaxSegments)(compact(s, d))
       }
       installed
     } finally norm.unpersist()
   }
 
   /** Fold every unconsumed add segment and tombstone into ONE new
-    * generation under the signature lake — [[Similarity.compact]]'s
-    * twin, sized to the deltas, not the corpus: merged `bands` /
-    * `docs` / `sig` with live-tombstoned rows physically dropped;
-    * carried-forward `tombstones` = only ids still shadowing a BASE
-    * row (the base tables mirror the corpus parquet and stay
-    * oracle-pinned), so an id whose only rows lived in a folded
-    * segment is re-addable afterwards; `consumed.txt` = the cumulative
-    * folded-segment names. Nothing is deleted ([[vacuum]] is the
-    * separate maintenance-window step), so racing readers serve either
-    * view — identical by construction. Returns true iff a new
-    * generation was installed.
+    * generation under the signature lake ([[ArtifactLake.compactStore]]),
+    * sized to the deltas, not the corpus: merged `bands` / `docs` /
+    * `sig` with live-tombstoned rows physically dropped; carried-forward
+    * `tombstones` = only ids still shadowing a BASE row (the base
+    * tables mirror the corpus parquet and stay oracle-pinned), so an id
+    * whose only rows lived in a folded segment is re-addable afterwards.
+    * Nothing is deleted ([[vacuum]] is the separate maintenance-window
+    * step), so racing readers serve either view — identical by
+    * construction. Returns true iff a new generation was installed.
     */
   def compact(s: SparkSession, d: String): Boolean = synchronized {
     import s.implicits._
     ensureSigIndex(s, d)
-    // one composition snapshot drives the segment listing AND the
-    // fold inputs; sequence numbering advances past a SUBSUMED
-    // generation too (rawGen) so names stay unique across a rebase
-    val v = sigView(d)
-    val c0 = v.consumed
-    val adds = sigDeltaDirs(d, v)
-    val dels = ArtifactLake.segmentDirs(sigPath(d), "del-")
-      .filterNot(f => c0.contains(f.getName))
-    if (adds.isEmpty && dels.isEmpty) return false
-    val consumed = (c0 ++ adds.map(_.getName) ++ dels.map(_.getName))
-      .toSeq.sorted
-    val seq = v.rawGen.map(_.getName.drop(4).takeWhile(_ != '-').toInt)
-      .getOrElse(0) + 1
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(consumed.mkString("|").getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val target = new java.io.File(f"${sigPath(d)}/gens/gen-$seq%05d-$key")
-    if (new java.io.File(target, "_SUCCESS").isFile) return false
-
-    val ts = sigTombstonedIds(s, d, v)
-    def foldOf(table: String): Option[DataFrame] = {
-      val parts =
-        ArtifactLake.tableIfPresent(v.gen, table)
-          .map(g => s.read.parquet(g.getAbsolutePath)).toSeq ++
-        adds.map(dir => s.read.parquet(s"${dir.getAbsolutePath}/$table"))
-      parts.reduceOption(_ unionByName _)
-    }
-    def minusTs(df: DataFrame): DataFrame =
-      ts.fold(df)(t => df.join(broadcast(t), Seq("doc_id"), "left_anti"))
-
-    val mergedDocs = foldOf("docs").map(minusTs)
-    val nLive = mergedDocs.map(_.count()).getOrElse(0L)
-    val nFiles = math.min(64L, math.max(1L, (nLive + 65535L) / 65536L)).toInt
-    // carried tombstones: live ts ids still shadowing a base row. The
-    // basis is the corpus documents table itself — the only table that
-    // covers EVERY base document (sig misses zero-token docs, bands
-    // zero-shingle docs; dropping such a doc's tombstone on compact
-    // would let [[addDocs]]'s docs-chain guard free its id wrongly)
-    val basisDocs = v.base
-      .flatMap(b => ArtifactLake.tableIfPresent(Some(b), "docs"))
-      .map(f => s.read.parquet(f.getAbsolutePath).select($"doc_id"))
-      .foldLeft(t(s, d, "documents").select($"doc_id"))(_ unionByName _)
-    val carried = ts.map(_.join(basisDocs, Seq("doc_id"), "left_semi")
-      .distinct())
-
-    val installed = ArtifactLake.ensure(target) { staging =>
-      val out = staging.getAbsolutePath
+    val installed = ArtifactLake.compactStore(sigPath(d)) { (v, out) =>
+      val ts = ArtifactLake.liveTombstones(s, v)
+      def foldOf(table: String): Option[DataFrame] =
+        ArtifactLake.layerUnion(s, v.overlays.map(_.getAbsolutePath), table)
+          .map(ArtifactLake.minusTombstones(_, ts, "doc_id"))
+      val mergedDocs = foldOf("docs")
+      val nLive = mergedDocs.map(_.count()).getOrElse(0L)
+      val nFiles = math.min(64L, math.max(1L, (nLive + 65535L) / 65536L)).toInt
       if (nLive > 0) {
         mergedDocs.foreach(
           _.repartition(nFiles).write.mode("overwrite").parquet(s"$out/docs"))
-        foldOf("bands").map(minusTs).foreach(
+        foldOf("bands").foreach(
           _.repartition(nFiles).write.mode("overwrite").parquet(s"$out/bands"))
-        foldOf("sig").map(minusTs).foreach(
+        foldOf("sig").foreach(
           _.repartition(nFiles).write.mode("overwrite").parquet(s"$out/sig"))
       }
       // bucket-ledger fold: ADDITIVE over the consumed layers' partials
@@ -1497,41 +1337,40 @@ final class Dedup(val tuning: Tuning) extends Serializable {
       // across the fold by construction. Written even when nLive = 0 —
       // an all-tombstoned fold still carries the negative entries that
       // cancel the base ledger's rows.
-      val statsParts =
-        ArtifactLake.tableIfPresent(v.gen, "band_stats")
-          .map(g => s.read.parquet(g.getAbsolutePath)).toSeq ++
-        (adds ++ dels).map(dir => new java.io.File(dir, "band_stats"))
-          .filter(ArtifactLake.hasParquet)
-          .map(f => s.read.parquet(f.getAbsolutePath))
-      statsParts.reduceOption(_ unionByName _).foreach(
-        _.groupBy($"band_key").agg(sum($"cnt").as("cnt"))
+      ArtifactLake.layerUnion(s,
+          (v.overlays ++ v.dels).map(_.getAbsolutePath), "band_stats")
+        .foreach(_.groupBy($"band_key").agg(sum($"cnt").as("cnt"))
           .filter($"cnt" =!= 0L)
           .coalesce(1).write.mode("overwrite").parquet(s"$out/band_stats"))
-      carried.foreach { cd =>
-        if (cd.limit(1).count() > 0)
-          cd.repartition(1).write.mode("overwrite").parquet(s"$out/tombstones")
-      }
-      new java.io.File(out).mkdirs()
-      ArtifactLake.writeLines(new java.io.File(out, "consumed.txt"), consumed)
+      // carried tombstones: live ts ids still shadowing a base row. The
+      // basis is the corpus documents table itself — the only table that
+      // covers EVERY base document (sig misses zero-token docs, bands
+      // zero-shingle docs; dropping such a doc's tombstone on compact
+      // would let [[addDocs]]'s docs-chain guard free its id wrongly)
+      val basisDocs = ArtifactLake.tableIfPresent(v.base, "docs")
+        .map(f => s.read.parquet(f.getAbsolutePath).select($"doc_id"))
+        .foldLeft(t(s, d, "documents").select($"doc_id"))(_ unionByName _)
+      ts.map(_.join(basisDocs, Seq("doc_id"), "left_semi").distinct())
+        .foreach { cd =>
+          if (cd.limit(1).count() > 0)
+            cd.repartition(1).write.mode("overwrite").parquet(s"$out/tombstones")
+        }
     }
     if (installed) Dedup.sigCompacts.incrementAndGet()
     installed
   }
 
-  /** FULL compaction into a NEW base — the lifecycle step past
-    * [[compact]]: after heavy churn, a long-lived store's
-    * base ∪ generation ∪ tombstones composition carries dead weight
-    * forever (tombstoned base rows are filtered on every serve; the
-    * generation re-folds on every compact). `rebase` folds the ENTIRE
-    * live view — root-or-base tables ∪ generation ∪ unconsumed
-    * segments, tombstones physically applied — into one immutable
-    * `bases/base-<seq>-<key>` artifact ([[ArtifactLake]] staged
-    * rename, crash-safe, race-losing = success) that serving then
-    * resolves INSTEAD of the root tables, with `gens.txt` marking the
-    * subsumed generation so it can never re-enter a composition.
-    * Nothing is deleted — racing readers keep whichever (data-
-    * identical) view they snapshotted, and [[vacuum]] retires the
-    * subsumed segments AND generations in a maintenance window.
+  /** FULL compaction into a NEW base ([[ArtifactLake.rebaseStore]]) —
+    * the lifecycle step past [[compact]]: after heavy churn, a
+    * long-lived store's base ∪ generation ∪ tombstones composition
+    * carries dead weight forever (tombstoned base rows are filtered on
+    * every serve; the generation re-folds on every compact). `rebase`
+    * folds the ENTIRE live view — root-or-base tables ∪ generation ∪
+    * unconsumed segments, tombstones physically applied — into one
+    * immutable base that serving then resolves INSTEAD of the root
+    * tables. Nothing is deleted — racing readers keep whichever
+    * (data-identical) view they snapshotted, and [[vacuum]] retires the
+    * subsumed segments, generations and bases in a maintenance window.
     *
     * The ROOT tables are untouched: the registered q32/q38/q69 stay
     * base-only against the corpus derivation the DuckDB oracle
@@ -1541,42 +1380,17 @@ final class Dedup(val tuning: Tuning) extends Serializable {
   def rebase(s: SparkSession, d: String): Boolean = synchronized {
     import s.implicits._
     ensureSigIndex(s, d)
-    val v = sigView(d)
-    val adds = sigDeltaDirs(d, v)
-    val dels = ArtifactLake.segmentDirs(sigPath(d), "del-")
-      .filterNot(f => v.consumed.contains(f.getName))
-    // nothing beyond the current bottom layer → nothing to fold
-    if (v.gen.isEmpty && adds.isEmpty && dels.isEmpty) return false
-    val consumed = (v.consumed ++ adds.map(_.getName) ++ dels.map(_.getName))
-      .toSeq.sorted
-    val gens = (ArtifactLake.subsumedGens(v.base) ++
-      v.rawGen.map(_.getName)).toSeq.sorted
-    val seq = v.base.map(_.getName.drop(5).takeWhile(_ != '-').toInt)
-      .getOrElse(0) + 1
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((consumed ++ gens).mkString("|").getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val target = new java.io.File(f"${sigPath(d)}/bases/base-$seq%05d-$key")
-    if (new java.io.File(target, "_SUCCESS").isFile) return false
-
-    // the full folds ARE the live views (tombstones applied): the new
-    // base serves bit-identically by construction
-    val bands = liveBands(s, d, v)
-    val sigs = liveSigs(s, d, v)
-    val ts = sigTombstonedIds(s, d, v)
-    val docsParts =
-      v.base.flatMap(b => ArtifactLake.tableIfPresent(Some(b), "docs"))
-        .map(f => s.read.parquet(f.getAbsolutePath)).toSeq ++
-      ArtifactLake.tableIfPresent(v.gen, "docs")
-        .map(f => s.read.parquet(f.getAbsolutePath)).toSeq ++
-      adds.map(dir => s.read.parquet(s"${dir.getAbsolutePath}/docs"))
-    val docsFold = docsParts.reduceOption(_ unionByName _)
-      .map(df => ts.fold(df)(t => df.join(broadcast(t), Seq("doc_id"), "left_anti")))
-
-    val nLive = sigs.count()
-    val nFiles = math.min(64L, math.max(1L, (nLive + 65535L) / 65536L)).toInt
-    val installed = ArtifactLake.ensure(target) { staging =>
-      val out = staging.getAbsolutePath
+    val installed = ArtifactLake.rebaseStore(sigPath(d)) { (v, out) =>
+      // the full folds ARE the live views (tombstones applied): the new
+      // base serves bit-identically by construction
+      val bands = liveBands(s, d, v)
+      val sigs = liveSigs(s, d, v)
+      val ts = ArtifactLake.liveTombstones(s, v)
+      val docsFold = v.tables("docs").map(f => s.read.parquet(f.getAbsolutePath))
+        .reduceOption(_ unionByName _)
+        .map(ArtifactLake.minusTombstones(_, ts, "doc_id"))
+      val nLive = sigs.count()
+      val nFiles = math.min(64L, math.max(1L, (nLive + 65535L) / 65536L)).toInt
       if (nLive > 0) {
         bands.repartition(nFiles).write.mode("overwrite").parquet(s"$out/bands")
         sigs.repartition(nFiles).write.mode("overwrite").parquet(s"$out/sig")
@@ -1593,30 +1407,17 @@ final class Dedup(val tuning: Tuning) extends Serializable {
         if (df.limit(1).count() > 0)
           df.repartition(nFiles).write.mode("overwrite").parquet(s"$out/docs")
       }
-      new java.io.File(out).mkdirs()
-      ArtifactLake.writeLines(new java.io.File(out, "consumed.txt"), consumed)
-      ArtifactLake.writeLines(new java.io.File(out, "gens.txt"), gens)
     }
     if (installed) Dedup.sigRebases.incrementAndGet()
     installed
   }
 
-  /** Delete the segments the current generation subsumes. MAINTENANCE-
-    * WINDOW ONLY ([[Similarity.vacuum]]'s contract): safe iff no
-    * reader holds the pre-compact view open. Returns dirs removed.
+  /** Delete the segments, generations and bases the newest layers
+    * subsume ([[ArtifactLake.vacuumStore]]). MAINTENANCE-WINDOW ONLY:
+    * safe iff no reader holds an older view open. Returns dirs removed.
     */
   def vacuum(d: String): Int = synchronized {
-    val v = sigView(d)
-    val subsumed = ArtifactLake.subsumedGens(v.base)
-    val victims = ArtifactLake.segmentDirs(sigPath(d), "add-") ++
-      ArtifactLake.segmentDirs(sigPath(d), "del-")
-    val deadSegs = victims.filter(f => v.consumed.contains(f.getName))
-    // a rebase base also subsumes whole generations — same contract
-    val deadGens = Option(new java.io.File(s"${sigPath(d)}/gens").listFiles())
-      .toSeq.flatten.filter(f => subsumed.contains(f.getName))
-    val dead = deadSegs ++ deadGens
-    dead.foreach(ArtifactLake.deleteTree)
-    dead.length
+    ArtifactLake.vacuumStore(sigPath(d))
   }
 
   /** Continuous document ingest into the signature lake — one delta

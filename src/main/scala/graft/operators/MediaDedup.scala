@@ -239,7 +239,8 @@ object MediaDedup {
     */
   def compactDhash(s: SparkSession, d: String): Boolean = synchronized {
     ensureDhash(s, d)
-    val installed = ArtifactLake.compactStore(dhashPath(s, d)) { (roots, out) =>
+    val installed = ArtifactLake.compactStore(dhashPath(s, d)) { (v, out) =>
+      val roots = v.overlays.map(_.getAbsolutePath)
       Seq("sig", "bands", "docs").foreach { t =>
         ArtifactLake.layerUnion(s, roots, t).foreach(
           _.write.mode("overwrite").parquet(s"$out/$t"))

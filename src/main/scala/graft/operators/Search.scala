@@ -395,7 +395,8 @@ final class Search(tuning: Tuning) {
     import s.implicits._
     ensureBm25Index(s, d)
     val p = bm25Path(d)
-    val installed = ArtifactLake.compactStore(p) { (roots, out) =>
+    val installed = ArtifactLake.compactStore(p) { (v, out) =>
+      val roots = v.overlays.map(_.getAbsolutePath)
       ArtifactLake.layerUnion(s, roots, "postings").foreach(
         _.write.mode("overwrite").partitionBy("tkb").parquet(s"$out/postings"))
       ArtifactLake.layerUnion(s, roots, "termdf").foreach(
@@ -949,7 +950,8 @@ final class Search(tuning: Tuning) {
   def compactRunsIndex(s: SparkSession, d: String): Boolean = synchronized {
     import s.implicits._
     ensureRunsIndex(s, d)
-    val installed = ArtifactLake.compactStore(runsPath(d)) { (roots, out) =>
+    val installed = ArtifactLake.compactStore(runsPath(d)) { (v, out) =>
+      val roots = v.overlays.map(_.getAbsolutePath)
       ArtifactLake.layerUnion(s, roots, "postings").foreach(
         _.write.mode("overwrite").partitionBy("hb").parquet(s"$out/postings"))
       ArtifactLake.layerUnion(s, roots, "df").foreach(

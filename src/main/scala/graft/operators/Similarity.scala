@@ -1694,17 +1694,16 @@ final class Similarity(val tuning: Tuning) extends Serializable {
     // composed against the same view, so a compact/rebase installing
     // mid-plan-construction cannot yield a mixed old-list/new-tombstone
     // view that briefly serves a retired vector
-    val v = idxView(d)
+    val v = ArtifactLake.deltaView(indexPath(d))
     // base ∪ installed delta segments: added vectors are served the
     // moment their segment's marker lands ([[addVectors]]); tombstoned
     // ids drop out here, upstream of codes and refine ([[removeVectors]])
-    val home0 = withDeltas(s, d, v, probedDF(s, d), "ivf_assign",
-        baseReplacesRoot = true)
-      .filter($"rk" === 1)
-      .select($"vec_id".as("n_id"), $"cell")
-    val home = tombstonedIds(s, d, v).fold(home0)(ts =>
-      home0.join(broadcast(ts.withColumnRenamed("vec_id", "n_id")),
-        Seq("n_id"), "left_anti"))
+    val home = ArtifactLake.minusTombstones(
+      ArtifactLake.withLayers(s, v, probedDF(s, d), "ivf_assign",
+          baseReplacesRoot = true)
+        .filter($"rk" === 1)
+        .select($"vec_id".as("n_id"), $"cell"),
+      ArtifactLake.liveTombstones(s, v), "n_id")
     val cand = home.join(hint(qprobes), "cell")
       .select($"q_id", $"n_id", $"cell")
     // RESIDUAL ADC — the q49 arithmetic. Ad-hoc batches (`dense`
@@ -1713,8 +1712,8 @@ final class Similarity(val tuning: Tuning) extends Serializable {
     // broadcast hash relation ([[DenseLut]]); the bulk overload keeps
     // the plan-side LUT derivation ([[residualLut]]): a million-query
     // batch's LUT is computed distributed, never on the driver.
-    val codesView = withDeltas(s, d, v, resCodesDF(s, d), "pq_res_codes",
-      baseReplacesRoot = true)
+    val codesView = ArtifactLake.withLayers(s, v, resCodesDF(s, d),
+      "pq_res_codes", baseReplacesRoot = true)
     val scored = (dense match {
       case Some(dl) =>
         cand.join(codesView, "n_id")
@@ -1754,14 +1753,8 @@ final class Similarity(val tuning: Tuning) extends Serializable {
         .filter($"embedding".isNotNull)
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("embedding"))
-      val addedVecDirs =
-        v.base.flatMap(b => ArtifactLake.tableIfPresent(Some(b), "vectors"))
-          .map(_.getAbsolutePath).toSeq ++
-        ArtifactLake.tableIfPresent(v.gen, "vectors")
-          .map(_.getAbsolutePath).toSeq ++
-        deltaDirs(d, v).map(dir => s"${dir.getAbsolutePath}/vectors")
-      val emb = addedVecDirs.foldLeft(e0)((acc, p) =>
-        acc.unionByName(s.read.parquet(p).select($"vec_id",
+      val emb = v.tables("vectors").foldLeft(e0)((acc, f) =>
+        acc.unionByName(s.read.parquet(f.getAbsolutePath).select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("embedding"))))
       val pairs = hint(topR)
         .join(emb.withColumnRenamed("vec_id", "n_id"), "n_id")
@@ -1806,17 +1799,11 @@ final class Similarity(val tuning: Tuning) extends Serializable {
     // itself) — so composing from whatever is on disk is already
     // exactly what a post-build search would serve, without forcing
     // the full IVF+PQ build as a side effect of a read
-    val v = idxView(d)
+    val v = ArtifactLake.deltaView(indexPath(d))
     val base = t(s, d, "embeddings").select($"vec_id", $"embedding")
-    val segDirs =
-      v.base.flatMap(b => ArtifactLake.tableIfPresent(Some(b), "vectors"))
-        .map(_.getAbsolutePath).toSeq ++
-      ArtifactLake.tableIfPresent(v.gen, "vectors").map(_.getAbsolutePath).toSeq ++
-      deltaDirs(d, v).map(dir => s"${dir.getAbsolutePath}/vectors")
-    val all = segDirs.foldLeft(base)((acc, p) =>
-      acc.unionByName(s.read.parquet(p).select($"vec_id", $"embedding")))
-    tombstonedIds(s, d, v).fold(all)(ts =>
-      all.join(broadcast(ts), Seq("vec_id"), "left_anti"))
+    val all = v.tables("vectors").foldLeft(base)((acc, f) =>
+      acc.unionByName(s.read.parquet(f.getAbsolutePath).select($"vec_id", $"embedding")))
+    ArtifactLake.minusTombstones(all, ArtifactLake.liveTombstones(s, v), "vec_id")
   }
 
   /** Register [[liveVectors]] as a session temp view (default
@@ -1880,11 +1867,9 @@ final class Similarity(val tuning: Tuning) extends Serializable {
     // no ensureIndex — a monitoring poll must not trigger an index
     // build (see liveVectors); an unbuilt store reports gen −1,
     // zero segments, corpus-sized base
-    val v = idxView(d)
+    val v = ArtifactLake.deltaView(indexPath(d))
     val genSeq = v.gen.map(_.getName.split('-')(1).toLong).getOrElse(-1L)
     val baseEpoch = v.base.map(_.getName.split('-')(1).toLong).getOrElse(0L)
-    val adds = deltaDirs(d, v)
-    val dels = tombstoneDirs(d, v)
     def cnt(path: String): Long = Tables.layerCount(s, path)
     // the corpus parquet stays the bottom layer at every epoch; a
     // rebase base only EXTENDS it with folded DML vectors, and its
@@ -1894,15 +1879,15 @@ final class Similarity(val tuning: Tuning) extends Serializable {
         .map(f => cnt(f.getAbsolutePath)).getOrElse(0L)
     val genRows = ArtifactLake.tableIfPresent(v.gen, "vectors")
       .map(f => cnt(f.getAbsolutePath)).getOrElse(0L)
-    val segRows = adds.map(dir => cnt(s"${dir.getAbsolutePath}/vectors")).sum
+    val segRows = v.adds.map(dir => cnt(s"${dir.getAbsolutePath}/vectors")).sum
     val tsRows =
       v.base.flatMap(b => ArtifactLake.tableIfPresent(Some(b), "tombstones"))
         .map(f => cnt(f.getAbsolutePath)).getOrElse(0L) +
       ArtifactLake.tableIfPresent(v.gen, "tombstones")
         .map(f => cnt(f.getAbsolutePath)).getOrElse(0L) +
-      dels.map(dir => cnt(s"${dir.getAbsolutePath}/ids")).sum
+      v.dels.map(dir => cnt(s"${dir.getAbsolutePath}/ids")).sum
     Seq((genSeq, baseEpoch, v.consumed.size.toLong,
-      adds.size.toLong, dels.size.toLong,
+      v.adds.size.toLong, v.dels.size.toLong,
       baseRows, genRows, segRows, tsRows,
       baseRows + genRows + segRows - tsRows))
       .toDF("generation", "base_epoch", "consumed_segments",
@@ -1933,100 +1918,6 @@ final class Similarity(val tuning: Tuning) extends Serializable {
   // durable fix at corpus scale is folding adds into the next corpus
   // regeneration, which re-keys the index wholesale.
   // ------------------------------------------------------------------
-
-  /** UNCONSUMED installed delta segments under the index — segments a
-    * generation has already folded ([[compact]]) are excluded, so the
-    * per-serve union list resets after a compact. Names are content
-    * keys; segments are id-disjoint by [[addVectors]]' guard.
-    *
-    * `gen` is the caller's ONE snapshot of the generation pointer
-    * ([[ArtifactLake.currentGen]], read once per serve/DML entry):
-    * re-reading it per helper would let a compact installing between
-    * two reads yield a MIXED view — old-gen segment list anti-joined
-    * with new-gen carried tombstones drops segment-only tombstoned
-    * ids, briefly serving a retired row.
-    */
-  private def deltaDirs(d: String, v: IdxView): Seq[java.io.File] =
-    ArtifactLake.segmentDirs(indexPath(d), "add-")
-      .filterNot(f => v.consumed.contains(f.getName))
-
-  /** One atomic snapshot of the index's layered composition —
-    * [[Dedup]]'s SigView twin ([[rebase]]): `base` = the newest full-
-    * compaction base (None = the root index tables), `gen` = the
-    * current generation unless the base subsumes it, `rawGen` = the
-    * unfiltered pointer (sequence numbering / name salting), and
-    * `consumed` = every segment name folded into base and/or gen.
-    */
-  private final case class IdxView(
-      base: Option[java.io.File],
-      gen: Option[java.io.File],
-      rawGen: Option[java.io.File],
-      consumed: Set[String])
-
-  private def idxView(d: String): IdxView = {
-    val p = indexPath(d)
-    val base = ArtifactLake.currentBase(p)
-    val subs = ArtifactLake.subsumedGens(base)
-    val rawGen = ArtifactLake.currentGen(p)
-    val gen = rawGen.filterNot(g => subs.contains(g.getName))
-    IdxView(base, gen, rawGen,
-      ArtifactLake.consumedNames(base) ++ ArtifactLake.consumedNames(gen))
-  }
-
-  /** `bottom layer ∪ the snapshot generation's fold ∪ unconsumed
-    * segments` for one index table. `baseReplacesRoot` picks the
-    * bottom layer when a rebase base exists: the derived tables
-    * (ivf_assign / pq_res_codes) are fully folded into the base, which
-    * REPLACES the root scan; the raw-float `vectors` chain's root is
-    * the external corpus parquet, which a base only EXTENDS.
-    */
-  private def withDeltas(s: SparkSession, d: String, v: IdxView,
-      root: DataFrame, table: String, baseReplacesRoot: Boolean): DataFrame = {
-    val baseTable = v.base.flatMap(b => ArtifactLake.tableIfPresent(Some(b), table))
-    val b0 = (baseTable, v.base) match {
-      case (Some(bt), _) if baseReplacesRoot => s.read.parquet(bt.getAbsolutePath)
-      case (None, Some(_)) if baseReplacesRoot =>
-        // base installed but this fold was EMPTY (everything
-        // tombstoned): absent table = zero rows, never the root scan
-        root.limit(0)
-      case (Some(bt), _) => root.unionByName(s.read.parquet(bt.getAbsolutePath))
-      case _ => root
-    }
-    val b1 = ArtifactLake.tableIfPresent(v.gen, table)
-      .fold(b0)(g => b0.unionByName(s.read.parquet(g.getAbsolutePath)))
-    deltaDirs(d, v).foldLeft(b1)((acc, dir) =>
-      acc.unionByName(s.read.parquet(s"${dir.getAbsolutePath}/$table")))
-  }
-
-  /** UNCONSUMED tombstone segments ([[removeVectors]]) — folded ones
-    * live on only as the generation's (or base's) carried-forward
-    * tombstone table.
-    */
-  private def tombstoneDirs(d: String, v: IdxView): Seq[java.io.File] =
-    ArtifactLake.segmentDirs(indexPath(d), "del-")
-      .filterNot(f => v.consumed.contains(f.getName))
-
-  /** All LIVE tombstoned ids as one column `vec_id` — the base's
-    * corpus-shadowing tombstones (a rebase cannot rewrite the external
-    * corpus parquet, so ids retiring CORPUS rows survive every fold —
-    * unlike the dedup lake, whose membership tables are all
-    * lake-owned), the snapshot generation's carried-forward ones, and
-    * the unconsumed tombstone segments; None when none exist (the
-    * overwhelmingly common case — spares every search the anti-join).
-    */
-  private def tombstonedIds(s: SparkSession, d: String,
-      v: IdxView): Option[DataFrame] = {
-    val baseTs = v.base.flatMap(b => ArtifactLake.tableIfPresent(Some(b), "tombstones"))
-      .map(g => s.read.parquet(g.getAbsolutePath))
-    val genTs = ArtifactLake.tableIfPresent(v.gen, "tombstones")
-      .map(g => s.read.parquet(g.getAbsolutePath))
-    val segs = tombstoneDirs(d, v).map(dir =>
-      s.read.parquet(s"${dir.getAbsolutePath}/ids"))
-    (baseTs.toSeq ++ genTs.toSeq ++ segs) match {
-      case Seq() => None
-      case all => Some(all.reduce(_ unionByName _))
-    }
-  }
 
   /** FAISS-style `add()`: encode a batch of NEW vectors against the
     * FROZEN stored quantizers and install them as one immutable,
@@ -2137,10 +2028,9 @@ final class Similarity(val tuning: Tuning) extends Serializable {
       // plain name on disk, so a post-compact write of this content
       // needs an epoch-salted name; whether that write is a replay
       // no-op or a genuine re-add is decided below by id liveness
-      val v = idxView(d)
-      val genSeq = v.rawGen.map(_.getName.drop(4).takeWhile(_ != '-').toInt).getOrElse(0)
-      val folded = v.consumed.contains(s"add-$key")
-      val name = if (folded) s"add-g$genSeq-$key" else s"add-$key"
+      val v = ArtifactLake.deltaView(indexPath(d))
+      val name = v.segmentName("add", key)
+      val folded = name != s"add-$key"
       val target = new java.io.File(s"${indexPath(d)}/deltas/$name")
 
       // the retry no-op MUST precede the id guard: an at-least-once
@@ -2154,11 +2044,12 @@ final class Similarity(val tuning: Tuning) extends Serializable {
       // assignment scan to NOTHING in the common fresh-ids ingest case.
       // Tombstoned ids count as taken ([[removeVectors]] — retirement
       // is permanent without compaction).
-      val takenBase = withDeltas(s, d, v, probedDF(s, d), "ivf_assign",
-          baseReplacesRoot = true)
+      val takenBase = ArtifactLake.withLayers(s, v, probedDF(s, d),
+          "ivf_assign", baseReplacesRoot = true)
         .filter($"rk" === 1 && $"vec_id".between(lo, hi))
         .select($"vec_id")
-      val takenAll = tombstonedIds(s, d, v).fold(takenBase)(takenBase.unionByName(_))
+      val takenAll = ArtifactLake.liveTombstones(s, v)
+        .fold(takenBase)(takenBase.unionByName(_))
       val idsDf = norm.select($"vec_id")
       // broadcast only clearly-small batches; beyond ~1M ids a forced
       // broadcast costs real driver heap and risks the broadcast
@@ -2216,29 +2107,10 @@ final class Similarity(val tuning: Tuning) extends Serializable {
       }
       if (installed) {
         Similarity.indexAdds.incrementAndGet()
-        maybeCompact(s, d)
+        ArtifactLake.maybeCompact(indexPath(d), tuning.storeMaxSegments)(compact(s, d))
       }
       installed
     } finally norm.unpersist()
-  }
-
-  /** The automatic compaction trigger — the WAL's bounded-segment
-    * pattern (TcpLineSource's `walMaxSegments` fold) applied to the
-    * delta lake: called after every DML install, folds a new
-    * generation once the UNCONSUMED segment count exceeds
-    * [[Tuning.storeMaxSegments]], so a long-lived store's per-serve
-    * union list stays bounded without operator intervention. Runs
-    * under the instance monitor the DML already holds ([[compact]] is
-    * reentrant-synchronized); folding deletes nothing, so concurrent
-    * readers are unaffected ([[vacuum]] stays explicit).
-    */
-  private def maybeCompact(s: SparkSession, d: String): Unit = {
-    val v = idxView(d)
-    if (deltaDirs(d, v).length + tombstoneDirs(d, v).length >
-        tuning.storeMaxSegments) {
-      compact(s, d)
-      ()
-    }
   }
 
   /** FAISS-style `remove_ids()`: retire ids via one immutable,
@@ -2285,11 +2157,9 @@ final class Similarity(val tuning: Tuning) extends Serializable {
       val key = f"${st.getAs[Long]("h1")}%016x${st.getAs[Long]("h2")}%016x"
       // epoch-salt when a generation consumed this id set's tombstone:
       // an id re-added after its compact must be removable again
-      val v = idxView(d)
-      val genSeq = v.rawGen.map(_.getName.drop(4).takeWhile(_ != '-').toInt).getOrElse(0)
-      val name = if (v.consumed.contains(s"del-$key"))
-        s"del-g$genSeq-$key" else s"del-$key"
-      val target = new java.io.File(s"${indexPath(d)}/deltas/$name")
+      val v = ArtifactLake.deltaView(indexPath(d))
+      val target = new java.io.File(
+        s"${indexPath(d)}/deltas/${v.segmentName("del", key)}")
       if (new java.io.File(target, "_SUCCESS").isFile) return false
       val nFiles = math.min(64L, math.max(1L, (cnt + 65535L) / 65536L)).toInt
       val installed = ArtifactLake.ensure(target) { staging =>
@@ -2299,178 +2169,112 @@ final class Similarity(val tuning: Tuning) extends Serializable {
       }
       if (installed) {
         Similarity.indexRemoves.incrementAndGet()
-        maybeCompact(s, d)
+        ArtifactLake.maybeCompact(indexPath(d), tuning.storeMaxSegments)(compact(s, d))
       }
       installed
     } finally norm.unpersist()
   }
 
   /** Fold every unconsumed delta segment and tombstone into ONE new
-    * generation — the lake's answer to FAISS `remove_ids()`'s physical
-    * compaction, sized to the DELTAS, not the corpus:
+    * generation ([[ArtifactLake.compactStore]]) — the lake's answer to
+    * FAISS `remove_ids()`'s physical compaction, sized to the DELTAS,
+    * not the corpus:
     *
     *  - merged `ivf_assign` / `pq_res_codes` / `vectors` = the union of
-    *    the folded add segments' tables with every live-tombstoned row
-    *    physically dropped;
+    *    the previous generation's and the folded add segments' tables
+    *    with every live-tombstoned row physically dropped;
     *  - carried-forward `tombstones` = only the live tombstoned ids
     *    that still shadow a BASE row (the oracle-pinned base tables are
     *    immutable, so retiring a corpus vector must stay a serve-time
     *    anti-join) — a tombstoned id whose only rows lived in a folded
-    *    segment is GONE, and [[addVectors]] accepts it again;
-    *  - `consumed.txt` = the cumulative segment names the generation
-    *    subsumes; serving unions base ∪ gen ∪ unconsumed only.
+    *    segment is GONE, and [[addVectors]] accepts it again.
     *
-    * Install is the staged-rename [[ArtifactLake.ensure]]; nothing is
-    * deleted, so a reader racing the compact serves either view —
-    * both identical by construction ([[vacuum]] is the separate,
-    * maintenance-window deletion). Returns true iff a new generation
-    * was installed (false = nothing unconsumed to fold).
+    * Nothing is deleted, so a reader racing the compact serves either
+    * view — both identical by construction ([[vacuum]] is the
+    * separate, maintenance-window deletion). Returns true iff a new
+    * generation was installed (false = nothing unconsumed to fold).
     */
   def compact(s: SparkSession, d: String): Boolean = synchronized {
     import s.implicits._
     ensureIndex(s, d)
-    // one composition snapshot drives the segment listing AND the
-    // fold inputs; sequence numbering advances past a SUBSUMED
-    // generation too (rawGen) so names stay unique across a rebase
-    val v = idxView(d)
-    val adds = deltaDirs(d, v)
-    val dels = tombstoneDirs(d, v)
-    if (adds.isEmpty && dels.isEmpty) return false
-    val consumed = (v.consumed ++ adds.map(_.getName) ++ dels.map(_.getName))
-      .toSeq.sorted
-    val seq = v.rawGen.map(_.getName.drop(4).takeWhile(_ != '-').toInt)
-      .getOrElse(0) + 1
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(consumed.mkString("|").getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val target = new java.io.File(
-      f"${indexPath(d)}/gens/gen-$seq%05d-$key")
-    if (new java.io.File(target, "_SUCCESS").isFile) return false
-
-    val ts = tombstonedIds(s, d, v)
-    // the fold inputs: the PREVIOUS generation's tables count as one
-    // more segment — a gen chain never re-reads segments twice deep
-    def foldOf(table: String): Option[DataFrame] = {
-      val parts =
-        ArtifactLake.tableIfPresent(v.gen, table)
-          .map(g => s.read.parquet(g.getAbsolutePath)).toSeq ++
-        adds.map(dir => s.read.parquet(s"${dir.getAbsolutePath}/$table"))
-      parts.reduceOption(_ unionByName _)
-    }
-    def minusTs(df: DataFrame, idCol: String): DataFrame =
-      ts.fold(df)(t => df.join(
-        broadcast(t.withColumnRenamed("vec_id", idCol)), Seq(idCol), "left_anti"))
-
-    val mergedAssign = foldOf("ivf_assign").map(minusTs(_, "vec_id"))
-    val nLive = mergedAssign.map(_.filter($"rk" === 1).count()).getOrElse(0L)
-    val nFiles = math.min(64L, math.max(1L, (nLive + 65535L) / 65536L)).toInt
-    // carried tombstones: live ts ids still shadowing a BOTTOM-LAYER
-    // row — the root home cells, or the rebase base's assignment table
-    // when one exists (it covers both corpus rows and folded adds, so
-    // a tombstone retiring a base-folded add survives the compact
-    // instead of vanishing while its rows stay). Ids that only
-    // shadowed folded segments — or nothing — drop out, and ids the
-    // rebase base already records permanently are not re-carried
-    // (they would double-count in every stats subtraction).
-    val baseTs = v.base
-      .flatMap(b => ArtifactLake.tableIfPresent(Some(b), "tombstones"))
-      .map(f => s.read.parquet(f.getAbsolutePath))
-    val bottomIds = v.base match {
-      case Some(b) => ArtifactLake.tableIfPresent(Some(b), "ivf_assign")
-        .map(f => s.read.parquet(f.getAbsolutePath)
-          .filter($"rk" === 1).select($"vec_id"))
-        .getOrElse(probedDF(s, d).filter($"rk" === 1).select($"vec_id").limit(0))
-      case None => probedDF(s, d).filter($"rk" === 1).select($"vec_id")
-    }
-    val carried = ts.map { t0 =>
-      val fresh = baseTs.fold(t0)(bt =>
-        t0.join(broadcast(bt), Seq("vec_id"), "left_anti"))
-      fresh.join(bottomIds, Seq("vec_id"), "left_semi")
-      .distinct()
-    }
-
-    val installed = ArtifactLake.ensure(target) { staging =>
-      val out = staging.getAbsolutePath
-      mergedAssign.filter(_ => nLive > 0).foreach(
-        _.repartition(nFiles).write.mode("overwrite").parquet(s"$out/ivf_assign"))
+    val installed = ArtifactLake.compactStore(indexPath(d)) { (v, out) =>
+      val ts = ArtifactLake.liveTombstones(s, v)
+      def foldOf(table: String, idCol: String): Option[DataFrame] =
+        ArtifactLake.layerUnion(s, v.overlays.map(_.getAbsolutePath), table)
+          .map(ArtifactLake.minusTombstones(_, ts, idCol))
+      val mergedAssign = foldOf("ivf_assign", "vec_id")
+      val nLive = mergedAssign.map(_.filter($"rk" === 1).count()).getOrElse(0L)
+      val nFiles = math.min(64L, math.max(1L, (nLive + 65535L) / 65536L)).toInt
       if (nLive > 0) {
-        foldOf("pq_res_codes").map(minusTs(_, "n_id")).foreach(
+        mergedAssign.foreach(
+          _.repartition(nFiles).write.mode("overwrite").parquet(s"$out/ivf_assign"))
+        foldOf("pq_res_codes", "n_id").foreach(
           _.repartition(nFiles).write.mode("overwrite").parquet(s"$out/pq_res_codes"))
-        foldOf("vectors").map(minusTs(_, "vec_id")).foreach(
+        foldOf("vectors", "vec_id").foreach(
           _.repartition(nFiles).write.mode("overwrite").parquet(s"$out/vectors"))
       }
-      carried.foreach { c =>
-        if (c.limit(1).count() > 0)
-          c.repartition(1).write.mode("overwrite").parquet(s"$out/tombstones")
+      // carried tombstones: live ts ids still shadowing a BOTTOM-LAYER
+      // row — the root home cells, or the rebase base's assignment table
+      // when one exists (it covers both corpus rows and folded adds, so
+      // a tombstone retiring a base-folded add survives the compact
+      // instead of vanishing while its rows stay). Ids that only
+      // shadowed folded segments — or nothing — drop out, and ids the
+      // rebase base already records permanently are not re-carried
+      // (they would double-count in every stats subtraction).
+      val baseTs = ArtifactLake.tableIfPresent(v.base, "tombstones")
+        .map(f => s.read.parquet(f.getAbsolutePath))
+      def rootIds = probedDF(s, d).filter($"rk" === 1).select($"vec_id")
+      val bottomIds = v.base match {
+        case Some(_) => ArtifactLake.tableIfPresent(v.base, "ivf_assign")
+          .map(f => s.read.parquet(f.getAbsolutePath)
+            .filter($"rk" === 1).select($"vec_id"))
+          .getOrElse(rootIds.limit(0))
+        case None => rootIds
       }
-      new java.io.File(out).mkdirs()
-      ArtifactLake.writeLines(new java.io.File(out, "consumed.txt"), consumed)
+      ts.map(t0 => ArtifactLake.minusTombstones(t0, baseTs, "vec_id")
+          .join(bottomIds, Seq("vec_id"), "left_semi").distinct())
+        .foreach { c =>
+          if (c.limit(1).count() > 0)
+            c.repartition(1).write.mode("overwrite").parquet(s"$out/tombstones")
+        }
     }
     if (installed) Similarity.indexCompacts.incrementAndGet()
     installed
   }
 
-  /** FULL compaction into a NEW base — [[Dedup.rebase]]'s vector-store
-    * twin: fold the entire live composition (root-or-base index tables
-    * ∪ generation ∪ unconsumed segments, tombstones applied) into one
-    * immutable `bases/base-<seq>-<key>` artifact that serving resolves
-    * INSTEAD of the root derived tables, with `gens.txt` marking the
-    * subsumed generation. One structural difference from the dedup
-    * lake: the corpus parquet is external and immutable, so ids
-    * retiring CORPUS rows are carried forward as the base's own
-    * tombstone table (they can never be physically applied to the
-    * bottom layer) — only segment/generation dead weight is actually
-    * shed. Root tables untouched (the oracle-pinned q43-q49 reads);
-    * nothing deleted ([[vacuum]]); returns true iff THIS call
-    * installed a new base.
+  /** FULL compaction into a NEW base ([[ArtifactLake.rebaseStore]]):
+    * fold the entire live composition (root-or-base index tables ∪
+    * generation ∪ unconsumed segments, tombstones applied) into one
+    * immutable base that serving resolves INSTEAD of the root derived
+    * tables. One structural difference from the dedup lake: the corpus
+    * parquet is external and immutable, so ids retiring CORPUS rows are
+    * carried forward as the base's own tombstone table (they can never
+    * be physically applied to the bottom layer) — only
+    * segment/generation dead weight is actually shed. Root tables
+    * untouched (the oracle-pinned q43-q49 reads); nothing deleted
+    * ([[vacuum]]); returns true iff THIS call installed a new base.
     */
   def rebase(s: SparkSession, d: String): Boolean = synchronized {
     import s.implicits._
     ensureIndex(s, d)
-    val v = idxView(d)
-    val adds = deltaDirs(d, v)
-    val dels = tombstoneDirs(d, v)
-    if (v.gen.isEmpty && adds.isEmpty && dels.isEmpty) return false
-    val consumed = (v.consumed ++ adds.map(_.getName) ++ dels.map(_.getName))
-      .toSeq.sorted
-    val gens = (ArtifactLake.subsumedGens(v.base) ++
-      v.rawGen.map(_.getName)).toSeq.sorted
-    val seq = v.base.map(_.getName.drop(5).takeWhile(_ != '-').toInt)
-      .getOrElse(0) + 1
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((consumed ++ gens).mkString("|").getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val target = new java.io.File(f"${indexPath(d)}/bases/base-$seq%05d-$key")
-    if (new java.io.File(target, "_SUCCESS").isFile) return false
-
-    val ts = tombstonedIds(s, d, v)
-    def minusTs(df: DataFrame, idCol: String): DataFrame =
-      ts.fold(df)(t => df.join(
-        broadcast(t.withColumnRenamed("vec_id", idCol)), Seq(idCol), "left_anti"))
-    // the full folds ARE the live views: base-or-root ∪ gen ∪ segments
-    // minus every live tombstone — serve-identical by construction
-    val assign = minusTs(withDeltas(s, d, v, probedDF(s, d), "ivf_assign",
-      baseReplacesRoot = true), "vec_id")
-    val codes = minusTs(withDeltas(s, d, v, resCodesDF(s, d), "pq_res_codes",
-      baseReplacesRoot = true), "n_id")
-    val vecParts =
-      v.base.flatMap(b => ArtifactLake.tableIfPresent(Some(b), "vectors"))
-        .map(f => s.read.parquet(f.getAbsolutePath)).toSeq ++
-      ArtifactLake.tableIfPresent(v.gen, "vectors")
-        .map(f => s.read.parquet(f.getAbsolutePath)).toSeq ++
-      adds.map(dir => s.read.parquet(s"${dir.getAbsolutePath}/vectors"))
-    val vecFold = vecParts.reduceOption(_ unionByName _)
-      .map(minusTs(_, "vec_id"))
-    // corpus-shadowing tombstones survive the fold (see the scaladoc)
-    val carried = ts.map(_.join(
-        probedDF(s, d).filter($"rk" === 1).select($"vec_id"),
-        Seq("vec_id"), "left_semi")
-      .distinct())
-
-    val nLive = assign.filter($"rk" === 1).count()
-    val nFiles = math.min(64L, math.max(1L, (nLive + 65535L) / 65536L)).toInt
-    val installed = ArtifactLake.ensure(target) { staging =>
-      val out = staging.getAbsolutePath
+    val installed = ArtifactLake.rebaseStore(indexPath(d)) { (v, out) =>
+      val ts = ArtifactLake.liveTombstones(s, v)
+      // the full folds ARE the live views: base-or-root ∪ gen ∪ segments
+      // minus every live tombstone — serve-identical by construction
+      val assign = ArtifactLake.minusTombstones(ArtifactLake.withLayers(s, v,
+        probedDF(s, d), "ivf_assign", baseReplacesRoot = true), ts, "vec_id")
+      val codes = ArtifactLake.minusTombstones(ArtifactLake.withLayers(s, v,
+        resCodesDF(s, d), "pq_res_codes", baseReplacesRoot = true), ts, "n_id")
+      val vecFold = v.tables("vectors").map(f => s.read.parquet(f.getAbsolutePath))
+        .reduceOption(_ unionByName _)
+        .map(ArtifactLake.minusTombstones(_, ts, "vec_id"))
+      // corpus-shadowing tombstones survive the fold (see the scaladoc)
+      val carried = ts.map(_.join(
+          probedDF(s, d).filter($"rk" === 1).select($"vec_id"),
+          Seq("vec_id"), "left_semi")
+        .distinct())
+      val nLive = assign.filter($"rk" === 1).count()
+      val nFiles = math.min(64L, math.max(1L, (nLive + 65535L) / 65536L)).toInt
       if (nLive > 0) {
         assign.repartition(nFiles).write.mode("overwrite").parquet(s"$out/ivf_assign")
         codes.repartition(nFiles).write.mode("overwrite").parquet(s"$out/pq_res_codes")
@@ -2483,33 +2287,20 @@ final class Similarity(val tuning: Tuning) extends Serializable {
         if (c.limit(1).count() > 0)
           c.repartition(1).write.mode("overwrite").parquet(s"$out/tombstones")
       }
-      new java.io.File(out).mkdirs()
-      ArtifactLake.writeLines(new java.io.File(out, "consumed.txt"), consumed)
-      ArtifactLake.writeLines(new java.io.File(out, "gens.txt"), gens)
     }
     if (installed) Similarity.indexRebases.incrementAndGet()
     installed
   }
 
-  /** Delete the delta segments the current generation has subsumed.
-    * MAINTENANCE-WINDOW ONLY: safe iff no reader holds the pre-compact
-    * view open (the single-logical-writer contract extended to a
-    * no-reader window — the reader-epoch tracking a hot vacuum would
-    * need is out of scope by design). Returns the number of segment
-    * dirs removed.
+  /** Delete the segments, generations and bases the newest layers
+    * subsume ([[ArtifactLake.vacuumStore]]). MAINTENANCE-WINDOW ONLY:
+    * safe iff no reader holds an older view open (the
+    * single-logical-writer contract extended to a no-reader window —
+    * the reader-epoch tracking a hot vacuum would need is out of scope
+    * by design). Returns the number of dirs removed.
     */
   def vacuum(d: String): Int = synchronized {
-    val v = idxView(d)
-    val subsumed = ArtifactLake.subsumedGens(v.base)
-    val victims = ArtifactLake.segmentDirs(indexPath(d), "add-") ++
-      ArtifactLake.segmentDirs(indexPath(d), "del-")
-    val deadSegs = victims.filter(f => v.consumed.contains(f.getName))
-    // a rebase base also subsumes whole generations — same contract
-    val deadGens = Option(new java.io.File(s"${indexPath(d)}/gens").listFiles())
-      .toSeq.flatten.filter(f => subsumed.contains(f.getName))
-    val dead = deadSegs ++ deadGens
-    dead.foreach(ArtifactLake.deleteTree)
-    dead.length
+    ArtifactLake.vacuumStore(indexPath(d))
   }
 
   /** Continuous vector ingest — the vector store's streaming DML.

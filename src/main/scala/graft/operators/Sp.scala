@@ -373,10 +373,8 @@ final class Sp(val tuning: Tuning) extends Serializable {
     val dir = Option(outDir).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-sp-export").toString)
     new java.io.File(dir).mkdirs()
-    val w = new java.io.PrintWriter(
-      new java.io.File(dir, "sp.vocab"), "UTF-8")
-    try model.foreach { case (p, lp) => w.println(s"$p\t$lp") }
-    finally w.close()
+    ArtifactLake.writeLines(new java.io.File(dir, "sp.vocab"),
+      model.map { case (p, lp) => s"$p\t$lp" })
     dir
   }
 

@@ -909,7 +909,8 @@ final class TextOps(tuning: graft.config.Tuning) {
   def compactLm(s: org.apache.spark.sql.SparkSession, d: String): Boolean =
     synchronized {
       ensureLm(s, d)
-      val installed = ArtifactLake.compactStore(lmPath(d)) { (roots, out) =>
+      val installed = ArtifactLake.compactStore(lmPath(d)) { (v, out) =>
+        val roots = v.overlays.map(_.getAbsolutePath)
         ArtifactLake.layerUnion(s, roots, "counts").foreach { u =>
           val folded = u.groupBy(col("tok")).agg(sum(col("cnt")).as("cnt"))
             .localCheckpoint(true)

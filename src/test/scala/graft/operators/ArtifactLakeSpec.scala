@@ -104,4 +104,12 @@ class ArtifactLakeSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("writeLines surfaces a write error instead of dropping it") {
+    val full = new java.io.File("/dev/full")
+    assume(full.exists(), "needs a device whose writes fail with ENOSPC")
+    intercept[java.io.IOException] {
+      ArtifactLake.writeLines(full, Seq("add-0", "del-1"))
+    }
+  }
 }

@@ -121,4 +121,87 @@ class CompactionSpec extends SparkTestBase {
       assert(serve().contains((1L, 810001L)), "serve changed after vacuum")
     }
   }
+
+  /** Names of the complete `gen-`/`base-` dirs under `root/sub`. */
+  private def layers(root: String, sub: String): Seq[String] =
+    Option(new java.io.File(root, sub).listFiles()).toSeq.flatten
+      .map(_.getName).filter(n => n.startsWith("gen-") || n.startsWith("base-"))
+      .sorted
+
+  test("vector store: vacuum reclaims superseded generations and bases") {
+    withTempRoot {
+      val sim = new Similarity(knobs)
+      val probes = Seq(1L -> novel(3), 2L -> novel(17), 3L -> novel(29))
+      def serve(): Seq[(Long, Long, Long)] =
+        sim.search(spark, sf, probes, k = 2).collect().toSeq
+          .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rk"),
+            r.getAs[Long]("n_id")))
+      val root = sim.indexPath(sf)
+
+      assert(sim.addVectors(spark, sf, Seq(910101L -> novel(3))))
+      assert(sim.compact(spark, sf))
+      assert(sim.addVectors(spark, sf, Seq(910102L -> novel(17))))
+      assert(sim.compact(spark, sf))
+      val folded = serve()
+      assert(sim.vacuum(sf) > 0)
+      val gens = layers(root, "gens")
+      assert(gens.length == 1 && gens.head.startsWith("gen-00002"),
+        s"expected only gen-00002, got $gens")
+      assert(serve() == folded, "serve changed after vacuum")
+
+      assert(sim.addVectors(spark, sf, Seq(910103L -> novel(29))))
+      assert(sim.rebase(spark, sf))
+      assert(sim.addVectors(spark, sf, Seq(910104L -> novel(40))))
+      assert(sim.rebase(spark, sf))
+      val rebased = serve()
+      assert(sim.vacuum(sf) > 0)
+      val bases = layers(root, "bases")
+      assert(bases.length == 1 && bases.head.startsWith("base-00002"),
+        s"expected only base-00002, got $bases")
+      assert(layers(root, "gens").isEmpty, "a subsumed generation survived")
+      assert(serve() == rebased, "serve changed after vacuum")
+    }
+  }
+
+  test("dedup lake: vacuum reclaims superseded generations and bases") {
+    withTempRoot {
+      val dd = new Dedup(knobs)
+      val texts = Seq(
+        "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+        "lorem ipsum dolor sit amet consectetur adipiscing elit sed do",
+        "one two three four five six seven eight nine ten eleven",
+        "red orange yellow green blue indigo violet black white grey")
+      def serve(): Seq[(Long, Long)] =
+        dd.serveSimhashMatches(spark, sf,
+            texts.zipWithIndex.map { case (t, i) => (i + 1L) -> t })
+          .collect().toSeq
+          .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("match_id")))
+      val root = dd.sigPath(sf)
+
+      assert(dd.addDocs(spark, sf, Seq(810101L -> texts(0))))
+      assert(dd.compact(spark, sf))
+      assert(dd.addDocs(spark, sf, Seq(810102L -> texts(1))))
+      assert(dd.compact(spark, sf))
+      val folded = serve()
+      assert(folded.contains((2L, 810102L)))
+      assert(dd.vacuum(sf) > 0)
+      val gens = layers(root, "gens")
+      assert(gens.length == 1 && gens.head.startsWith("gen-00002"),
+        s"expected only gen-00002, got $gens")
+      assert(serve() == folded, "serve changed after vacuum")
+
+      assert(dd.addDocs(spark, sf, Seq(810103L -> texts(2))))
+      assert(dd.rebase(spark, sf))
+      assert(dd.addDocs(spark, sf, Seq(810104L -> texts(3))))
+      assert(dd.rebase(spark, sf))
+      val rebased = serve()
+      assert(rebased.contains((4L, 810104L)))
+      assert(dd.vacuum(sf) > 0)
+      val bases = layers(root, "bases")
+      assert(bases.length == 1 && bases.head.startsWith("base-00002"),
+        s"expected only base-00002, got $bases")
+      assert(layers(root, "gens").isEmpty, "a subsumed generation survived")
+      assert(serve() == rebased, "serve changed after vacuum")
+    }
+  }
 }
