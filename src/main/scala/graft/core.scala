@@ -44,7 +44,10 @@ final class QRegistry(val tuning: graft.config.Tuning) {
     graft.operators.ParseOps.all
   val queries: Map[String, (org.apache.spark.sql.SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.spark).toMap
-  val oracleSql: Map[String, String] =
+  /** Portable oracle SQL per query — built on first use (only
+    * [[Verify]] reads it), not with every registry.
+    */
+  lazy val oracleSql: Map[String, String] =
     all.collect { case Q(n, _, Some(sql)) =>
       n -> SparkEntry.portableRoundSql(sql.trim)
     }.toMap

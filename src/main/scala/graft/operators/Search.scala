@@ -62,8 +62,9 @@ final class Search(tuning: Tuning) {
     * against the probe term set; top 20 by score.
     *
     * Shape at scale: corpus stats (N, avgdl) are ONE map-side-combinable
-    * aggregate collapsed to a 1-row broadcast; per-term df is a ≤|terms|-
-    * row broadcast; the tf table is the only corpus-sized intermediate
+    * aggregate, and the ≤|terms| per-term dfs fold into the same row as
+    * a `tk → df` map ([[withTermStats]]) — one 1-row broadcast, no hash
+    * relation; the tf table is the only corpus-sized intermediate
     * and it's already filtered to the probe terms AT THE EXPLODE, so the
     * shuffle carries matching (doc, term) rows only — the inverted-index
     * slice, not the corpus. Final top-k is a TakeOrdered, not a sort.
@@ -85,17 +86,7 @@ final class Search(tuning: Tuning) {
         .agg(count(lit(1)).cast("double").as("tf"))
       val dfTerm = tf.groupBy($"tk")
         .agg(countDistinct($"doc_id").cast("double").as("df"))
-      tf.join(broadcast(dfTerm), Seq("tk"))
-        .crossJoin(broadcast(stats))
-        .withColumn("idf",
-          log(lit(1.0) + ($"n_docs" - $"df" + lit(0.5)) / ($"df" + lit(0.5))))
-        .withColumn("s",
-          $"idf" * $"tf" * lit(2.2) /
-            ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl")))
-        .groupBy($"doc_id")
-        .agg(r4(sum($"s")).as("bm25"), count(lit(1)).as("n_terms"))
-        .orderBy($"bm25".desc, $"doc_id")
-        .limit(20)
+      bm25TopK(withTermStats(tf, stats, dfTerm), 20)
     },
     Some(s"""
       WITH d AS (
@@ -443,7 +434,10 @@ final class Search(tuning: Tuning) {
     * postings/termdf scans to their md5-bucket partitions with literal
     * predicates — the scan reads only the touched slices; larger sets
     * degrade to distributed semi-joins over the full postings scan.
-    * df and stats ride broadcasts; top-k is a TakeOrdered.
+    * A collected probe's per-term dfs fold into the one-row stats
+    * broadcast ([[withTermStats]]); an over-cap probe's df table grows
+    * with the data, so it stays a broadcast hash join. Top-k is a
+    * TakeOrdered.
     */
   def serveBm25(s: SparkSession, d: String, terms: Seq[String]): DataFrame =
     serveBm25(s, d, terms, 20)
@@ -567,18 +561,47 @@ final class Search(tuning: Tuning) {
             (sum($"sum_dl") / sum($"n_dl")).as("avgdl"))
         (df, st)
       }
-    posts.join(broadcast(dfT.select($"tk", $"df")), Seq("tk"))
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + ($"n_docs" - $"df" + lit(0.5)) / ($"df" + lit(0.5))))
-      .withColumn("s",
-        $"idf" * $"tf" * lit(2.2) /
-          ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl")))
-      .groupBy($"doc_id")
-      .agg(r4(sum($"s")).as("bm25"), count(lit(1)).as("n_terms"))
-      .orderBy($"bm25".desc, $"doc_id")
-      .limit(k)
+    val scored = collected match {
+      case Some(_) => withTermStats(posts, stats, dfT)
+      case None =>
+        posts.join(broadcast(dfT.select($"tk", $"df")), Seq("tk"))
+          .crossJoin(broadcast(stats))
+    }
+    bm25TopK(scored, k)
   }
+
+  /** `rows` with `n_docs`, `avgdl` and its term's `df`, all from ONE
+    * 1-row broadcast: `stats` plus `dfT(tk, df)` folded to a `tk → df`
+    * map (every row's term has an entry: both derive from the same
+    * postings). A string-keyed broadcast hash join would pin a whole
+    * Tungsten page (~16 MiB) for a handful of rows. The lookup scans
+    * the map's keys per row, so `dfT` must be driver-bounded (q85's
+    * terms, [[bm25CollectCap]]).
+    */
+  private def withTermStats(rows: DataFrame, stats: DataFrame,
+      dfT: DataFrame): DataFrame = {
+    val dfMap = dfT.agg(
+      map_from_entries(collect_list(struct(col("tk"), col("df")))).as("dfm"))
+    rows.crossJoin(broadcast(stats.crossJoin(broadcast(dfMap))))
+      .withColumn("df", element_at(col("dfm"), col("tk")))
+  }
+
+  /** The BM25 scoring tail of q85 and every served ranking, over
+    * `doc_id, dl, tf, df, n_docs, avgdl` rows: top `k` docs by summed
+    * score, (bm25 desc, doc_id).
+    */
+  private def bm25TopK(scored: DataFrame, k: Int): DataFrame =
+    scored
+      .withColumn("idf", log(lit(1.0) +
+        (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
+      .withColumn("s",
+        col("idf") * col("tf") * lit(2.2) /
+          (col("tf") + lit(1.2) *
+            (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
+      .groupBy(col("doc_id"))
+      .agg(r4(sum(col("s"))).as("bm25"), count(lit(1)).as("n_terms"))
+      .orderBy(col("bm25").desc, col("doc_id"))
+      .limit(k)
 
   /** Exact-substring window width in tokens — runs shorter than this
     * are invisible; [[Tuning.runMinTokens]] (≥ this) sets the report

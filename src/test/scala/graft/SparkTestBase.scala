@@ -15,4 +15,21 @@ trait SparkTestBase extends AnyFunSuite {
     .getOrCreate()
 
   def sc = spark.sparkContext
+
+  /** Run `body` with `graft.index.dir` pointed at a fresh store root in
+    * the JVM temp dir, then restore the property and delete the root.
+    */
+  def withTempRoot[A](body: => A): A = {
+    val root = java.nio.file.Files.createTempDirectory("graft-root")
+    val prev = sys.props.get("graft.index.dir")
+    sys.props("graft.index.dir") = root.toString
+    try body
+    finally {
+      prev match {
+        case Some(v) => sys.props("graft.index.dir") = v
+        case None => sys.props -= "graft.index.dir"
+      }
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    }
+  }
 }

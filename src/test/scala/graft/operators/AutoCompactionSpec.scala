@@ -18,17 +18,6 @@ class AutoCompactionSpec extends SparkTestBase {
   private val knobs = Tuning(annQueries = 3, lloydIters = 1, nprobe = 2,
     pqCentroids = 8, storeMaxSegments = 3)
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-autocompact-spec")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   private def novel(seed: Int): Array[Float] =
     Array.tabulate(64)(i => if (i == seed % 64) 5f else 0.01f)
 

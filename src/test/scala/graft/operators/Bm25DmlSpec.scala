@@ -18,17 +18,6 @@ import org.apache.spark.sql.functions._
   */
 class Bm25DmlSpec extends SparkTestBase {
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-bm25dml")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   private val baseDocs = Seq(
     (0L, "spark window hash stream spark spark"),
     (1L, "window functions over spark streams window"),

@@ -19,17 +19,6 @@ class BulkIngestSpec extends SparkTestBase {
   private val knobs = Tuning(annQueries = 3, lloydIters = 1, nprobe = 2,
     pqCentroids = 8)
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-bulk-spec")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   test("100k-vector DataFrame add lands one multi-file segment, no driver batch") {
     withTempRoot {
       val sim = new Similarity(knobs)

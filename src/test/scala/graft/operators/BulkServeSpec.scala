@@ -18,17 +18,6 @@ class BulkServeSpec extends SparkTestBase {
   private val knobs = Tuning(annQueries = 3, lloydIters = 1, nprobe = 2,
     pqCentroids = 8)
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-bulkserve-spec")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   /** The BulkIngestSpec embedding recipe — deterministic per-id,
     * generated on executors (SQL) or the driver (assert probes).
     */

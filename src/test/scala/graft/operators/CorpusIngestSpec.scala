@@ -18,17 +18,6 @@ class CorpusIngestSpec extends SparkTestBase {
 
   private val knobs = Tuning(bpeMerges = 8)
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-corpusingest")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   // a 16-token span (the default runMinTokens) the runs probe replays
   private val span16 = "every large corpus needs careful curation and " +
     "the tooling of a modern data engine in production"

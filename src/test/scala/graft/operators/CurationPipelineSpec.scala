@@ -19,17 +19,6 @@ import org.apache.spark.sql.functions._
 class CurationPipelineSpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-curation-spec")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   // crafted incoming documents, one per funnel gate
   private val varied = (0 until 96).map(i => s"alpha$i").mkString(" ")
   private val good1 = s"the a of and in $varied"

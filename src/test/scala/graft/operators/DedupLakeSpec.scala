@@ -15,17 +15,6 @@ class DedupLakeSpec extends SparkTestBase {
 
   private val knobs = Tuning()
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-dedup-spec")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   private def mtimes(dir: java.io.File): Map[String, Long] = {
     def walk(f: java.io.File): Seq[(String, Long)] =
       if (f.isDirectory)

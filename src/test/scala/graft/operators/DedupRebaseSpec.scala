@@ -16,17 +16,6 @@ import org.apache.spark.sql.Row
 class DedupRebaseSpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-rebase-spec")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   private def m(r: Row): Map[String, Long] =
     r.schema.fieldNames.map(f => f -> r.getAs[Long](f)).toMap
 

@@ -14,17 +14,6 @@ import org.apache.spark.sql.functions._
 class DhashLakeSpec extends SparkTestBase {
   import Multimodal.MediaFixtures
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-dhash")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   /** A corpus dir whose media lake holds exactly the fixture blobs of
     * `ids` — documents rows exist only to drive MediaLake's id scan.
     */

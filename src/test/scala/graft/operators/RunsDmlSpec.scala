@@ -20,17 +20,6 @@ class RunsDmlSpec extends SparkTestBase {
 
   private val knobs = Tuning(runMinTokens = 9, dfCap = 2)
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-runsdml")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   private val span10 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
   private val spanNew = "nu xi omicron pi rho sigma tau upsilon phi chi"
 

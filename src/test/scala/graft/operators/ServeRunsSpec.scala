@@ -15,17 +15,6 @@ class ServeRunsSpec extends SparkTestBase {
 
   private val knobs = Tuning(runMinTokens = 9)
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-serveruns")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   // a 10-token span shared by docs 0 and 1 (reportable at minTokens 9),
   // an 8-token span shared by docs 0 and 3 (observable but BELOW the
   // threshold), and an unrelated doc 2

@@ -12,17 +12,6 @@ import org.apache.spark.sql.functions._
 class ServeSurprisalSpec extends SparkTestBase {
   private val ops = new TextOps(Tuning())
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-lm")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   private def writeCorpus(docs: Seq[(Long, String)]): String = {
     import spark.implicits._
     val d = java.nio.file.Files

@@ -17,17 +17,6 @@ class ShardDmlSpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
   private val knobs = Tuning(bpeMerges = 8)
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-sharddml")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   private val batch = Seq(
     (910001L, "the quick brown fox jumps again and again"),
     (910002L, "an unseen word §zzyzzx among plain words"),

@@ -16,17 +16,6 @@ class SimilarityAddSpec extends SparkTestBase {
   private val knobs = Tuning(annQueries = 3, lloydIters = 1, nprobe = 2,
     pqCentroids = 8)
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-add-spec")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   private def corpus: Map[Long, Array[Float]] = {
     import spark.implicits._
     graft.Tables.t(spark, sf, "embeddings")

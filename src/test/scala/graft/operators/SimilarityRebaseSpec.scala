@@ -16,17 +16,6 @@ class SimilarityRebaseSpec extends SparkTestBase {
   private val knobs = Tuning(annQueries = 3, lloydIters = 1, nprobe = 2,
     pqCentroids = 8)
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-simrebase-spec")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   private def m(r: Row): Map[String, Long] =
     r.schema.fieldNames.map(f => f -> r.getAs[Long](f)).toMap
 

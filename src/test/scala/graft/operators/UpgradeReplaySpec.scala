@@ -14,17 +14,6 @@ import graft.config.Tuning
 class UpgradeReplaySpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
 
-  private def withTempRoot[A](body: => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-upgrade-spec")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
-    }
-  }
-
   // the PRE-r9 content keys, reproduced exactly (id big-endian longs,
   // float bits / UTF-8 text + NUL separator, batch sorted by id,
   // first 8 digest bytes hex)
