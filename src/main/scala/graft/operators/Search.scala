@@ -434,10 +434,11 @@ final class Search(tuning: Tuning) {
     * postings/termdf scans to their md5-bucket partitions with literal
     * predicates — the scan reads only the touched slices; larger sets
     * degrade to distributed semi-joins over the full postings scan.
-    * A collected probe's per-term dfs fold into the one-row stats
-    * broadcast ([[withTermStats]]); an over-cap probe's df table grows
-    * with the data, so it stays a broadcast hash join. Top-k is a
-    * TakeOrdered.
+    * df rides a broadcast hash join on `tk` and stats a one-row
+    * broadcast. q85's map lookup ([[withTermStats]]) is not used here:
+    * it lost to the join at every probe size timed (8 to 4000 terms),
+    * and a served frame's hash relation is freed with the frame. Top-k
+    * is a TakeOrdered.
     */
   def serveBm25(s: SparkSession, d: String, terms: Seq[String]): DataFrame =
     serveBm25(s, d, terms, 20)
@@ -561,13 +562,8 @@ final class Search(tuning: Tuning) {
             (sum($"sum_dl") / sum($"n_dl")).as("avgdl"))
         (df, st)
       }
-    val scored = collected match {
-      case Some(_) => withTermStats(posts, stats, dfT)
-      case None =>
-        posts.join(broadcast(dfT.select($"tk", $"df")), Seq("tk"))
-          .crossJoin(broadcast(stats))
-    }
-    bm25TopK(scored, k)
+    bm25TopK(posts.join(broadcast(dfT.select($"tk", $"df")), Seq("tk"))
+      .crossJoin(broadcast(stats)), k)
   }
 
   /** `rows` with `n_docs`, `avgdl` and its term's `df`, all from ONE
@@ -575,8 +571,10 @@ final class Search(tuning: Tuning) {
     * map (every row's term has an entry: both derive from the same
     * postings). A string-keyed broadcast hash join would pin a whole
     * Tungsten page (~16 MiB) for a handful of rows. The lookup scans
-    * the map's keys per row, so `dfT` must be driver-bounded (q85's
-    * terms, [[bm25CollectCap]]).
+    * the map's keys per row and the fold adds a stage, so this is for
+    * q85's fixed terms only: on a 50k-doc synthetic store (`local[4]`)
+    * it served 0.1 s slower than the join at 8 terms and 3.4× slower
+    * at 4000.
     */
   private def withTermStats(rows: DataFrame, stats: DataFrame,
       dfT: DataFrame): DataFrame = {

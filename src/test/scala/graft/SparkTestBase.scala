@@ -18,6 +18,9 @@ trait SparkTestBase extends AnyFunSuite {
 
   /** Run `body` with `graft.index.dir` pointed at a fresh store root in
     * the JVM temp dir, then restore the property and delete the root.
+    * Operators read the property once per instance (a lazy root), so
+    * build them inside `body`: an instance shared across blocks keeps
+    * writing under the first block's root after it is deleted.
     */
   def withTempRoot[A](body: => A): A = {
     val root = java.nio.file.Files.createTempDirectory("graft-root")

@@ -6,11 +6,10 @@ import org.apache.spark.BroadcastAudit
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 
-/** BM25 scoring pins no broadcast hash relation. A string-keyed
-  * broadcast hash join backs even a 4-row build side with a whole
-  * Tungsten page (`MemoryManager.pageSizeBytes`), so q85 and the
-  * collected-probe serve read each term's df from the one-row stats
-  * broadcast instead. Both still broadcast that row.
+/** q85 pins no broadcast hash relation. A string-keyed broadcast hash
+  * join backs even a 4-row build side with a whole Tungsten page
+  * (`MemoryManager.pageSizeBytes`), so q85 reads each term's df from
+  * the one-row stats broadcast instead, and still broadcasts that row.
   */
 class Bm25BroadcastSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   private val sf = "/root/testdata/sf0.001"
@@ -27,16 +26,5 @@ class Bm25BroadcastSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(collect(q85.queryExecution.executedPlan) {
       case j: BroadcastHashJoinExec => j
     }.isEmpty)
-  }
-
-  test("serveBm25 on the pinned term set over a fresh lake creates no hashed relation") {
-    withTempRoot {
-      val search = new Search(Tuning.current)
-      // building the frame builds the lake; only its run is audited
-      val served = search.serveBm25(spark, sf, search.terms)
-      val audit = BroadcastAudit(served)
-      assert(audit.exists(_.cls.contains("InternalRow")), audit)
-      assert(hashed(audit).isEmpty, audit)
-    }
   }
 }

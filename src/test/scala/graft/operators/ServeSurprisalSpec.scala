@@ -10,8 +10,6 @@ import org.apache.spark.sql.functions._
   * replay through the artifact counter.
   */
 class ServeSurprisalSpec extends SparkTestBase {
-  private val ops = new TextOps(Tuning())
-
   private def writeCorpus(docs: Seq[(Long, String)]): String = {
     import spark.implicits._
     val d = java.nio.file.Files
@@ -218,6 +216,7 @@ class ServeSurprisalSpec extends SparkTestBase {
     withTempRoot {
       import spark.implicits._
       val dir = writeCorpus(Seq((0L, "x y z"), (1L, "x x")))
+      val ops = new TextOps(Tuning())
       val before = TextOps.lmBuilds.get()
       val probe = Seq((1L, "x")).toDF("id", "text")
       val first = ops.serveSurprisal(spark, dir, probe).collect()
