@@ -9,16 +9,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *  - gen+adds: the BM25 and runs indexes ([[Search]]), the corpus LM
   *    ([[TextOps]]), the dHash media lake ([[MediaDedup]]) and the BPE
-  *    training-shard lake ([[Bpe]]). A DML add installs a content-keyed
-  *    `deltas/add-<key>` segment ([[dmlAdd]]); a replay of a folded
-  *    batch no-ops off `consumed.txt`.
+  *    training-shard lake ([[Bpe]]). Their DML only adds.
   *  - layered: the ANN index ([[Similarity]]) and the dedup signature
-  *    lake ([[Dedup]]). They also install `deltas/del-<key>` tombstone
-  *    segments, carry tombstones that still shadow a bottom-layer row
-  *    in each generation, and fold the whole store into rebase bases
-  *    (`bases/base-%05d-<key>`) that replace the root tables.
+  *    lake ([[Dedup]]). They also remove, carry tombstones that still
+  *    shadow a bottom-layer row in each generation, and fold the whole
+  *    store into rebase bases (`bases/base-%05d-<key>`) that replace
+  *    the root tables.
   *
-  * Both shapes read one snapshot ([[deltaView]]), fold into
+  * The DML of both shapes is [[dmlAdd]], which installs a content-keyed
+  * `deltas/add-<key>` segment, and [[dmlRemove]], which installs a
+  * `deltas/del-<key>` tombstone segment; a store supplies only its
+  * normalization, key hashes, held ids, layer writer, counter and
+  * compact. Both shapes read one snapshot ([[deltaView]]), fold into
   * `gens/gen-%05d-<key>` ([[compactStore]]), auto-fold past a segment
   * bound ([[maybeCompact]]) and reclaim space with one [[vacuumStore]].
   * The media fixture ([[Multimodal.MediaLake]]) and the build-once
@@ -388,104 +390,190 @@ private[operators] object ArtifactLake {
       org.apache.spark.sql.functions.broadcast(t.toDF(idCol)), Seq(idCol), "left_anti"))
 
   // ------------------------------------------------------------------
-  // The gen+adds DML recipe: every such store composes the SAME
-  // segment arithmetic instead of re-deriving it.
+  // The DML recipe of all seven stores. A store supplies only what is
+  // its own: its normalization, its key's hash columns, its taken-ids
+  // basis, its layer writer, its counter and its compact.
   // ------------------------------------------------------------------
 
-  /** Content key + envelope of a normalized `(doc_id, <payload>)`
-    * batch: ONE aggregate pass derives an order-independent 128-bit
-    * key (a NULL payload hashed through an explicit is-null flag), the
-    * id envelope for the prunable conflict scan, and the batch size.
-    * None for an empty batch; duplicate in-batch ids fail loudly.
-    * `payload`/`empty` parameterize the column name and its typed
-    * empty literal (the text stores pass the defaults; the media lake
-    * hashes `blob` with a binary empty).
+  /** The file count of a DML-sized write of `n` rows: one file per 64k
+    * rows, at least 1, at most 64.
     */
-  private[operators] def batchKey(norm: DataFrame, op: String,
-      payload: String = "text", empty: String = "''")
-      : Option[(String, Long, Long, Long)] = {
+  def segmentFiles(n: Long): Int =
+    math.min(64L, math.max(1L, (n + 65535L) / 65536L)).toInt
+
+  /** A normalized, persisted DML batch as a layer writer sees it: its
+    * `rows` (id column first), id envelope [`lo`, `hi`], row count and
+    * the store snapshot it is installed against.
+    */
+  final case class DmlBatch(rows: DataFrame, lo: Long, hi: Long,
+      cnt: Long, view: DeltaView) {
+    def idCol: String = rows.columns.head
+    def files: Int = segmentFiles(cnt)
+    /** The rows of `df` whose `idCol` is in the batch. The [lo, hi]
+      * envelope is a pushable superset predicate, so parquet row-group
+      * stats prune a corpus-sized scan to nothing in the common
+      * fresh-ids case. The batch side is broadcast only for ≤ 1M ids:
+      * beyond that a forced broadcast costs real driver heap and risks
+      * the broadcast timeout, and AQE picks the strategy from actual
+      * sizes instead.
+      */
+    def within(df: DataFrame): DataFrame = {
+      import org.apache.spark.sql.functions.{broadcast, col}
+      val ids = rows.select(col(idCol))
+      df.filter(col(idCol).between(lo, hi))
+        .join(if (cnt <= 1000000L) broadcast(ids) else ids, Seq(idCol), "left_semi")
+    }
+  }
+
+  /** Content key + envelope of a normalized batch (id column first):
+    * ONE aggregate pass derives an order-independent 128-bit key, the
+    * id envelope and the batch size. `hashes` are the argument lists of
+    * the key's two `xxhash64` halves — two differently ordered tuples of
+    * the row's content, `bit_xor`-combined so any partitioning or order
+    * of the same rows gives the same key (xor cannot cancel across rows:
+    * ids are distinct). None for an empty batch; duplicate in-batch ids
+    * fail loudly.
+    */
+  private def batchKey(norm: DataFrame, op: String,
+      hashes: (String, String)): Option[(String, Long, Long, Long)] = {
+    val id = norm.columns.head
     val st = norm.selectExpr(
-      "count(1) as cnt", "count(distinct doc_id) as dcnt",
-      "min(doc_id) as lo", "max(doc_id) as hi",
-      s"bit_xor(xxhash64(doc_id, isnull($payload), coalesce($payload, $empty))) as h1",
-      s"bit_xor(xxhash64(coalesce($payload, $empty), isnull($payload), doc_id)) as h2").head()
+      "count(1) as cnt", s"count(distinct $id) as dcnt",
+      s"min($id) as lo", s"max($id) as hi",
+      s"bit_xor(xxhash64(${hashes._1})) as h1",
+      s"bit_xor(xxhash64(${hashes._2})) as h2").head()
     val cnt = st.getAs[Long]("cnt")
     if (cnt == 0L) None
     else {
       require(st.getAs[Long]("dcnt") == cnt,
-        s"$op: duplicate doc_id within the batch")
+        s"$op: duplicate $id within the batch")
       Some((f"${st.getAs[Long]("h1")}%016x${st.getAs[Long]("h2")}%016x",
         st.getAs[Long]("lo"), st.getAs[Long]("hi"), cnt))
     }
   }
 
-  /** The complete add-segment orchestration of the gen+adds stores:
-    * normalize + persist the batch, derive its content key, no-op on
-    * consumed/installed replays, run the id guard against the layers'
-    * `idTable`, install the layer via the staged rename (the layer
-    * writer receives the normalized batch, the staging root, and a
-    * batch-proportional file count), bump the store's observability
-    * counter, and auto-fold past `maxSegments`.
+  /** The segment orchestration behind [[dmlAdd]] and [[dmlRemove]]:
+    * persist the batch, derive its content key, name the `kind`
+    * segment ([[DeltaView.segmentName]]), no-op when that segment is
+    * installed or `replayed` says so (given the batch and whether a
+    * fold consumed the plain name), install the layer via the staged
+    * rename, bump the store's counter, and auto-fold past
+    * `maxSegments`.
     */
-  private[operators] def dmlAdd(s: SparkSession,
-      p: String, docs: DataFrame, op: String,
-      maxSegments: Int,
-      counter: java.util.concurrent.atomic.AtomicInteger,
-      payloadCol: String = "text", payloadType: String = "string",
-      idTable: String = "docs")(
-      writeLayer: (DataFrame, String, Int) => Unit)(
-      compact: () => Unit): Boolean = {
-    val empty = if (payloadType == "binary") "cast('' as binary)" else "''"
-    val norm = docs.selectExpr(
-        "cast(doc_id as bigint) as doc_id",
-        s"cast($payloadCol as $payloadType) as $payloadCol")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  private def dml(s: SparkSession, p: String, kind: String,
+      norm: DataFrame, op: String, hashes: (String, String),
+      maxSegments: Int, counter: java.util.concurrent.atomic.AtomicInteger,
+      writeLayer: (DmlBatch, String) => Unit, compact: () => Unit)(
+      replayed: (DmlBatch, Boolean) => Boolean): Boolean = {
+    val rows = norm.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      batchKey(norm, op, payloadCol, empty) match {
+      batchKey(rows, op, hashes) match {
         case None => false
         case Some((key, lo, hi, cnt)) =>
-          // the retry no-op precedes the id guard: a re-sent batch
-          // carries already-indexed ids by definition. Consumed names
-          // first — a vacuumed segment's bytes live on in its
-          // generation, so its replay must still no-op
-          if (deltaView(p).consumed.contains(s"add-$key")) return false
-          val target = new File(s"$p/deltas/add-$key")
+          val v = deltaView(p)
+          val name = v.segmentName(kind, key)
+          val target = new File(s"$p/deltas/$name")
           if (new File(target, "_SUCCESS").isFile) return false
-          guardIds(s, p, idTable, norm, lo, hi, cnt, op)
-          val nFiles =
-            math.min(64L, math.max(1L, (cnt + 65535L) / 65536L)).toInt
-          val installed = ensure(target) { staging =>
-            writeLayer(norm, staging.getAbsolutePath, nFiles)
-          }
+          val b = DmlBatch(rows, lo, hi, cnt, v)
+          if (replayed(b, name != s"$kind-$key")) return false
+          val installed = ensure(target)(st => writeLayer(b, st.getAbsolutePath))
           if (installed) {
             counter.incrementAndGet()
             maybeCompact(p, maxSegments)(compact())
           }
           installed
       }
-    } finally { norm.unpersist(); () }
+    } finally { rows.unpersist(); () }
   }
 
-  /** The id-conflict guard of [[dmlAdd]]: ids the lake already holds
-    * (root ∪ generation ∪ unconsumed segments, each layer's `table`)
-    * intersected with the batch, pruned to the batch's [lo, hi]
-    * envelope so the scan is parquet-stats-prunable. Fails loudly on
-    * conflict; driver memory held is ≤ 8 ids.
+  /** The add segment of every store: `deltas/add-<key>`, epoch-salted
+    * when a fold already consumed the plain name. `norm` is the
+    * store-normalized batch, id column first. The retry no-op precedes
+    * the id guard, since a re-sent batch carries already-indexed ids
+    * by definition: an installed target no-ops, and so does a folded
+    * batch whose ids are all still live. A folded batch whose ids were
+    * tombstoned away is a genuine re-add. Otherwise ids in `taken` (the
+    * store's held ids, read against the snapshot) or in a live
+    * tombstone fail loudly; driver memory held is ≤ 8 ids.
     */
-  private def guardIds(s: SparkSession, p: String, table: String,
-      norm: DataFrame, lo: Long, hi: Long, cnt: Long, op: String): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val taken = (p +: deltaView(p).overlays.map(_.getAbsolutePath))
-      .map(r => new File(r, table)).filter(hasParquet)
-      .map(f => s.read.parquet(f.getAbsolutePath).select(col("doc_id")))
-      .reduce(_ unionByName _) // the root always writes the table
-      .filter(col("doc_id").between(lo, hi))
-    val idsDf = norm.select(col("doc_id"))
-    val probe = if (cnt <= 1000000L) broadcast(idsDf) else idsDf
-    import s.implicits._
-    val dup = taken.join(probe, "doc_id").select(col("doc_id")).distinct()
-      .orderBy(col("doc_id")).limit(8).as[Long].collect()
-    require(dup.isEmpty,
-      s"$op: doc ids already indexed (already in the lake): ${dup.mkString(", ")}")
+  private[operators] def dmlAdd(s: SparkSession, p: String,
+      norm: DataFrame, op: String, hashes: (String, String),
+      maxSegments: Int, counter: java.util.concurrent.atomic.AtomicInteger)(
+      taken: DeltaView => DataFrame)(
+      writeLayer: (DmlBatch, String) => Unit)(
+      compact: () => Unit): Boolean =
+    dml(s, p, "add", norm, op, hashes, maxSegments, counter,
+        writeLayer, compact) { (b, folded) =>
+      import s.implicits._
+      val held = taken(b.view).select(b.idCol)
+      val dup = b.within(liveTombstones(s, b.view).fold(held)(held.unionByName(_)))
+        .distinct()
+      if (folded && dup.count() == b.cnt) true
+      else {
+        val ids = dup.orderBy(b.idCol).limit(8).as[Long].collect()
+        require(ids.isEmpty,
+          s"$op: ids already indexed (already in the lake): ${ids.mkString(", ")}")
+        false
+      }
+    }
+
+  /** [[dmlAdd]] for the gen+adds stores: `(doc_id, <payloadCol>)` cast
+    * to (BIGINT, `payloadType`), a NULL payload hashed through an
+    * explicit is-null flag, and the held ids read off each layer's
+    * `idTable` (the root always writes it).
+    */
+  private[operators] def dmlAddDocs(s: SparkSession,
+      p: String, docs: DataFrame, op: String,
+      maxSegments: Int,
+      counter: java.util.concurrent.atomic.AtomicInteger,
+      payloadCol: String = "text", payloadType: String = "string",
+      idTable: String = "docs")(
+      writeLayer: (DmlBatch, String) => Unit)(
+      compact: () => Unit): Boolean = {
+    val empty = if (payloadType == "binary") "cast('' as binary)" else "''"
+    val payload = s"isnull($payloadCol), coalesce($payloadCol, $empty)"
+    val norm = docs.selectExpr("cast(doc_id as bigint) as doc_id",
+      s"cast($payloadCol as $payloadType) as $payloadCol")
+    dmlAdd(s, p, norm, op, (s"doc_id, $payload",
+        s"coalesce($payloadCol, $empty), isnull($payloadCol), doc_id"),
+        maxSegments, counter)(v =>
+      (p +: v.overlays.map(_.getAbsolutePath))
+        .map(r => new File(r, idTable)).filter(hasParquet)
+        .map(f => s.read.parquet(f.getAbsolutePath).select("doc_id"))
+        .reduce(_ unionByName _))(writeLayer)(compact)
   }
+
+  /** The tombstone segment of a layered store: `deltas/del-<key>/ids`,
+    * the distinct non-NULL `idCol`s of `ids` cast to BIGINT,
+    * epoch-salted when a fold consumed the plain name (an id re-added
+    * after that fold must be removable again). Re-removing an installed
+    * id set is a no-op. `writeLedger` adds the store's own tables
+    * beside `ids`.
+    */
+  private[operators] def dmlRemove(s: SparkSession, p: String,
+      ids: DataFrame, idCol: String, op: String, maxSegments: Int,
+      counter: java.util.concurrent.atomic.AtomicInteger)(
+      writeLedger: (DmlBatch, String) => Unit)(
+      compact: () => Unit): Boolean = {
+    val norm = ids.selectExpr(s"cast($idCol as bigint) as $idCol")
+      .filter(s"$idCol is not null").distinct()
+    dml(s, p, "del", norm, op, (idCol, s"$idCol, $idCol"), maxSegments, counter,
+      { (b, root) =>
+        b.rows.repartition(b.files).write.mode("overwrite").parquet(s"$root/ids")
+        writeLedger(b, root)
+      }, compact)((_, _) => false)
+  }
+
+  /** Continuous DML: `addBatch` runs on every micro-batch of `stream`
+    * under `checkpoint`. A replayed micro-batch reproduces its content
+    * key and no-ops, so at-least-once replay × content-keyed install is
+    * effectively-once ingest.
+    */
+  def ingest(stream: DataFrame, checkpoint: String)(
+      addBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .foreachBatch((batch: DataFrame, _: Long) => addBatch(batch))
+      .start()
 }

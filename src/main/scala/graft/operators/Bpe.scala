@@ -1241,7 +1241,7 @@ final class Bpe(val tuning: Tuning) extends Serializable {
 
   /** Append a batch of NEW documents (`doc_id` castable to LONG,
     * `text` STRING) to the installed shard lake as one delta segment,
-    * through the shared [[ArtifactLake.dmlAdd]] recipe. Returns true
+    * through the shared [[ArtifactLake.dmlAddDocs]] recipe. Returns true
     * iff THIS call installed it.
     *
     * Contract:
@@ -1264,12 +1264,12 @@ final class Bpe(val tuning: Tuning) extends Serializable {
   def addShardDocs(s: SparkSession, d: String, docs: DataFrame,
       curated: Boolean = false): Boolean = synchronized {
     val p = if (curated) ensureCuratedShards(s, d) else ensureShards(s, d)
-    ArtifactLake.dmlAdd(s, p, docs, "addShardDocs",
+    ArtifactLake.dmlAddDocs(s, p, docs, "addShardDocs",
       tuning.storeMaxSegments, Bpe.shardAdds, idTable = "data")(
-      (norm, root, nFiles) =>
-        serveTokenize(s, d, norm.select(col("doc_id").as("id"), col("text")), curated)
+      (b, root) =>
+        serveTokenize(s, d, b.rows.select(col("doc_id").as("id"), col("text")), curated)
           .select(col("id").as("doc_id"), col("n_tokens"), col("token_ids"))
-          .repartition(nFiles)
+          .repartition(b.files)
           .write.mode("overwrite").parquet(s"$root/data"))(
       () => { compactShards(s, d, curated); () })
   }
@@ -1284,15 +1284,10 @@ final class Bpe(val tuning: Tuning) extends Serializable {
   def ingestShardStream(d: String, stream: DataFrame, checkpoint: String,
       curated: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        addShardDocs(batch.sparkSession, d,
-          batch.select(col("doc_id"), col("text")), curated)
-        ()
-      }
-      .start()
+    ArtifactLake.ingest(stream, checkpoint) { batch =>
+      addShardDocs(batch.sparkSession, d,
+        batch.select(col("doc_id"), col("text")), curated)
+    }
 
   /** The lake's sequence read face: `(doc_id, n_tokens, token_ids)`
     * over base ∪ latest generation ∪ unconsumed delta segments — what

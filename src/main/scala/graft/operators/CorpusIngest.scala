@@ -114,13 +114,8 @@ final class CorpusIngest(tuning: Tuning) extends Serializable {
     val cols = Seq(col("doc_id"), col("text")) ++
       (if (stream.columns.contains("embedding")) Seq(col("embedding"))
        else Nil)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch.sparkSession, d, batch.select(cols: _*), redact)
-        ()
-      }
-      .start()
+    ArtifactLake.ingest(stream, checkpoint) { batch =>
+      ingestBatch(batch.sparkSession, d, batch.select(cols: _*), redact)
+    }
   }
 }

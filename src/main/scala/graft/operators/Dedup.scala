@@ -1017,8 +1017,8 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     *
     *   `deltas/add-<content key>/{bands, docs, sig}`
     *
-    * (content key = the DataFrame overload's order-independent
-    * `bit_xor(xxhash64)` digest; pre-r9 Seq-shaped segments used
+    * (content key = the DataFrame overload's order-independent row-hash
+    * digest, [[ArtifactLake.dmlAdd]]; pre-r9 Seq-shaped segments used
     * `md5(sorted batch)` — see the upgrade note below).
     *
     * [[ArtifactLake.ensure]] semantics as [[Similarity.addVectors]]:
@@ -1152,8 +1152,8 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     * overload (which delegates here) with no driver materialization:
     * the content key is one distributed order-independent digest
     * (`bit_xor`-combined `xxhash64` row hashes + cardinality + id
-    * envelope, one aggregate job), the id guard joins the live band
-    * table instead of collecting ids, the signing is the shared
+    * envelope, one aggregate job), the id guard joins the live docs
+    * chain instead of collecting ids, the signing is the shared
     * compiled shingling/simhash over executors, and the segment writes
     * land distributed (`ceil(n / 64k)` files, capped at 64). Driver
     * memory held: one stats row and at most eight conflicting ids.
@@ -1166,75 +1166,27 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     val norm = docs.selectExpr(
         "cast(doc_id as bigint) as doc_id", "cast(text as string) as text")
       .filter("text is not null")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val st = norm.selectExpr(
-        "count(1) as cnt", "count(distinct doc_id) as dcnt",
-        "min(doc_id) as lo", "max(doc_id) as hi",
-        "bit_xor(xxhash64(doc_id, text)) as h1",
-        "bit_xor(xxhash64(text, doc_id)) as h2").head()
-      val cnt = st.getAs[Long]("cnt")
-      if (cnt == 0L) return false
-      require(st.getAs[Long]("dcnt") == cnt,
-        "addDocs: duplicate doc_id within the batch")
-      val (lo, hi) = (st.getAs[Long]("lo"), st.getAs[Long]("hi"))
-      val key = f"${st.getAs[Long]("h1")}%016x${st.getAs[Long]("h2")}%016x"
-      // epoch-salt a name a generation already consumed; replay-vs-
-      // genuine-re-add is decided by id liveness below
-      // ([[Similarity.addVectors]])
-      val v = ArtifactLake.deltaView(sigPath(d))
-      val name = v.segmentName("add", key)
-      val folded = name != s"add-$key"
-      val target = new java.io.File(s"${sigPath(d)}/deltas/$name")
-      // retry no-op BEFORE the id guard (an at-least-once re-send carries
-      // already-indexed ids by definition — [[Similarity.addVectors]])
-      if (new java.io.File(target, "_SUCCESS").isFile) return false
-      // the [min, max] envelope is a pushable superset predicate: parquet
-      // row-group stats prune the corpus-sized scan to nothing in the
-      // common fresh-ids case. Liveness basis is the DOCS chain, not
-      // bands or sig: every stored document owns a docs row by
-      // construction, while a zero-shingle doc (text shorter than one
-      // shingle) has no bands row and a zero-token doc no sig row —
-      // under those bases its id would be silently re-addable,
-      // yielding duplicate doc_id rows in the lake.
-      val takenBase = liveDocs(s, d, v)
-        .filter($"doc_id".between(lo, hi)).select($"doc_id")
-      val takenAll = ArtifactLake.liveTombstones(s, v)
-        .fold(takenBase)(takenBase.unionByName(_))
-      val idsDf = norm.select($"doc_id")
-      // broadcast only clearly-small batches; beyond ~1M ids a forced
-      // broadcast costs real driver heap and risks the broadcast
-      // timeout — AQE picks the strategy from actual sizes instead
-      val probe = if (cnt <= 1000000L) broadcast(idsDf) else idsDf
-      val dupDf = takenAll.join(probe, "doc_id").select($"doc_id").distinct()
-      // replay of folded-and-fully-live content no-ops; folded-and-
-      // tombstoned-away content is a genuine re-add
-      if (folded && dupDf.count() == cnt) return false
-      val taken = dupDf.orderBy($"doc_id").limit(8).as[Long].collect()
-      require(taken.isEmpty,
-        s"addDocs: ids already indexed: ${taken.mkString(", ")}")
-      val nFiles = math.min(64L, math.max(1L, (cnt + 65535L) / 65536L)).toInt
-      val installed = ArtifactLake.ensure(target) { staging =>
-        val out = staging.getAbsolutePath
-        val ds = norm.repartition(nFiles).as[(Long, String)]
-        bandedKeys(shinglePostingsOf(ds))
-          .write.mode("overwrite").parquet(s"$out/bands")
-        // the segment's (positive) bucket-ledger partial, off the
-        // just-written bands — additive across id-disjoint layers
-        s.read.parquet(s"$out/bands")
-          .groupBy($"band_key").agg(count(lit(1)).as("cnt"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$out/band_stats")
-        ds.toDF("doc_id", "text")
-          .write.mode("overwrite").parquet(s"$out/docs")
-        simhashSigOf(ds.toDF("doc_id", "text"))
-          .write.mode("overwrite").parquet(s"$out/sig")
-      }
-      if (installed) {
-        Dedup.sigAdds.incrementAndGet()
-        ArtifactLake.maybeCompact(sigPath(d), tuning.storeMaxSegments)(compact(s, d))
-      }
-      installed
-    } finally norm.unpersist()
+    // held ids: the DOCS chain, not bands or sig. Every stored document
+    // owns a docs row by construction, while a zero-shingle doc (text
+    // shorter than one shingle) has no bands row and a zero-token doc
+    // no sig row; under those bases its id would be silently
+    // re-addable, yielding duplicate doc_id rows in the lake.
+    ArtifactLake.dmlAdd(s, sigPath(d), norm, "addDocs",
+        ("doc_id, text", "text, doc_id"), tuning.storeMaxSegments, Dedup.sigAdds)(
+      liveDocs(s, d, _))({ (b, out) =>
+      val ds = b.rows.repartition(b.files).as[(Long, String)]
+      bandedKeys(shinglePostingsOf(ds))
+        .write.mode("overwrite").parquet(s"$out/bands")
+      // the segment's (positive) bucket-ledger partial, off the
+      // just-written bands — additive across id-disjoint layers
+      s.read.parquet(s"$out/bands")
+        .groupBy($"band_key").agg(count(lit(1)).as("cnt"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/band_stats")
+      ds.toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$out/docs")
+      simhashSigOf(ds.toDF("doc_id", "text"))
+        .write.mode("overwrite").parquet(s"$out/sig")
+    })(() => { compact(s, d); () })
   }
 
   /** Retire documents from serving via one immutable, content-keyed
@@ -1255,50 +1207,19 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     */
   def removeDocs(s: SparkSession, d: String, ids: DataFrame): Boolean = synchronized {
     ensureSigIndex(s, d)
-    val norm = ids.selectExpr("cast(doc_id as bigint) as doc_id")
-      .filter("doc_id is not null").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val st = norm.selectExpr(
-        "count(1) as cnt",
-        "min(doc_id) as lo", "max(doc_id) as hi",
-        "bit_xor(xxhash64(doc_id)) as h1",
-        "bit_xor(xxhash64(doc_id, doc_id)) as h2").head()
-      val cnt = st.getAs[Long]("cnt")
-      if (cnt == 0L) return false
-      val (lo, hi) = (st.getAs[Long]("lo"), st.getAs[Long]("hi"))
-      val key = f"${st.getAs[Long]("h1")}%016x${st.getAs[Long]("h2")}%016x"
-      // epoch-salt when a generation consumed this tombstone: an id
-      // re-added after its compact must be removable again
-      val v = ArtifactLake.deltaView(sigPath(d))
-      val target = new java.io.File(
-        s"${sigPath(d)}/deltas/${v.segmentName("del", key)}")
-      if (new java.io.File(target, "_SUCCESS").isFile) return false
-      val nFiles = math.min(64L, math.max(1L, (cnt + 65535L) / 65536L)).toInt
-      val installed = ArtifactLake.ensure(target) { staging =>
-        norm.repartition(nFiles)
-          .write.mode("overwrite")
-          .parquet(s"${staging.getAbsolutePath}/ids")
-        // the NEGATIVE bucket-ledger partial: how many band rows this
-        // tombstone batch kills, measured against the LIVE view at
-        // write time (which already excludes earlier tombstones — an
-        // id can never be subtracted twice). Envelope-pruned band scan
-        // + batch-sized semi-join: a WRITE-path cost, so every serve
-        // keeps reading only the pre-aggregated ledgers.
-        liveBands(s, d, v)
-          .filter(col("doc_id").between(lo, hi))
-          .join(broadcast(norm), Seq("doc_id"), "left_semi")
-          .groupBy(col("band_key"))
-          .agg((count(lit(1)) * lit(-1L)).as("cnt"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"${staging.getAbsolutePath}/band_stats")
-      }
-      if (installed) {
-        Dedup.sigRemoves.incrementAndGet()
-        ArtifactLake.maybeCompact(sigPath(d), tuning.storeMaxSegments)(compact(s, d))
-      }
-      installed
-    } finally norm.unpersist()
+    ArtifactLake.dmlRemove(s, sigPath(d), ids, "doc_id", "removeDocs",
+        tuning.storeMaxSegments, Dedup.sigRemoves) { (b, out) =>
+      // the NEGATIVE bucket-ledger partial: how many band rows this
+      // tombstone batch kills, measured against the LIVE view at write
+      // time (which already excludes earlier tombstones — an id can
+      // never be subtracted twice). Envelope-pruned band scan +
+      // batch-sized semi-join: a WRITE-path cost, so every serve keeps
+      // reading only the pre-aggregated ledgers.
+      b.within(liveBands(s, d, b.view))
+        .groupBy(col("band_key"))
+        .agg((count(lit(1)) * lit(-1L)).as("cnt"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/band_stats")
+    }(() => { compact(s, d); () })
   }
 
   /** Fold every unconsumed add segment and tombstone into ONE new
@@ -1322,7 +1243,7 @@ final class Dedup(val tuning: Tuning) extends Serializable {
           .map(ArtifactLake.minusTombstones(_, ts, "doc_id"))
       val mergedDocs = foldOf("docs")
       val nLive = mergedDocs.map(_.count()).getOrElse(0L)
-      val nFiles = math.min(64L, math.max(1L, (nLive + 65535L) / 65536L)).toInt
+      val nFiles = ArtifactLake.segmentFiles(nLive)
       if (nLive > 0) {
         mergedDocs.foreach(
           _.repartition(nFiles).write.mode("overwrite").parquet(s"$out/docs"))
@@ -1390,7 +1311,7 @@ final class Dedup(val tuning: Tuning) extends Serializable {
         .reduceOption(_ unionByName _)
         .map(ArtifactLake.minusTombstones(_, ts, "doc_id"))
       val nLive = sigs.count()
-      val nFiles = math.min(64L, math.max(1L, (nLive + 65535L) / 65536L)).toInt
+      val nFiles = ArtifactLake.segmentFiles(nLive)
       if (nLive > 0) {
         bands.repartition(nFiles).write.mode("overwrite").parquet(s"$out/bands")
         sigs.repartition(nFiles).write.mode("overwrite").parquet(s"$out/sig")
@@ -1430,14 +1351,9 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     */
   def ingestStream(d: String, stream: DataFrame, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        addDocs(batch.sparkSession, d, batch.select(col("doc_id"), col("text")))
-        ()
-      }
-      .start()
+    ArtifactLake.ingest(stream, checkpoint) { batch =>
+      addDocs(batch.sparkSession, d, batch.select(col("doc_id"), col("text")))
+    }
 
   /** The signature-lake build itself as an oracle-checked query: dump
     * the STORED band table while the oracle replays the entire

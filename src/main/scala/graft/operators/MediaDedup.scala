@@ -202,15 +202,15 @@ object MediaDedup {
       maxSegments: Int = graft.config.Tuning.current.storeMaxSegments)
       : Boolean = synchronized {
     val p = ensureDhash(s, d)
-    ArtifactLake.dmlAdd(s, p, media, "addMedia", maxSegments, adds,
+    ArtifactLake.dmlAddDocs(s, p, media, "addMedia", maxSegments, adds,
       payloadCol = "blob", payloadType = "binary")(
-      { (norm, root, nFiles) =>
-        val sig = sigOf(norm).localCheckpoint(true)
+      { (b, root) =>
+        val sig = sigOf(b.rows).localCheckpoint(true)
         sig.write.mode("overwrite").parquet(s"$root/sig")
         bandsOf(sig).write.mode("overwrite").parquet(s"$root/bands")
         bandStatsOf(bandsOf(sig)).coalesce(1)
           .write.mode("overwrite").parquet(s"$root/band_stats")
-        norm.select(col("doc_id")).repartition(nFiles)
+        b.rows.select(col("doc_id")).repartition(b.files)
           .write.mode("overwrite").parquet(s"$root/docs")
       })(
       () => { compactDhash(s, d); () })
@@ -223,15 +223,10 @@ object MediaDedup {
     */
   def ingestMediaStream(d: String, stream: DataFrame, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        addMedia(batch.sparkSession, d,
-          batch.select(col("doc_id"), col("blob")))
-        ()
-      }
-      .start()
+    ArtifactLake.ingest(stream, checkpoint) { batch =>
+      addMedia(batch.sparkSession, d,
+        batch.select(col("doc_id"), col("blob")))
+    }
 
   /** Fold the previous generation and every unconsumed segment into
     * ONE new generation — rows are id-disjoint across layers, so the

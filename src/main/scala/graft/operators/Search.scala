@@ -338,18 +338,17 @@ final class Search(tuning: Tuning) {
 
   /** Append a batch of NEW documents (`doc_id` castable to LONG,
     * `text` STRING) to the stored BM25 index as one delta segment.
-    * Returns true iff THIS call installed it. Replays no-op via the
-    * content key (consumed names checked first — a vacuumed segment's
-    * bytes live on in its generation); a different batch claiming
-    * indexed ids fails loudly.
+    * Returns true iff THIS call installed it. Replays no-op
+    * ([[ArtifactLake.dmlAdd]]: an installed content key, or a folded
+    * batch whose ids are all still held — also after a vacuum); a
+    * different batch claiming indexed ids fails loudly.
     */
   def addBm25Docs(s: SparkSession, d: String, docs: DataFrame): Boolean = synchronized {
     graft.functions.GraftFunctions.ensureRegistered(s)
     ensureBm25Index(s, d)
-    ArtifactLake.dmlAdd(s, bm25Path(d), docs, "addBm25Docs",
+    ArtifactLake.dmlAddDocs(s, bm25Path(d), docs, "addBm25Docs",
       tuning.storeMaxSegments, Search.bm25Adds)(
-      (norm, root, nFiles) =>
-        writeBm25Layer(root, bm25DocView(norm), Some(nFiles)))(
+      (b, root) => writeBm25Layer(root, bm25DocView(b.rows), Some(b.files)))(
       () => { compactBm25Index(s, d); () })
   }
 
@@ -360,15 +359,10 @@ final class Search(tuning: Tuning) {
     */
   def ingestBm25Stream(d: String, stream: DataFrame, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        addBm25Docs(batch.sparkSession, d,
-          batch.select(col("doc_id"), col("text")))
-        ()
-      }
-      .start()
+    ArtifactLake.ingest(stream, checkpoint) { batch =>
+      addBm25Docs(batch.sparkSession, d,
+        batch.select(col("doc_id"), col("text")))
+    }
 
   /** Fold the previous generation and every unconsumed BM25 segment
     * into ONE new generation — postings unioned, per-term df partials
@@ -941,10 +935,9 @@ final class Search(tuning: Tuning) {
   def addRunsDocs(s: SparkSession, d: String, docs: DataFrame): Boolean = synchronized {
     graft.functions.GraftFunctions.ensureRegistered(s)
     ensureRunsIndex(s, d)
-    ArtifactLake.dmlAdd(s, runsPath(d), docs, "addRunsDocs",
+    ArtifactLake.dmlAddDocs(s, runsPath(d), docs, "addRunsDocs",
       tuning.storeMaxSegments, Search.runsAdds)(
-      (norm, root, nFiles) =>
-        writeRunsLayer(root, norm, capped = false, Some(nFiles)))(
+      (b, root) => writeRunsLayer(root, b.rows, capped = false, Some(b.files)))(
       () => { compactRunsIndex(s, d); () })
   }
 
@@ -954,15 +947,10 @@ final class Search(tuning: Tuning) {
     */
   def ingestRunsStream(d: String, stream: DataFrame, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        addRunsDocs(batch.sparkSession, d,
-          batch.select(col("doc_id"), col("text")))
-        ()
-      }
-      .start()
+    ArtifactLake.ingest(stream, checkpoint) { batch =>
+      addRunsDocs(batch.sparkSession, d,
+        batch.select(col("doc_id"), col("text")))
+    }
 
   /** Fold generation + unconsumed runs segments into one new
     * generation: postings unioned raw, df partials summed per hash,

@@ -1925,8 +1925,8 @@ final class Similarity(val tuning: Tuning) extends Serializable {
     *
     *   `deltas/add-<content key>/{ivf_assign, pq_res_codes, vectors}`
     *
-    * (content key = the DataFrame overload's order-independent
-    * `bit_xor(xxhash64)` digest; pre-r9 Seq-shaped segments used
+    * (content key = the DataFrame overload's order-independent row-hash
+    * digest, [[ArtifactLake.dmlAdd]]; pre-r9 Seq-shaped segments used
     * `md5(sorted batch)` — the Seq overload still probes that legacy
     * name for replay no-ops).
     *
@@ -2004,113 +2004,51 @@ final class Similarity(val tuning: Tuning) extends Serializable {
         "cast(vec_id as bigint) as vec_id",
         "cast(embedding as array<float>) as embedding")
       .filter("embedding is not null and size(embedding) > 0")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ONE stats pass: cardinality + id envelope + the content key.
-      // xxhash64 covers the full row content (id + every float's bits);
-      // bit_xor is the order-independent combine, so the key is stable
-      // under any partitioning/ordering of the same rows — what a
-      // Structured Streaming replay of the batch needs to no-op. Two
-      // differently-ordered column tuples give two independent 64-bit
-      // halves (xor alone cannot cancel across rows: ids are distinct).
-      val st = norm.selectExpr(
-        "count(1) as cnt", "count(distinct vec_id) as dcnt",
-        "min(vec_id) as lo", "max(vec_id) as hi",
-        "bit_xor(xxhash64(vec_id, embedding)) as h1",
-        "bit_xor(xxhash64(embedding, vec_id)) as h2").head()
-      val cnt = st.getAs[Long]("cnt")
-      if (cnt == 0L) return false
-      require(st.getAs[Long]("dcnt") == cnt,
-        "addVectors: duplicate vec_id within the batch")
-      val (lo, hi) = (st.getAs[Long]("lo"), st.getAs[Long]("hi"))
-      val key = f"${st.getAs[Long]("h1")}%016x${st.getAs[Long]("h2")}%016x"
-      // a CONSUMED same-content segment ([[compact]]) still owns the
-      // plain name on disk, so a post-compact write of this content
-      // needs an epoch-salted name; whether that write is a replay
-      // no-op or a genuine re-add is decided below by id liveness
-      val v = ArtifactLake.deltaView(indexPath(d))
-      val name = v.segmentName("add", key)
-      val folded = name != s"add-$key"
-      val target = new java.io.File(s"${indexPath(d)}/deltas/$name")
-
-      // the retry no-op MUST precede the id guard: an at-least-once
-      // re-send of the same batch carries already-indexed ids by
-      // definition — its content key finds the installed segment and
-      // returns quietly. Only a DIFFERENT batch claiming taken ids is a
-      // conflict worth failing loudly.
-      if (new java.io.File(target, "_SUCCESS").isFile) return false
-      // the [min, max] envelope of the batch is a pushable superset
-      // predicate: parquet row-group stats prune the corpus-sized
-      // assignment scan to NOTHING in the common fresh-ids ingest case.
-      // Tombstoned ids count as taken ([[removeVectors]] — retirement
-      // is permanent without compaction).
-      val takenBase = ArtifactLake.withLayers(s, v, probedDF(s, d),
-          "ivf_assign", baseReplacesRoot = true)
-        .filter($"rk" === 1 && $"vec_id".between(lo, hi))
-        .select($"vec_id")
-      val takenAll = ArtifactLake.liveTombstones(s, v)
-        .fold(takenBase)(takenBase.unionByName(_))
-      val idsDf = norm.select($"vec_id")
-      // broadcast only clearly-small batches; beyond ~1M ids a forced
-      // broadcast costs real driver heap and risks the broadcast
-      // timeout — AQE picks the strategy from actual sizes instead
-      val probe = if (cnt <= 1000000L) broadcast(idsDf) else idsDf
-      val dupDf = takenAll.join(probe, "vec_id").select($"vec_id").distinct()
-      // a replay of content a generation folded AND kept fully live is
-      // the at-least-once no-op; folded-and-tombstoned-away content is
-      // a genuine re-add (all its ids are free again post-compact)
-      if (folded && dupDf.count() == cnt) return false
-      val dup = dupDf.orderBy($"vec_id").limit(8).as[Long].collect()
-      require(dup.isEmpty,
-        s"addVectors: ids already indexed: ${dup.mkString(", ")}")
-
+    // the key's xxhash64 covers the full row content (id + every
+    // float's bits); held ids are the live home-cell assignments
+    ArtifactLake.dmlAdd(s, indexPath(d), norm, "addVectors",
+        ("vec_id, embedding", "embedding, vec_id"),
+        tuning.storeMaxSegments, Similarity.indexAdds)(v =>
+      ArtifactLake.withLayers(s, v, probedDF(s, d), "ivf_assign",
+        baseReplacesRoot = true).filter($"rk" === 1))({ (b, out) =>
       val cb = loadIvfCodebook(s, d)
       val bySub = pqBySub(loadResPqCodebook(s, d))
       val subDim = tuning.pqSubDim
       val nprobe = tuning.nprobe
-      val nFiles = math.min(64L, math.max(1L, (cnt + 65535L) / 65536L)).toInt
-      val installed = ArtifactLake.ensure(target) { staging =>
-        val out = staging.getAbsolutePath
-        val ds = norm.repartition(nFiles).as[(Long, Array[Float])]
-        val bcCb = s.sparkContext.broadcast(cb)
-        val bcPq = s.sparkContext.broadcast(bySub)
-        ds.mapPartitions { it =>
-          val cells = bcCb.value
-          it.flatMap { case (id, vf) =>
-            Similarity.nearestCells(vf.map(_.toDouble), cells, nprobe)
-              .iterator.map { case (cid, rk) => (id, cid, rk) }
-          }
-        }.toDF("vec_id", "cell", "rk")
-          .write.mode("overwrite").parquet(s"$out/ivf_assign")
-        // RESIDUAL codes — encoded exactly like the base build: the
-        // vector's displacement from its home-cell centroid, against the
-        // frozen residual codebook
-        ds.mapPartitions { it =>
-          val cells = bcCb.value
-          val byId = cells.toMap
-          val bs = bcPq.value
-          it.flatMap { case (id, vf) =>
-            val v = vf.map(_.toDouble)
-            val home = Similarity.nearestCells(v, cells, 1).head._1
-            val c = byId(home)
-            val rv = Array.tabulate(v.length)(i =>
-              v(i) - (if (i < c.length) c(i) else 0.0))
-            val asg = pqNearest(rv, bs, subDim)
-            val nSubs = math.min(bs.length, (rv.length + subDim - 1) / subDim)
-            (0 until nSubs).iterator.filter(i => asg(i) >= 0)
-              .map(i => (id, i, asg(i)))
-          }
-        }.toDF("n_id", "sub", "cent")
-          .write.mode("overwrite").parquet(s"$out/pq_res_codes")
-        ds.toDF("vec_id", "embedding")
-          .write.mode("overwrite").parquet(s"$out/vectors")
-      }
-      if (installed) {
-        Similarity.indexAdds.incrementAndGet()
-        ArtifactLake.maybeCompact(indexPath(d), tuning.storeMaxSegments)(compact(s, d))
-      }
-      installed
-    } finally norm.unpersist()
+      val ds = b.rows.repartition(b.files).as[(Long, Array[Float])]
+      val bcCb = s.sparkContext.broadcast(cb)
+      val bcPq = s.sparkContext.broadcast(bySub)
+      ds.mapPartitions { it =>
+        val cells = bcCb.value
+        it.flatMap { case (id, vf) =>
+          Similarity.nearestCells(vf.map(_.toDouble), cells, nprobe)
+            .iterator.map { case (cid, rk) => (id, cid, rk) }
+        }
+      }.toDF("vec_id", "cell", "rk")
+        .write.mode("overwrite").parquet(s"$out/ivf_assign")
+      // RESIDUAL codes — encoded exactly like the base build: the
+      // vector's displacement from its home-cell centroid, against the
+      // frozen residual codebook
+      ds.mapPartitions { it =>
+        val cells = bcCb.value
+        val byId = cells.toMap
+        val bs = bcPq.value
+        it.flatMap { case (id, vf) =>
+          val v = vf.map(_.toDouble)
+          val home = Similarity.nearestCells(v, cells, 1).head._1
+          val c = byId(home)
+          val rv = Array.tabulate(v.length)(i =>
+            v(i) - (if (i < c.length) c(i) else 0.0))
+          val asg = pqNearest(rv, bs, subDim)
+          val nSubs = math.min(bs.length, (rv.length + subDim - 1) / subDim)
+          (0 until nSubs).iterator.filter(i => asg(i) >= 0)
+            .map(i => (id, i, asg(i)))
+        }
+      }.toDF("n_id", "sub", "cent")
+        .write.mode("overwrite").parquet(s"$out/pq_res_codes")
+      ds.toDF("vec_id", "embedding")
+        .write.mode("overwrite").parquet(s"$out/vectors")
+    })(() => { compact(s, d); () })
   }
 
   /** FAISS-style `remove_ids()`: retire ids via one immutable,
@@ -2144,35 +2082,9 @@ final class Similarity(val tuning: Tuning) extends Serializable {
     */
   def removeVectors(s: SparkSession, d: String, ids: DataFrame): Boolean = synchronized {
     ensureIndex(s, d)
-    val norm = ids.selectExpr("cast(vec_id as bigint) as vec_id")
-      .filter("vec_id is not null").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val st = norm.selectExpr(
-        "count(1) as cnt",
-        "bit_xor(xxhash64(vec_id)) as h1",
-        "bit_xor(xxhash64(vec_id, vec_id)) as h2").head()
-      val cnt = st.getAs[Long]("cnt")
-      if (cnt == 0L) return false
-      val key = f"${st.getAs[Long]("h1")}%016x${st.getAs[Long]("h2")}%016x"
-      // epoch-salt when a generation consumed this id set's tombstone:
-      // an id re-added after its compact must be removable again
-      val v = ArtifactLake.deltaView(indexPath(d))
-      val target = new java.io.File(
-        s"${indexPath(d)}/deltas/${v.segmentName("del", key)}")
-      if (new java.io.File(target, "_SUCCESS").isFile) return false
-      val nFiles = math.min(64L, math.max(1L, (cnt + 65535L) / 65536L)).toInt
-      val installed = ArtifactLake.ensure(target) { staging =>
-        norm.repartition(nFiles)
-          .write.mode("overwrite")
-          .parquet(s"${staging.getAbsolutePath}/ids")
-      }
-      if (installed) {
-        Similarity.indexRemoves.incrementAndGet()
-        ArtifactLake.maybeCompact(indexPath(d), tuning.storeMaxSegments)(compact(s, d))
-      }
-      installed
-    } finally norm.unpersist()
+    ArtifactLake.dmlRemove(s, indexPath(d), ids, "vec_id", "removeVectors",
+        tuning.storeMaxSegments, Similarity.indexRemoves)((_, _) => ())(
+      () => { compact(s, d); () })
   }
 
   /** Fold every unconsumed delta segment and tombstone into ONE new
@@ -2204,7 +2116,7 @@ final class Similarity(val tuning: Tuning) extends Serializable {
           .map(ArtifactLake.minusTombstones(_, ts, idCol))
       val mergedAssign = foldOf("ivf_assign", "vec_id")
       val nLive = mergedAssign.map(_.filter($"rk" === 1).count()).getOrElse(0L)
-      val nFiles = math.min(64L, math.max(1L, (nLive + 65535L) / 65536L)).toInt
+      val nFiles = ArtifactLake.segmentFiles(nLive)
       if (nLive > 0) {
         mergedAssign.foreach(
           _.repartition(nFiles).write.mode("overwrite").parquet(s"$out/ivf_assign"))
@@ -2274,7 +2186,7 @@ final class Similarity(val tuning: Tuning) extends Serializable {
           Seq("vec_id"), "left_semi")
         .distinct())
       val nLive = assign.filter($"rk" === 1).count()
-      val nFiles = math.min(64L, math.max(1L, (nLive + 65535L) / 65536L)).toInt
+      val nFiles = ArtifactLake.segmentFiles(nLive)
       if (nLive > 0) {
         assign.repartition(nFiles).write.mode("overwrite").parquet(s"$out/ivf_assign")
         codes.repartition(nFiles).write.mode("overwrite").parquet(s"$out/pq_res_codes")
@@ -2326,14 +2238,9 @@ final class Similarity(val tuning: Tuning) extends Serializable {
     */
   def ingestStream(d: String, stream: DataFrame, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        addVectors(batch.sparkSession, d, batch.select(col("vec_id"), col("embedding")))
-        ()
-      }
-      .start()
+    ArtifactLake.ingest(stream, checkpoint) { batch =>
+      addVectors(batch.sparkSession, d, batch.select(col("vec_id"), col("embedding")))
+    }
 
   private val q47 = Q(
     "q47_embedding_pq",

@@ -848,35 +848,34 @@ final class TextOps(tuning: graft.config.Tuning) {
     * `deltas/add-<key>`; counts are ADDITIVE across id-disjoint
     * layers, so a served score after DML equals a from-scratch LM
     * over corpus ∪ batches (LmDmlSpec pins collect-equality). Returns
-    * true iff THIS call installed the segment; replays no-op via the
-    * content key (consumed names first — a vacuumed segment's bytes
-    * live on in its generation); a different batch claiming held ids
-    * fails loudly; auto-folds past
+    * true iff THIS call installed the segment; replays no-op
+    * ([[ArtifactLake.dmlAdd]], also after a fold and a vacuum); a
+    * different batch claiming held ids fails loudly; auto-folds past
     * [[graft.config.Tuning.storeMaxSegments]].
     */
   def addLmDocs(s: org.apache.spark.sql.SparkSession, d: String,
       docs: org.apache.spark.sql.DataFrame): Boolean = synchronized {
     graft.functions.GraftFunctions.ensureRegistered(s)
     val p = ensureLm(s, d)
-    ArtifactLake.dmlAdd(s, p, docs, "addLmDocs",
+    ArtifactLake.dmlAddDocs(s, p, docs, "addLmDocs",
       tuning.storeMaxSegments, TextOps.lmAdds)(
-      { (norm, root, nFiles) =>
-        val cnts = norm.select(explode(expr(toksExpr)).as("tok"))
+      { (b, root) =>
+        val cnts = b.rows.select(explode(expr(toksExpr)).as("tok"))
           .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
           .localCheckpoint(true) // two consumers: counts + totals
         cnts.coalesce(1).write.mode("overwrite").parquet(s"$root/counts")
         cnts.agg(coalesce(sum(col("cnt")), lit(0L)).as("total_tokens"),
             count(lit(1)).as("vocab"))
           .coalesce(1).write.mode("overwrite").parquet(s"$root/totals")
-        writeBigrams(bigramCounts(norm.select(col("text"))),
+        writeBigrams(bigramCounts(b.rows.select(col("text"))),
           s"$root/bigrams")
-        writeTrigrams(trigramCounts(norm.select(col("text"))),
+        writeTrigrams(trigramCounts(b.rows.select(col("text"))),
           s"$root/trigrams")
-        writeFourgrams(fourgramCounts(norm.select(col("text"))),
+        writeFourgrams(fourgramCounts(b.rows.select(col("text"))),
           s"$root/fourgrams")
-        writeFivegrams(fivegramCounts(norm.select(col("text"))),
+        writeFivegrams(fivegramCounts(b.rows.select(col("text"))),
           s"$root/fivegrams")
-        norm.select(col("doc_id")).repartition(nFiles)
+        b.rows.select(col("doc_id")).repartition(b.files)
           .write.mode("overwrite").parquet(s"$root/docs")
       })(
       () => { compactLm(s, d); () })
@@ -890,15 +889,10 @@ final class TextOps(tuning: graft.config.Tuning) {
   def ingestLmStream(d: String, stream: org.apache.spark.sql.DataFrame,
       checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        addLmDocs(batch.sparkSession, d,
-          batch.select(col("doc_id"), col("text")))
-        ()
-      }
-      .start()
+    ArtifactLake.ingest(stream, checkpoint) { batch =>
+      addLmDocs(batch.sparkSession, d,
+        batch.select(col("doc_id"), col("text")))
+    }
 
   /** Fold the previous generation and every unconsumed LM segment into
     * ONE new generation — counts summed by token, totals re-derived

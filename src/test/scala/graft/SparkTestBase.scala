@@ -16,6 +16,15 @@ trait SparkTestBase extends AnyFunSuite {
 
   def sc = spark.sparkContext
 
+  /** Run `body` with a fresh `prefix`-named dir in the JVM temp dir
+    * (a corpus, a checkpoint), then delete the dir.
+    */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString)
+    finally { org.apache.commons.io.FileUtils.deleteQuietly(dir); () }
+  }
+
   /** Run `body` with `graft.index.dir` pointed at a fresh store root in
     * the JVM temp dir, then restore the property and delete the root.
     * Operators read the property once per instance (a lazy root), so

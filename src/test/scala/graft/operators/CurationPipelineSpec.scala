@@ -29,76 +29,77 @@ class CurationPipelineSpec extends SparkTestBase {
 
   test("stream -> funnel gates -> lake DML -> keeper manifest over the live view") {
     withTempRoot {
-      import spark.implicits._
-      val dd = new Dedup(Tuning())
-      dd.ensureSigIndex(spark, sf)
-      val baseLive = dd.liveSignatures(spark, sf).count()
+      withTempDir("graft-curation") { tmp =>
+        import spark.implicits._
+        val dd = new Dedup(Tuning())
+        dd.ensureSigIndex(spark, sf)
+        val baseLive = dd.liveSignatures(spark, sf).count()
 
-      // the gates, asserted doc-for-doc on the same transform the
-      // stream runs (curateStream is stateless: batch == streaming)
-      val gates = TextOps.curateStream(Seq(
-          910001L -> good1, 910002L -> good2, 910003L -> spanish,
-          910004L -> lowq, 910005L -> pii).toDF("doc_id", "text"))
-        .collect().map(r => r.getAs[Long]("doc_id") ->
-          (r.getAs[Boolean]("kept"), r.getAs[String]("pred"),
-            r.getAs[Int]("n_pii"))).toMap
-      assert(gates(910001L)._1 && gates(910002L)._1, "good docs must pass")
-      assert(!gates(910003L)._1 && gates(910003L)._2 == "es", "language gate")
-      assert(!gates(910004L)._1, "quality/repetition gate")
-      assert(!gates(910005L)._1 && gates(910005L)._3 > 0, "PII gate")
+        // the gates, asserted doc-for-doc on the same transform the
+        // stream runs (curateStream is stateless: batch == streaming)
+        val gates = TextOps.curateStream(Seq(
+            910001L -> good1, 910002L -> good2, 910003L -> spanish,
+            910004L -> lowq, 910005L -> pii).toDF("doc_id", "text"))
+          .collect().map(r => r.getAs[Long]("doc_id") ->
+            (r.getAs[Boolean]("kept"), r.getAs[String]("pred"),
+              r.getAs[Int]("n_pii"))).toMap
+        assert(gates(910001L)._1 && gates(910002L)._1, "good docs must pass")
+        assert(!gates(910003L)._1 && gates(910003L)._2 == "es", "language gate")
+        assert(!gates(910004L)._1, "quality/repetition gate")
+        assert(!gates(910005L)._1 && gates(910005L)._3 > 0, "PII gate")
 
-      // the composed stream: MemoryStream -> gates -> DML ingest
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val mem = MemoryStream[(Long, String)]
-      val curated = TextOps.curateStream(mem.toDF().toDF("doc_id", "text"))
-        .filter($"kept").select($"doc_id", $"text")
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-curation-ckpt").toString
-      val q = dd.ingestStream(sf, curated, ckpt)
-      try {
-        mem.addData(910001L -> good1, 910003L -> spanish, 910004L -> lowq)
-        q.processAllAvailable()
-        mem.addData(910002L -> good2, 910005L -> pii)
-        q.processAllAvailable()
-      } finally q.stop()
+        // the composed stream: MemoryStream -> gates -> DML ingest
+        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+        implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+        val mem = MemoryStream[(Long, String)]
+        val curated = TextOps.curateStream(mem.toDF().toDF("doc_id", "text"))
+          .filter($"kept").select($"doc_id", $"text")
+        val ckpt = s"$tmp/ckpt"
+        val q = dd.ingestStream(sf, curated, ckpt)
+        try {
+          mem.addData(910001L -> good1, 910003L -> spanish, 910004L -> lowq)
+          q.processAllAvailable()
+          mem.addData(910002L -> good2, 910005L -> pii)
+          q.processAllAvailable()
+        } finally q.stop()
 
-      // exactly the two survivors landed, one segment per non-empty batch
-      val stats = dd.storeStats(spark, sf).head()
-      assert(stats.getAs[Long]("unconsumed_adds") == 2L)
-      assert(stats.getAs[Long]("live_rows") == baseLive + 2)
+        // exactly the two survivors landed, one segment per non-empty batch
+        val stats = dd.storeStats(spark, sf).head()
+        assert(stats.getAs[Long]("unconsumed_adds") == 2L)
+        assert(stats.getAs[Long]("live_rows") == baseLive + 2)
 
-      // effectively-once: replaying a committed batch is a no-op
-      // (content-keyed install), not a duplicate segment
-      assert(!dd.addDocs(spark, sf, Seq(910002L -> good2).toDF("doc_id", "text")),
-        "replayed batch installed a second segment")
-      assert(dd.storeStats(spark, sf).head().getAs[Long]("unconsumed_adds") == 2L)
+        // effectively-once: replaying a committed batch is a no-op
+        // (content-keyed install), not a duplicate segment
+        assert(!dd.addDocs(spark, sf, Seq(910002L -> good2).toDF("doc_id", "text")),
+          "replayed batch installed a second segment")
+        assert(dd.storeStats(spark, sf).head().getAs[Long]("unconsumed_adds") == 2L)
 
-      // keeper manifest over what the live lake SERVES: probe the
-      // survivors, cluster the verified near-dup edges (q38's
-      // machinery), pick per-cluster keepers by q81's max-struct rule
-      val served = dd.serveNearDups(spark, sf,
-        Seq(910001L -> good1, 910002L -> good2))
-      val edges = served.filter($"jaccard" >= Tuning().ccEdgeJaccard)
-        .select(least($"probe_id", $"match_id").as("a_id"),
-          greatest($"probe_id", $"match_id").as("b_id"))
-        .distinct()
-      assert(edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        == Set((910001L, 910002L)), "the near-dup pair must be served as an edge")
-      val comp = Dedup.components(edges)
-      val scores = TextOps.curateStream(Seq(
-          910001L -> good1, 910002L -> good2).toDF("doc_id", "text"))
-        .select($"doc_id", $"score")
-      val manifest = comp.join(scores, "doc_id")
-        .groupBy($"component")
-        .agg(max(struct($"score", (lit(0L) - $"doc_id").as("nid"),
-          $"doc_id".as("kid"))).as("k"), max($"n_members").as("n_members"))
-        .select($"component", $"k.kid".as("keeper_id"), $"n_members")
-        .collect()
-      assert(manifest.length == 1)
-      assert(manifest(0).getAs[Long]("keeper_id") == 910001L,
-        "equal-score tie must keep the lower doc_id")
-      assert(manifest(0).getAs[Long]("n_members") == 2L)
+        // keeper manifest over what the live lake SERVES: probe the
+        // survivors, cluster the verified near-dup edges (q38's
+        // machinery), pick per-cluster keepers by q81's max-struct rule
+        val served = dd.serveNearDups(spark, sf,
+          Seq(910001L -> good1, 910002L -> good2))
+        val edges = served.filter($"jaccard" >= Tuning().ccEdgeJaccard)
+          .select(least($"probe_id", $"match_id").as("a_id"),
+            greatest($"probe_id", $"match_id").as("b_id"))
+          .distinct()
+        assert(edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+          == Set((910001L, 910002L)), "the near-dup pair must be served as an edge")
+        val comp = Dedup.components(edges)
+        val scores = TextOps.curateStream(Seq(
+            910001L -> good1, 910002L -> good2).toDF("doc_id", "text"))
+          .select($"doc_id", $"score")
+        val manifest = comp.join(scores, "doc_id")
+          .groupBy($"component")
+          .agg(max(struct($"score", (lit(0L) - $"doc_id").as("nid"),
+            $"doc_id".as("kid"))).as("k"), max($"n_members").as("n_members"))
+          .select($"component", $"k.kid".as("keeper_id"), $"n_members")
+          .collect()
+        assert(manifest.length == 1)
+        assert(manifest(0).getAs[Long]("keeper_id") == 910001L,
+          "equal-score tie must keep the lower doc_id")
+        assert(manifest(0).getAs[Long]("n_members") == 2L)
+      }
     }
   }
 

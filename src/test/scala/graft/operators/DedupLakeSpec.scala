@@ -256,40 +256,89 @@ class DedupLakeSpec extends SparkTestBase {
 
   test("regenerated corpus data re-keys the artifact (no stale bands served)") {
     val d1 = new Dedup(knobs)
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-fp").toFile
-    val table = new java.io.File(dir, "documents.parquet")
-    table.mkdirs()
-    val part = new java.io.File(table, "part-0.parquet")
-    java.nio.file.Files.writeString(part.toPath, "v1-bytes")
-    val p1 = d1.sigPath(dir.getAbsolutePath)
-    assert(d1.sigPath(dir.getAbsolutePath) == p1)
-    java.nio.file.Files.writeString(part.toPath, "v2-bytes-longer")
-    part.setLastModified(part.lastModified() + 5000)
-    assert(d1.sigPath(dir.getAbsolutePath) != p1,
-      "data change did not re-key the stored bands")
+    withTempDir("graft-dedup-fp") { dir =>
+      val table = new java.io.File(dir, "documents.parquet")
+      table.mkdirs()
+      val part = new java.io.File(table, "part-0.parquet")
+      java.nio.file.Files.writeString(part.toPath, "v1-bytes")
+      val p1 = d1.sigPath(dir)
+      assert(d1.sigPath(dir) == p1)
+      java.nio.file.Files.writeString(part.toPath, "v2-bytes-longer")
+      part.setLastModified(part.lastModified() + 5000)
+      assert(d1.sigPath(dir) != p1,
+        "data change did not re-key the stored bands")
+    }
   }
 
   test("streaming document ingest installs one idempotent segment per batch") {
     withTempRoot {
-      val d1 = new Dedup(knobs)
-      d1.ensureSigIndex(spark, sf)
-      val texts = docText
-      val src = texts.keys.min
+      withTempDir("graft-dedup") { tmp =>
+        val d1 = new Dedup(knobs)
+        d1.ensureSigIndex(spark, sf)
+        val texts = docText
+        val src = texts.keys.min
 
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import spark.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val mem = MemoryStream[(Long, String)]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-dedup-ingest").toString
-      val q = d1.ingestStream(sf,
-        mem.toDF().toDF("doc_id", "text"), ckpt)
+        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+        import spark.implicits._
+        implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+        val mem = MemoryStream[(Long, String)]
+        val ckpt = s"$tmp/ckpt"
+        val q = d1.ingestStream(sf,
+          mem.toDF().toDF("doc_id", "text"), ckpt)
+        try {
+          mem.addData(910001L -> texts(src))
+          q.processAllAvailable()
+          val probe = d1.serveNearDups(spark, sf, Seq(777002L -> texts(src)))
+            .collect().map(_.getLong(1)).toSet
+          assert(probe(910001L), "streamed doc not served after its batch committed")
+        } finally q.stop()
+      }
+    }
+  }
+
+  test("the tombstone ledger broadcasts its id probe only for batches of at most 1M ids") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, LogicalPlan, Range, ResolvedHint}
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    // the analyzed plan of each tombstone segment's `band_stats` write
+    val ledgers = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        if (qe.analyzed.exists {
+          case w: InsertIntoHadoopFsRelationCommand =>
+            w.outputPath.getName == "band_stats" &&
+              w.outputPath.getParent.getName.startsWith(".del-")
+          case _ => false
+        }) ledgers.add(qe.analyzed)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    /** Remove `ids` and report whether its ledger write broadcast the
+      * batch (a broadcast hint over the batch's `range` source; a
+      * tombstone anti-join's hint reads parquet and does not count).
+      */
+    def removeBroadcasts(dd: Dedup, ids: org.apache.spark.sql.DataFrame): Boolean = {
+      ledgers.clear()
+      assert(dd.removeDocs(spark, sf, ids))
+      val deadline = System.currentTimeMillis() + 60000
+      while (ledgers.isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(100) // listener bus is async
+      assert(ledgers.size == 1)
+      ledgers.peek().exists {
+        case h: ResolvedHint =>
+          h.hints.strategy.contains(BROADCAST) && h.child.exists(_.isInstanceOf[Range])
+        case _ => false
+      }
+    }
+    withTempRoot {
+      val dd = new Dedup(knobs)
+      dd.ensureSigIndex(spark, sf)
+      spark.listenerManager.register(listener)
       try {
-        mem.addData(910001L -> texts(src))
-        q.processAllAvailable()
-        val probe = d1.serveNearDups(spark, sf, Seq(777002L -> texts(src)))
-          .collect().map(_.getLong(1)).toSet
-        assert(probe(910001L), "streamed doc not served after its batch committed")
-      } finally q.stop()
+        assert(removeBroadcasts(dd, spark.range(0L, 10L).toDF("doc_id")))
+        assert(!removeBroadcasts(dd, spark.range(10L, 1000011L).toDF("doc_id")),
+          "a batch of more than 1M ids must not force a broadcast")
+      } finally spark.listenerManager.unregister(listener)
     }
   }
 }

@@ -185,28 +185,29 @@ class ShardDmlSpec extends SparkTestBase {
 
   test("streamed micro-batches land as segments through ingestShardStream") {
     withTempRoot {
-      import spark.implicits._
-      implicit val sqlCtx = spark.sqlContext
-      val bpe = new Bpe(knobs)
-      bpe.ensureShards(spark, sf)
-      val adds0 = Bpe.shardAdds.get()
-      val mem = MemoryStream[(Long, String)]
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-sharddml-ckpt").toString
-      val q = bpe.ingestShardStream(sf,
-        mem.toDF().toDF("doc_id", "text"), ckpt)
-      try {
-        mem.addData(930001L -> "first streamed document body")
-        q.processAllAvailable()
-        mem.addData(930002L -> "second streamed document body",
-          930003L -> "third streamed document body")
-        q.processAllAvailable()
-        assert(Bpe.shardAdds.get() == adds0 + 2,
-          "one segment per non-empty micro-batch")
-        val got = bpe.shardDocSeqs(spark, sf)
-          .filter($"doc_id" >= 930001L).count()
-        assert(got == 3L)
-      } finally q.stop()
+      withTempDir("graft-sharddml") { tmp =>
+        import spark.implicits._
+        implicit val sqlCtx = spark.sqlContext
+        val bpe = new Bpe(knobs)
+        bpe.ensureShards(spark, sf)
+        val adds0 = Bpe.shardAdds.get()
+        val mem = MemoryStream[(Long, String)]
+        val ckpt = s"$tmp/ckpt"
+        val q = bpe.ingestShardStream(sf,
+          mem.toDF().toDF("doc_id", "text"), ckpt)
+        try {
+          mem.addData(930001L -> "first streamed document body")
+          q.processAllAvailable()
+          mem.addData(930002L -> "second streamed document body",
+            930003L -> "third streamed document body")
+          q.processAllAvailable()
+          assert(Bpe.shardAdds.get() == adds0 + 2,
+            "one segment per non-empty micro-batch")
+          val got = bpe.shardDocSeqs(spark, sf)
+            .filter($"doc_id" >= 930001L).count()
+          assert(got == 3L)
+        } finally q.stop()
+      }
     }
   }
 }

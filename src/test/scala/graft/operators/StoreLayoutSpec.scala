@@ -5,7 +5,8 @@ import graft.config.Tuning
 
 /** The on-disk layout of the segment stores, pinned: a fixed DML script
   * (add → remove → compact → add → rebase, or the subset a store
-  * offers) must leave exactly these directory names under the store
+  * offers; the dHash case also replays a folded batch before and after
+  * a vacuum) must leave exactly these directory names under the store
   * root and exactly these `consumed.txt`/`gens.txt` contents. Segment
   * names are content keys and generation/base names hash the consumed
   * set, so the lists pin the whole naming contract: a store written by
@@ -86,6 +87,31 @@ class StoreLayoutSpec extends SparkTestBase {
       val root = bpe.shardsPath(sf)
       assert(dirs(root) == shardDirs, dirs(root).mkString("\n", "\n", ""))
       assert(ledgers(root) == shardLedgers, ledgers(root).toString)
+    }
+  }
+
+  test("dHash lake layout after add, compact, replay, vacuum, replay, add") {
+    withTempRoot {
+      withTempDir("graft-layout-corpus") { dir =>
+        import spark.implicits._
+        import Multimodal.MediaFixtures
+        (0L until 8L).toDF("doc_id")
+          .withColumn("text", org.apache.spark.sql.functions.lit("doc"))
+          .write.parquet(s"$dir/documents.parquet")
+        val a = Seq((960001L, MediaFixtures.jpeg(3L)), (960002L, MediaFixtures.png(2L)))
+          .toDF("doc_id", "blob")
+        assert(MediaDedup.addMedia(spark, dir, a))
+        assert(MediaDedup.compactDhash(spark, dir))
+        // a replay of the folded batch no-ops, before and after vacuum
+        assert(!MediaDedup.addMedia(spark, dir, a))
+        assert(MediaDedup.vacuumDhash(spark, dir) == 1)
+        assert(!MediaDedup.addMedia(spark, dir, a))
+        assert(MediaDedup.addMedia(spark, dir,
+          Seq((960003L, MediaFixtures.ppm(4L))).toDF("doc_id", "blob")))
+        val root = MediaDedup.ensureDhash(spark, dir)
+        assert(dirs(root) == dhashDirs, dirs(root).mkString("\n", "\n", ""))
+        assert(ledgers(root) == dhashLedgers, ledgers(root).toString)
+      }
     }
   }
 
@@ -186,4 +212,24 @@ class StoreLayoutSpec extends SparkTestBase {
   private val shardLedgers = Map(
     "gens/gen-00001-5422289332a2/consumed.txt" ->
       Seq("add-26d58c1a2fc6164e98068a3ad203ad3c", "add-9f8c7364ed2665f6be907908eb7bcc99"))
+  private val dhashDirs = Seq(
+    "band_stats",
+    "bands",
+    "deltas",
+    "deltas/add-e1e2280ae90d60cc1ddf77060c0b9a97",
+    "deltas/add-e1e2280ae90d60cc1ddf77060c0b9a97/band_stats",
+    "deltas/add-e1e2280ae90d60cc1ddf77060c0b9a97/bands",
+    "deltas/add-e1e2280ae90d60cc1ddf77060c0b9a97/docs",
+    "deltas/add-e1e2280ae90d60cc1ddf77060c0b9a97/sig",
+    "docs",
+    "gens",
+    "gens/gen-00001-14b4af7bef9c",
+    "gens/gen-00001-14b4af7bef9c/band_stats",
+    "gens/gen-00001-14b4af7bef9c/bands",
+    "gens/gen-00001-14b4af7bef9c/docs",
+    "gens/gen-00001-14b4af7bef9c/sig",
+    "sig")
+  private val dhashLedgers = Map(
+    "gens/gen-00001-14b4af7bef9c/consumed.txt" ->
+      Seq("add-90d4c3c9e9eb1174e012d931f7bdc121"))
 }
