@@ -431,21 +431,24 @@ private[operators] object ArtifactLake {
     * the key's two `xxhash64` halves — two differently ordered tuples of
     * the row's content, `bit_xor`-combined so any partitioning or order
     * of the same rows gives the same key (xor cannot cancel across rows:
-    * ids are distinct). None for an empty batch; duplicate in-batch ids
-    * fail loudly.
+    * ids are distinct). None for an empty batch. With `checkIds`,
+    * duplicate in-batch ids fail loudly; a caller whose ids are distinct
+    * by construction passes false and saves the distinct count's
+    * exchange.
     */
   private def batchKey(norm: DataFrame, op: String,
-      hashes: (String, String)): Option[(String, Long, Long, Long)] = {
+      hashes: (String, String),
+      checkIds: Boolean): Option[(String, Long, Long, Long)] = {
     val id = norm.columns.head
-    val st = norm.selectExpr(
-      "count(1) as cnt", s"count(distinct $id) as dcnt",
-      s"min($id) as lo", s"max($id) as hi",
+    val st = norm.selectExpr(Seq(
+      "count(1) as cnt", s"min($id) as lo", s"max($id) as hi",
       s"bit_xor(xxhash64(${hashes._1})) as h1",
-      s"bit_xor(xxhash64(${hashes._2})) as h2").head()
+      s"bit_xor(xxhash64(${hashes._2})) as h2") ++
+      (if (checkIds) Seq(s"count(distinct $id) as dcnt") else Nil): _*).head()
     val cnt = st.getAs[Long]("cnt")
     if (cnt == 0L) None
     else {
-      require(st.getAs[Long]("dcnt") == cnt,
+      require(!checkIds || st.getAs[Long]("dcnt") == cnt,
         s"$op: duplicate $id within the batch")
       Some((f"${st.getAs[Long]("h1")}%016x${st.getAs[Long]("h2")}%016x",
         st.getAs[Long]("lo"), st.getAs[Long]("hi"), cnt))
@@ -455,19 +458,24 @@ private[operators] object ArtifactLake {
   /** The segment orchestration behind [[dmlAdd]] and [[dmlRemove]]:
     * persist the batch, derive its content key, name the `kind`
     * segment ([[DeltaView.segmentName]]), no-op when that segment is
-    * installed or `replayed` says so (given the batch and whether a
-    * fold consumed the plain name), install the layer via the staged
-    * rename, bump the store's counter, and auto-fold past
-    * `maxSegments`.
+    * installed, run the id guard when `taken` is given, install the
+    * layer via the staged rename, bump the store's counter, and
+    * auto-fold past `maxSegments`.
+    *
+    * The id guard (adds only; `taken` reads the store's held ids
+    * against the snapshot): a batch whose name a fold consumed (so it
+    * was epoch-salted) and whose ids are all still held or tombstoned
+    * is a replay and no-ops. Otherwise any held or live-tombstoned id
+    * fails loudly via `require`; driver memory held is ≤ 8 ids.
     */
   private def dml(s: SparkSession, p: String, kind: String,
       norm: DataFrame, op: String, hashes: (String, String),
       maxSegments: Int, counter: java.util.concurrent.atomic.AtomicInteger,
-      writeLayer: (DmlBatch, String) => Unit, compact: () => Unit)(
-      replayed: (DmlBatch, Boolean) => Boolean): Boolean = {
+      taken: Option[DeltaView => DataFrame],
+      writeLayer: (DmlBatch, String) => Unit, compact: () => Unit): Boolean = {
     val rows = norm.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      batchKey(rows, op, hashes) match {
+      batchKey(rows, op, hashes, checkIds = taken.isDefined) match {
         case None => false
         case Some((key, lo, hi, cnt)) =>
           val v = deltaView(p)
@@ -475,7 +483,18 @@ private[operators] object ArtifactLake {
           val target = new File(s"$p/deltas/$name")
           if (new File(target, "_SUCCESS").isFile) return false
           val b = DmlBatch(rows, lo, hi, cnt, v)
-          if (replayed(b, name != s"$kind-$key")) return false
+          taken match {
+            case None =>
+            case Some(t) =>
+              import s.implicits._
+              val held = t(v).select(b.idCol)
+              val dup = b.within(liveTombstones(s, v).fold(held)(held.unionByName(_)))
+                .distinct()
+              if (name != s"$kind-$key" && dup.count() == cnt) return false
+              val ids = dup.orderBy(b.idCol).limit(8).as[Long].collect()
+              require(ids.isEmpty,
+                s"$op: ids already indexed (already in the lake): ${ids.mkString(", ")}")
+          }
           val installed = ensure(target)(st => writeLayer(b, st.getAbsolutePath))
           if (installed) {
             counter.incrementAndGet()
@@ -494,7 +513,7 @@ private[operators] object ArtifactLake {
     * batch whose ids are all still live. A folded batch whose ids were
     * tombstoned away is a genuine re-add. Otherwise ids in `taken` (the
     * store's held ids, read against the snapshot) or in a live
-    * tombstone fail loudly; driver memory held is ≤ 8 ids.
+    * tombstone fail loudly.
     */
   private[operators] def dmlAdd(s: SparkSession, p: String,
       norm: DataFrame, op: String, hashes: (String, String),
@@ -502,20 +521,8 @@ private[operators] object ArtifactLake {
       taken: DeltaView => DataFrame)(
       writeLayer: (DmlBatch, String) => Unit)(
       compact: () => Unit): Boolean =
-    dml(s, p, "add", norm, op, hashes, maxSegments, counter,
-        writeLayer, compact) { (b, folded) =>
-      import s.implicits._
-      val held = taken(b.view).select(b.idCol)
-      val dup = b.within(liveTombstones(s, b.view).fold(held)(held.unionByName(_)))
-        .distinct()
-      if (folded && dup.count() == b.cnt) true
-      else {
-        val ids = dup.orderBy(b.idCol).limit(8).as[Long].collect()
-        require(ids.isEmpty,
-          s"$op: ids already indexed (already in the lake): ${ids.mkString(", ")}")
-        false
-      }
-    }
+    dml(s, p, "add", norm, op, hashes, maxSegments, counter, Some(taken),
+      writeLayer, compact)
 
   /** [[dmlAdd]] for the gen+adds stores: `(doc_id, <payloadCol>)` cast
     * to (BIGINT, `payloadType`), a NULL payload hashed through an
@@ -558,10 +565,10 @@ private[operators] object ArtifactLake {
     val norm = ids.selectExpr(s"cast($idCol as bigint) as $idCol")
       .filter(s"$idCol is not null").distinct()
     dml(s, p, "del", norm, op, (idCol, s"$idCol, $idCol"), maxSegments, counter,
-      { (b, root) =>
+      None, { (b, root) =>
         b.rows.repartition(b.files).write.mode("overwrite").parquet(s"$root/ids")
         writeLedger(b, root)
-      }, compact)((_, _) => false)
+      }, compact)
   }
 
   /** Continuous DML: `addBatch` runs on every micro-batch of `stream`

@@ -257,7 +257,8 @@ class CorpusIngestSpec extends SparkTestBase {
 
         def run(data: Seq[(Long, String)]): Unit = {
           val mem = MemoryStream[(Long, String)]
-          val ckpt = s"$tmp/ckpt"
+          val ckpt = java.nio.file.Files
+            .createTempDirectory(java.nio.file.Paths.get(tmp), "ckpt").toString
           val q = ing.ingestAll(dir, mem.toDF().toDF("doc_id", "text"), ckpt)
           try { mem.addData(data: _*); q.processAllAvailable() }
           finally q.stop()
