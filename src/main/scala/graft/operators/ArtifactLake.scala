@@ -23,9 +23,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * compact. Both shapes read one snapshot ([[deltaView]]), fold into
   * `gens/gen-%05d-<key>` ([[compactStore]]), auto-fold past a segment
   * bound ([[maybeCompact]]) and reclaim space with one [[vacuumStore]].
-  * The media fixture ([[Multimodal.MediaLake]]) and the build-once
-  * store roots use [[ensure]] alone. One copy of the
-  * concurrency-sensitive install invariants, bug-fixed in one place:
+  * Before any DML, each store root is installed by the one build-once
+  * path: [[indexRoot]] for the root dir, [[keyedPath]] for the root's
+  * name and [[buildOnce]] for the install and the build counter. The
+  * media fixture ([[Multimodal.MediaLake]]), under [[mediaRoot]], uses
+  * [[ensure]] alone. One copy of the concurrency-sensitive install
+  * invariants, bug-fixed in one place:
   *
   *  - a target dir is COMPLETE iff a top-level `_SUCCESS` exists, and
   *    the marker is the LAST thing written before the rename;
@@ -69,6 +72,58 @@ private[operators] object ArtifactLake {
         throw new java.io.IOException(s"artifact rename failed: $target")
     }
     true
+  }
+
+  // ------------------------------------------------------------------
+  // Build-once store roots. Every store installs its root at
+  // `<root>/<name>-<key>[-<fp>]-v<version>` ([[keyedPath]]) through
+  // [[buildOnce]]. There is no in-memory "ready" memo: each call
+  // re-checks the `_SUCCESS` marker (one stat), so a root deleted
+  // under a live session is rebuilt by the next call.
+  // ------------------------------------------------------------------
+
+  /** The store root: `-Dgraft.index.dir`, default
+    * `<java.io.tmpdir>/graft-index`.
+    */
+  def indexRoot: String =
+    sys.props.getOrElse("graft.index.dir", s"${sys.props("java.io.tmpdir")}/graft-index")
+
+  /** The media fixture's root: `-Dgraft.media.dir`, default
+    * `<java.io.tmpdir>/graft-media`.
+    */
+  def mediaRoot: String =
+    sys.props.getOrElse("graft.media.dir", s"${sys.props("java.io.tmpdir")}/graft-media")
+
+  /** The key text of a store built over source dir `d`:
+    * `<canonical d>:<knobs>`.
+    */
+  def sourceKey(d: String, knobs: String): String =
+    new File(d).getCanonicalPath + ":" + knobs
+
+  /** A store's root path: `<root>/<name>-<first 6 bytes of md5(key),
+    * hex>[-<fp>]-v<version>`. `key` must name everything the stored
+    * bytes depend on, and `fp` (a [[fingerprint]], or "" for none) the
+    * source files they were built from.
+    */
+  def keyedPath(root: String, name: String, key: String, version: Int,
+      fp: String = ""): String = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+    s"$root/$name-$hex${if (fp.isEmpty) "" else s"-$fp"}-v$version"
+  }
+
+  /** The [[fingerprint]] of `d`'s `documents` table. */
+  def docsFingerprint(d: String): String =
+    fingerprint(new File(s"$d/documents.parquet"))
+
+  /** Install store root `p` with `build` unless it is complete on disk
+    * ([[ensure]]), and bump `builds` iff this call built it. Returns
+    * `p`.
+    */
+  def buildOnce(p: String, builds: java.util.concurrent.atomic.AtomicInteger)(
+      build: File => Unit): String = {
+    if (ensure(new File(p))(build)) builds.incrementAndGet()
+    p
   }
 
   def deleteTree(f: File): Unit = {

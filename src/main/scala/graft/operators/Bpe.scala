@@ -590,6 +590,13 @@ final class Bpe(val tuning: Tuning) extends Serializable {
   // ------------------------------------------------------------------
   private val escapeOn = tuning.bpeEscape == 1
 
+  /** The store-key suffix of the tokenization knobs: each splits the
+    * stored bytes, and only an enabled one adds a part, so default keys
+    * are unchanged.
+    */
+  private val knobKey = (if (nfcOn) ":nfc" else "") +
+    (if (escapeOn) ":esc" else "") + (if (pretokOn) ":ptk" else "")
+
   private def escStr(x: String): String = if (escapeOn) Bpe.esc(x) else x
 
   /** A word's initial seg string, Spark side: escape (when on), then
@@ -1082,13 +1089,10 @@ final class Bpe(val tuning: Tuning) extends Serializable {
   /** Bins bundled per shard dir. */
   private val binsPerShard = 64L
 
-  @transient private lazy val shardsRoot: String =
-    sys.props.getOrElse("graft.index.dir",
-      s"${sys.props("java.io.tmpdir")}/graft-index")
+  @transient private lazy val shardsRoot: String = ArtifactLake.indexRoot
 
   private[operators] def shardsPath(d: String): String =
-    shardsPathOf(d, s"$nRounds:$sampleMod:$minFreq:$vocabCap:$ctx" +
-      (if (nfcOn) ":nfc" else "") + (if (escapeOn) ":esc" else "") + (if (pretokOn) ":ptk" else ""))
+    shardsPathOf(d, s"$nRounds:$sampleMod:$minFreq:$vocabCap:$ctx$knobKey")
 
   /** The curated artifact keys on the STRIP-shaping knobs too —
     * runMinTokens and dfCap change which spans are cut, hence the
@@ -1097,19 +1101,12 @@ final class Bpe(val tuning: Tuning) extends Serializable {
   private[operators] def curatedShardsPath(d: String): String =
     shardsPathOf(d,
       s"$nRounds:$sampleMod:$minFreq:$vocabCap:$ctx:cur:" +
-        s"${tuning.runMinTokens}:${tuning.dfCap}" +
-        (if (nfcOn) ":nfc" else "") + (if (escapeOn) ":esc" else "") + (if (pretokOn) ":ptk" else ""))
+        s"${tuning.runMinTokens}:${tuning.dfCap}$knobKey")
 
-  private def shardsPathOf(d: String, knobs: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((new java.io.File(d).getCanonicalPath + ":" + knobs + ":" +
-        shardsVersion).getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val fp = ArtifactLake.fingerprint(new java.io.File(s"$d/documents.parquet"))
-    s"$shardsRoot/shards-$key-$fp-v$shardsVersion"
-  }
-
-  private val shardsReady = scala.collection.mutable.HashSet[String]()
+  private def shardsPathOf(d: String, knobs: String): String =
+    ArtifactLake.keyedPath(shardsRoot, "shards",
+      ArtifactLake.sourceKey(d, s"$knobs:$shardsVersion"), shardsVersion,
+      ArtifactLake.docsFingerprint(d))
 
   /** Install-or-reuse the packed training shards over the RAW corpus.
     * Deterministic build (trained merges + UTF-8 id ranks + doc_id
@@ -1145,8 +1142,7 @@ final class Bpe(val tuning: Tuning) extends Serializable {
     */
   def ensureShardsFor(s: SparkSession, d: String,
       merges: Seq[Merge]): String = synchronized {
-    installShards(s, shardsPathOf(d, s"$ctx:for:${Bpe.mergesFp(merges)}" +
-        (if (nfcOn) ":nfc" else "") + (if (escapeOn) ":esc" else "") + (if (pretokOn) ":ptk" else "")),
+    installShards(s, shardsPathOf(d, s"$ctx:for:${Bpe.mergesFp(merges)}$knobKey"),
       () => (t(s, d, "documents"), merges))
   }
 
@@ -1157,8 +1153,7 @@ final class Bpe(val tuning: Tuning) extends Serializable {
   private def installShards(s: SparkSession, p: String,
       mk: () => (DataFrame, Seq[Merge])): String = {
     import s.implicits._
-    if (shardsReady.contains(p)) return p
-    val built = ArtifactLake.ensure(new java.io.File(p)) { staging =>
+    ArtifactLake.buildOnce(p, Bpe.shardBuilds) { staging =>
       val root = staging.getAbsolutePath
       val (docs, merges) = mk()
       // the trained merge table (≤ bpeMerges rows): the tokenizer
@@ -1222,9 +1217,6 @@ final class Bpe(val tuning: Tuning) extends Serializable {
         .sortWithinPartitions($"bin", $"doc_id")
         .write.mode("overwrite").partitionBy("shard").parquet(s"$root/data")
     }
-    if (built) Bpe.shardBuilds.incrementAndGet()
-    shardsReady += p
-    p
   }
 
   // ------------------------------------------------------------------
@@ -1909,9 +1901,7 @@ final class Bpe(val tuning: Tuning) extends Serializable {
   private def ensureFixtureShards(s: SparkSession, d: String): String =
     synchronized {
       installShards(s,
-        shardsPathOf(d, s"$nRounds:$sampleMod:$minFreq:$vocabCap:$ctx:pfix" +
-          (if (nfcOn) ":nfc" else "") + (if (escapeOn) ":esc" else "") +
-          (if (pretokOn) ":ptk" else "")),
+        shardsPathOf(d, s"$nRounds:$sampleMod:$minFreq:$vocabCap:$ctx:pfix$knobKey"),
         () => (parenFixture(s, d), trainFixture(s, d)))
     }
 

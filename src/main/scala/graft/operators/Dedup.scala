@@ -467,9 +467,7 @@ final class Dedup(val tuning: Tuning) extends Serializable {
     * ensure and the subsequent reads must resolve the SAME path even
     * if the property changes mid-session (spec isolation).
     */
-  @transient private lazy val sigRoot: String =
-    sys.props.getOrElse("graft.index.dir",
-      s"${sys.props("java.io.tmpdir")}/graft-index")
+  @transient private lazy val sigRoot: String = ArtifactLake.indexRoot
 
   /** The artifact key: source dir + every knob the stored bytes depend
     * on (bands × rows shape the minhash half; the bucket cap and dfCap
@@ -482,28 +480,17 @@ final class Dedup(val tuning: Tuning) extends Serializable {
   private[operators] def sigPath(d: String): String = {
     // :nfc only when on, so default-knob artifact keys are unchanged
     val knobs = s"$mBands:$mRows" + (if (nfcOn) ":nfc" else "")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((new java.io.File(d).getCanonicalPath + ":" + knobs + ":" +
-        sigVersion).getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val fp = ArtifactLake.fingerprint(new java.io.File(s"$d/documents.parquet"))
-    s"$sigRoot/dedup-$key-$fp-v$sigVersion"
+    ArtifactLake.keyedPath(sigRoot, "dedup",
+      ArtifactLake.sourceKey(d, s"$knobs:$sigVersion"), sigVersion,
+      ArtifactLake.docsFingerprint(d))
   }
-
-  /** Paths this INSTANCE has confirmed on disk — per-instance, not
-    * JVM-global, so a second registry proves artifact reuse through
-    * the marker, not the memo ([[Dedup.sigBuilds]]).
-    */
-  private val sigReady = scala.collection.mutable.HashSet[String]()
 
   /** Install-or-reuse the stored band table. The build is
     * deterministic and the path keys knobs + data fingerprint, so
     * losing an install race to another process is success.
     */
   private[operators] def ensureSigIndex(s: SparkSession, d: String): Unit = synchronized {
-    val p = sigPath(d)
-    if (sigReady.contains(p)) return
-    val built = ArtifactLake.ensure(new java.io.File(p)) { staging =>
+    ArtifactLake.buildOnce(sigPath(d), Dedup.sigBuilds) { staging =>
       val root = staging.getAbsolutePath
       bandedKeys(shinglePostings(s, d))
         .write.mode("overwrite").parquet(s"$root/bands")
@@ -517,8 +504,6 @@ final class Dedup(val tuning: Tuning) extends Serializable {
       simhashSig(s, d)
         .write.mode("overwrite").parquet(s"$root/sig")
     }
-    if (built) Dedup.sigBuilds.incrementAndGet()
-    sigReady += p
   }
 
   /** The oracle's banded-signature CTE chain ending in

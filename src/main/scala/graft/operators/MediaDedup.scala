@@ -144,8 +144,6 @@ object MediaDedup {
   private[operators] def bandStatsOf(bands: DataFrame): DataFrame =
     bands.groupBy(col("band_key")).agg(count(lit(1)).as("cnt"))
 
-  private val ready = scala.collection.mutable.HashSet[String]()
-
   /** The lake's keyed install path — keyed on the media fixture's path
     * (which itself keys the sf dir + fixture version) AND its file
     * fingerprint, so a regenerated media table can never be served a
@@ -154,15 +152,11 @@ object MediaDedup {
     */
   private[operators] def dhashPath(s: SparkSession, d: String): String = {
     Multimodal.MediaLake.ensure(s, d)
-    val root = sys.props.getOrElse("graft.index.dir",
-      s"${sys.props("java.io.tmpdir")}/graft-index")
     val mp = Multimodal.MediaLake.path(d)
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(mp.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val fp = ArtifactLake.fingerprint(new java.io.File(mp))
     // v2: + the per-layer `band_stats` ledger (serve-side over-cap
     // decision without a corpus aggregate)
-    s"$root/dhash-$key-$fp-v2"
+    ArtifactLake.keyedPath(ArtifactLake.indexRoot, "dhash", mp, 2,
+      ArtifactLake.fingerprint(new java.io.File(mp)))
   }
 
   /** Install-or-reuse the dHash lake over the stored media table:
@@ -172,9 +166,7 @@ object MediaDedup {
     * success.
     */
   def ensureDhash(s: SparkSession, d: String): String = synchronized {
-    val p = dhashPath(s, d)
-    if (ready.contains(p)) return p
-    val built = ArtifactLake.ensure(new java.io.File(p)) { staging =>
+    ArtifactLake.buildOnce(dhashPath(s, d), builds) { staging =>
       val root = staging.getAbsolutePath
       val media = Multimodal.MediaLake.table(s, d)
       // two consumers (sig dump + band derivation): materialize once
@@ -186,9 +178,6 @@ object MediaDedup {
       media.select(col("doc_id"))
         .write.mode("overwrite").parquet(s"$root/docs")
     }
-    if (built) builds.incrementAndGet()
-    ready += p
-    p
   }
 
   /** Append a batch of NEW media documents (`doc_id` castable to LONG,

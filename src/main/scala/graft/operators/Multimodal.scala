@@ -1121,41 +1121,30 @@ object Multimodal {
                                     // v11: 4:2:2 half of the subsampled
                                     // tier (eff % 8 = 7)
 
-    def path(d: String): String = {
-      val root = sys.props.getOrElse("graft.media.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-media")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest((new java.io.File(d).getCanonicalPath + ":" + fixtureVersion)
-          .getBytes("UTF-8"))
-        .take(6).map("%02x".format(_)).mkString
-      s"$root/media-$key-v$fixtureVersion"
-    }
+    def path(d: String): String =
+      ArtifactLake.keyedPath(ArtifactLake.mediaRoot, "media",
+        ArtifactLake.sourceKey(d, s"$fixtureVersion"), fixtureVersion)
 
     def table(s: SparkSession, d: String): DataFrame = {
       ensure(s, d)
       s.read.parquet(path(d))
     }
 
-    private val ready = scala.collection.mutable.HashSet[String]()
-
-    /** Generate the fixture if this JVM hasn't confirmed it yet — the
-      * shared [[ArtifactLake]] staged-rename recipe (marker-last,
-      * re-check before delete, per-writer staging; losing the install
-      * race is success: the builder is deterministic and the path key
-      * pins the version). The parquet commit writes its own `_SUCCESS`
-      * into the staging root, which the helper honors.
+    /** Generate the fixture unless it is complete on disk — the shared
+      * [[ArtifactLake]] staged-rename recipe (marker-last, re-check
+      * before delete, per-writer staging; losing the install race is
+      * success: the builder is deterministic and the path key pins the
+      * version). The parquet commit writes its own `_SUCCESS` into the
+      * staging root, which the helper honors.
       */
     def ensure(s: SparkSession, d: String): Unit = synchronized {
-      val p = path(d)
-      if (ready.contains(p)) return
-      ArtifactLake.ensure(new java.io.File(p)) { staging =>
+      ArtifactLake.ensure(new java.io.File(path(d))) { staging =>
         import s.implicits._
         t(s, d, "documents").select($"doc_id").as[Long]
           .mapPartitions(_.map(id => (id, MediaFixtures.blobFor(id))))
           .toDF("doc_id", "blob")
           .write.mode("overwrite").parquet(staging.getAbsolutePath)
       }
-      ready += p
     }
   }
 

@@ -2,17 +2,21 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** One-call warmup for every disk-persisted artifact the registry's
-  * queries install lazily on first touch: the IVF/PQ vector index
-  * ([[Similarity.ensureIndex]]), the MinHash/SimHash signature lake
-  * ([[Dedup.ensureSigIndex]]), and the synthetic media fixture
-  * ([[Multimodal.MediaLake.ensure]]).
+/** One-call warmup for the disk-persisted artifacts the registry's
+  * queries install lazily on first touch, all but the BM25 index: the
+  * IVF/PQ vector index ([[Similarity.ensureIndex]]), the MinHash/SimHash
+  * signature lake ([[Dedup.ensureSigIndex]]), the synthetic media
+  * fixture ([[Multimodal.MediaLake.ensure]]), the raw and curated BPE
+  * training shards ([[Bpe.ensureShards]], [[Bpe.ensureCuratedShards]]),
+  * the runs postings ([[Search.ensureRunsIndex]]), the dHash lake
+  * ([[MediaDedup.ensureDhash]]), the SP model ([[Sp.ensureSp]]) and the
+  * corpus LM ([[TextOps.ensureLm]]).
   *
   * Benchmarks call this up front so a measured pass times SERVING, not
   * a one-time build that happened to land on the first query touching
-  * the store (the builds are idempotent `ArtifactLake.ensure` installs,
-  * so this is purely a timing-attribution move — correctness is
-  * identical without it).
+  * the store (every build is an idempotent [[ArtifactLake.buildOnce]] /
+  * `ensure` install, so this is purely a timing-attribution move —
+  * correctness is identical without it).
   */
 object Prewarm {
   /** Index artifacts are knob-keyed, so the warmup must build under the

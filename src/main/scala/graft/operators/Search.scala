@@ -161,22 +161,17 @@ final class Search(tuning: Tuning) {
   /** Snapshot the root once per instance (spec isolation — the
     * [[Similarity]] rationale).
     */
-  @transient private lazy val bm25Root: String =
-    sys.props.getOrElse("graft.index.dir",
-      s"${sys.props("java.io.tmpdir")}/graft-index")
+  @transient private lazy val bm25Root: String = ArtifactLake.indexRoot
 
-  private def bm25Path(d: String): String = {
-    // :nfc only when on — the stored postings tokenize differently
-    // under the knob, so the key must split; default keys unchanged
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((new java.io.File(d).getCanonicalPath + ":" + bm25Version +
-        (if (nfcOn) ":nfc" else ""))
-        .getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val fp = ArtifactLake.fingerprint(new java.io.File(s"$d/documents.parquet"))
-    s"$bm25Root/bm25-$key-$fp-v$bm25Version"
-  }
+  /** `:nfc` only when on — the stored tokens differ under the knob, so
+    * the store keys must split; default keys unchanged.
+    */
+  private val nfcKey = if (nfcOn) ":nfc" else ""
 
-  private val bm25Ready = scala.collection.mutable.HashSet[String]()
+  private[operators] def bm25Path(d: String): String =
+    ArtifactLake.keyedPath(bm25Root, "bm25",
+      ArtifactLake.sourceKey(d, s"$bm25Version$nfcKey"), bm25Version,
+      ArtifactLake.docsFingerprint(d))
 
   /** Driver-side twin of the write-side `pmod(md5Long(tk), 64)` —
     * the partition-pruning path must compute the same bucket for a
@@ -312,16 +307,12 @@ final class Search(tuning: Tuning) {
   }
 
   private[operators] def ensureBm25Index(s: SparkSession, d: String): Unit = synchronized {
-    val p = bm25Path(d)
-    if (bm25Ready.contains(p)) return
-    val built = ArtifactLake.ensure(new java.io.File(p)) { staging =>
+    ArtifactLake.buildOnce(bm25Path(d), Search.bm25Builds) { staging =>
       writeBm25Layer(staging.getAbsolutePath,
         bm25DocView(spread(t(s, d, "documents"))), nFiles = None)
       writeHeadCache(s, Seq(staging.getAbsolutePath),
         staging.getAbsolutePath)
     }
-    if (built) Search.bm25Builds.incrementAndGet()
-    bm25Ready += p
   }
 
   // ------------------------------------------------------------------
@@ -836,19 +827,13 @@ final class Search(tuning: Tuning) {
   /** Window-hash partition count (the [[bm25Buckets]] rationale). */
   private val runsBuckets = 64
 
-  private def runsPath(d: String): String = {
-    // keyed on the build-shaping knobs: dfCap bounds which windows are
-    // stored; :nfc splits tokenization vintages (default keys stable)
-    val knobs = s"$W:${tuning.dfCap}" + (if (nfcOn) ":nfc" else "")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((new java.io.File(d).getCanonicalPath + ":" + knobs + ":" +
-        runsVersion).getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val fp = ArtifactLake.fingerprint(new java.io.File(s"$d/documents.parquet"))
-    s"$bm25Root/runs-$key-$fp-v$runsVersion"
-  }
-
-  private val runsReady = scala.collection.mutable.HashSet[String]()
+  /** Keyed on the build-shaping knobs: dfCap bounds which windows are
+    * stored.
+    */
+  private[operators] def runsPath(d: String): String =
+    ArtifactLake.keyedPath(bm25Root, "runs",
+      ArtifactLake.sourceKey(d, s"$W:${tuning.dfCap}$nfcKey:$runsVersion"),
+      runsVersion, ArtifactLake.docsFingerprint(d))
 
   /** The positional window-hash table `(doc_id, pos, h)` over a
     * `(doc_id/id, text)` view — ONE derivation for the corpus build
@@ -904,15 +889,11 @@ final class Search(tuning: Tuning) {
   }
 
   private[operators] def ensureRunsIndex(s: SparkSession, d: String): Unit = synchronized {
-    val p = runsPath(d)
-    if (runsReady.contains(p)) return
-    val built = ArtifactLake.ensure(new java.io.File(p)) { staging =>
+    ArtifactLake.buildOnce(runsPath(d), Search.runsBuilds) { staging =>
       writeRunsLayer(staging.getAbsolutePath,
         spread(t(s, d, "documents")).select(col("doc_id"), col("text")),
         capped = true, nFiles = None)
     }
-    if (built) Search.runsBuilds.incrementAndGet()
-    runsReady += p
   }
 
   // ------------------------------------------------------------------

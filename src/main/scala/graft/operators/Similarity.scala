@@ -1389,9 +1389,7 @@ final class Similarity(val tuning: Tuning) extends Serializable {
     * reads must resolve the SAME path even if the property changes
     * mid-session (spec isolation).
     */
-  @transient private lazy val indexRoot: String =
-    sys.props.getOrElse("graft.index.dir",
-      s"${sys.props("java.io.tmpdir")}/graft-index")
+  @transient private lazy val indexRoot: String = ArtifactLake.indexRoot
 
   /** Fingerprint of the embeddings table's FILE LISTING (names, sizes,
     * mtimes) — a stat-only walk, no data read. Part of the index key:
@@ -1406,36 +1404,23 @@ final class Similarity(val tuning: Tuning) extends Serializable {
     ArtifactLake.fingerprint(new java.io.File(s"$d/embeddings.parquet"))
 
   private[operators] def indexPath(d: String): String = {
-    val root = indexRoot
     val knobs = s"${tuning.lloydIters}:${tuning.nprobe}:${tuning.pqSubspaces}:" +
       s"${tuning.pqSubDim}:${tuning.pqCentroids}"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((new java.io.File(d).getCanonicalPath + ":" + knobs + ":" +
-        indexVersion).getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    s"$root/index-$key-${dataFingerprint(d)}-v$indexVersion"
+    ArtifactLake.keyedPath(indexRoot, "index",
+      ArtifactLake.sourceKey(d, s"$knobs:$indexVersion"), indexVersion,
+      dataFingerprint(d))
   }
-
-  /** Paths this INSTANCE has confirmed on disk. Per-instance, not
-    * JVM-global: a second registry (the "second session") starts empty,
-    * finds the _SUCCESS marker, and reuses the artifact without
-    * rebuilding — which is exactly what IndexLakeSpec proves via
-    * [[Similarity.indexBuilds]].
-    */
-  private val indexReady = scala.collection.mutable.HashSet[String]()
 
   /** Install-or-reuse via the shared [[ArtifactLake]] machinery; the
     * build is deterministic and the path keys knobs + data fingerprint,
-    * so losing an install race to another process is success.
+    * so losing an install race to another process is success. A second
+    * instance (the "second session") finds the marker and reuses the
+    * artifact, which IndexLakeSpec proves via [[Similarity.indexBuilds]].
     */
   private[operators] def ensureIndex(s: SparkSession, d: String): Unit = synchronized {
-    val p = indexPath(d)
-    if (indexReady.contains(p)) return
-    val built = ArtifactLake.ensure(new java.io.File(p)) { staging =>
+    ArtifactLake.buildOnce(indexPath(d), Similarity.indexBuilds) { staging =>
       buildIndex(s, d, staging.getAbsolutePath)
     }
-    if (built) Similarity.indexBuilds.incrementAndGet()
-    indexReady += p
   }
 
   /** One pass over the corpus per index half: IVF (Lloyd-refined

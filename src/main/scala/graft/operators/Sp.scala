@@ -272,40 +272,26 @@ final class Sp(val tuning: Tuning) extends Serializable {
   // The stored model artifact.
   // ------------------------------------------------------------------
 
-  @transient private lazy val spRoot: String =
-    sys.props.getOrElse("graft.index.dir",
-      s"${sys.props("java.io.tmpdir")}/graft-index")
+  @transient private lazy val spRoot: String = ArtifactLake.indexRoot
 
   private[operators] def spPath(d: String): String = {
     val knobs = s"$vocabTarget:$L:$iters:$sampleMod:$minFreq:$vocabCap" +
       (if (nfcOn) ":nfc" else "") + (if (pretokOn) ":ptk" else "")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((new java.io.File(d).getCanonicalPath + ":" + knobs)
-        .getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val fp = ArtifactLake.fingerprint(
-      new java.io.File(s"$d/documents.parquet"))
-    s"$spRoot/sp-$key-$fp-v1"
+    ArtifactLake.keyedPath(spRoot, "sp", ArtifactLake.sourceKey(d, knobs), 1,
+      ArtifactLake.docsFingerprint(d))
   }
-
-  private val spReady = scala.collection.mutable.HashSet[String]()
 
   /** Install-or-reuse the trained piece model (`pieces(piece, cnt)`).
     * Deterministic — losing an install race is success.
     */
   def ensureSp(s: SparkSession, d: String): String = synchronized {
-    val p = spPath(d)
-    if (spReady.contains(p)) return p
-    val built = ArtifactLake.ensure(new java.io.File(p)) { staging =>
+    ArtifactLake.buildOnce(spPath(d), Sp.builds) { staging =>
       import s.implicits._
       val pieces = Sp.trainPieces(trainWords(s, d), vocabTarget, L, iters)
       s.createDataset(pieces).toDF("piece", "cnt")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"${staging.getAbsolutePath}/pieces")
     }
-    if (built) Sp.builds.incrementAndGet()
-    spReady += p
-    p
   }
 
   /** The stored model as scored pieces: logp = ln((cnt+1) /

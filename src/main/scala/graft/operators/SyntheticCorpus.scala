@@ -228,13 +228,6 @@ object SyntheticCorpus {
     dir
   }
 
-  /** Probe-side access to the staged-rename install for DERIVED
-    * corpora (e.g. the stripped-text variant the StripProbe
-    * materializes) — the shared ArtifactLake recipe, public surface.
-    */
-  def ensureDir(dir: String)(build: java.io.File => Unit): Boolean =
-    ArtifactLake.ensure(new java.io.File(dir))(build)
-
   def defaultRoot: String =
     sys.props.getOrElse("graft.scale.dir",
       s"${sys.props("java.io.tmpdir")}/graft-scale")

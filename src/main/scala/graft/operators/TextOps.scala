@@ -618,9 +618,7 @@ final class TextOps(tuning: graft.config.Tuning) {
   // gibberish is self-fluent under train-on-self).
   // ------------------------------------------------------------------
 
-  @transient private lazy val lmRoot: String =
-    sys.props.getOrElse("graft.index.dir",
-      s"${sys.props("java.io.tmpdir")}/graft-index")
+  @transient private lazy val lmRoot: String = ArtifactLake.indexRoot
 
   private[operators] def lmPath(d: String): String = {
     // v2: the artifact is a DML-able delta store — a `docs(doc_id)`
@@ -637,16 +635,9 @@ final class TextOps(tuning: graft.config.Tuning) {
     // which is positionally a subset of a probe's prev set, so ONE
     // collected prune list still covers every table
     val knobs = (if (nfcOn) "nfc" else "raw") + ":v6"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((new java.io.File(d).getCanonicalPath + ":" + knobs)
-        .getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val fp = ArtifactLake.fingerprint(
-      new java.io.File(s"$d/documents.parquet"))
-    s"$lmRoot/lm-$key-$fp-v1"
+    ArtifactLake.keyedPath(lmRoot, "lm", ArtifactLake.sourceKey(d, knobs), 1,
+      ArtifactLake.docsFingerprint(d))
   }
-
-  private val lmReady = scala.collection.mutable.HashSet[String]()
 
   /** Adjacent-pair structs over a bound `toks` array column — the
     * bigram domain of the order-2 LM. Spelled as one transform so the
@@ -808,9 +799,7 @@ final class TextOps(tuning: graft.config.Tuning) {
     * stats recipe) needs no new math if this store ever takes it.
     */
   def ensureLm(s: org.apache.spark.sql.SparkSession, d: String): String = synchronized {
-    val p = lmPath(d)
-    if (lmReady.contains(p)) return p
-    val built = ArtifactLake.ensure(new java.io.File(p)) { staging =>
+    ArtifactLake.buildOnce(lmPath(d), TextOps.lmBuilds) { staging =>
       val root = staging.getAbsolutePath
       val toks = spread(t(s, d, "documents"))
         .select(explode(expr(toksExpr)).as("tok"))
@@ -835,9 +824,6 @@ final class TextOps(tuning: graft.config.Tuning) {
       spread(t(s, d, "documents")).select(col("doc_id"))
         .write.mode("overwrite").parquet(s"$root/docs")
     }
-    if (built) TextOps.lmBuilds.incrementAndGet()
-    lmReady += p
-    p
   }
 
   /** Append a batch of NEW documents (`doc_id` castable to LONG,

@@ -77,7 +77,7 @@ class TcpLineTable(properties: util.Map[String, String])
             options.getInt("port", 0),
             Option(options.get("timeoutSec")).map(_.toDouble),
             Option(options.get("maxMessagesPerTrigger")).map(_.toLong),
-            Option(checkpointLocation),
+            checkpointLocation,
             options.getInt("walMaxSegments", 8))
       }
     }
@@ -161,14 +161,14 @@ object TcpLineMicroBatchStream
   * only in-flight batches. The one remaining gap matches the
   * reference's process-local queue (readport.py:445-455): messages
   * buffered but never yet exposed in ANY offset die with the process,
-  * exactly as the reference loses its queue on a crash. Without a
-  * checkpoint location the source degrades to the legacy in-memory
-  * at-most-once behavior.
+  * exactly as the reference loses its queue on a crash.
+  *
+  * @param checkpointLocation the source checkpoint dir Spark passes to
+  *   `toMicroBatchStream`; the WAL lives in its `wal` subdir.
   */
 class TcpLineMicroBatchStream(host: String, port: Int,
-    timeoutSec: Option[Double], maxPerTrigger: Option[Long] = None,
-    checkpointLocation: Option[String] = None,
-    walMaxSegments: Int = 8)
+    timeoutSec: Option[Double], maxPerTrigger: Option[Long],
+    checkpointLocation: String, walMaxSegments: Int = 8)
     extends MicroBatchStream with org.apache.spark.internal.Logging {
   import TcpLineMicroBatchStream.sessionHadoopConf
 
@@ -176,26 +176,23 @@ class TcpLineMicroBatchStream(host: String, port: Int,
   // (message, arrival micros, fresh) — indexed from `trimmed`
   private val messages = ArrayBuffer[(String, Long, Boolean)]()
 
-  // --- WAL state (absent checkpointLocation ⇒ legacy in-memory mode)
-  private val walDir: Option[org.apache.hadoop.fs.Path] =
-    checkpointLocation.map(l => new org.apache.hadoop.fs.Path(l, "wal"))
+  // --- WAL state
+  private val walDir = new org.apache.hadoop.fs.Path(checkpointLocation, "wal")
   private lazy val walFs: org.apache.hadoop.fs.FileSystem =
-    walDir.get.getFileSystem(sessionHadoopConf())
+    walDir.getFileSystem(sessionHadoopConf())
   private val SegName = """^(\d+)-(\d+)$""".r
 
   /** All WAL segments as (startOffset, endOffset, path), sorted;
     * segments are non-overlapping by construction.
     */
   private def listSegments(): Seq[(Long, Long, org.apache.hadoop.fs.Path)] =
-    walDir.toSeq.flatMap { dir =>
-      if (!walFs.exists(dir)) Seq.empty
-      else walFs.listStatus(dir).toSeq.flatMap { st =>
-        st.getPath.getName match {
-          case SegName(a, b) => Some((a.toLong, b.toLong, st.getPath))
-          case _ => None
-        }
-      }.sortBy(_._1)
-    }
+    if (!walFs.exists(walDir)) Seq.empty
+    else walFs.listStatus(walDir).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case SegName(a, b) => Some((a.toLong, b.toLong, st.getPath))
+        case _ => None
+      }
+    }.sortBy(_._1)
 
   // Resume point, computed at CONSTRUCTION so a restarted incarnation
   // numbers its buffer correctly from the very first engine call
@@ -204,19 +201,18 @@ class TcpLineMicroBatchStream(host: String, port: Int,
   // offset-log watermark whenever the WAL is intact (persist happens
   // before expose); the max() also covers a manually-deleted WAL.
   private val resumeAt: Long = {
-    val w = checkpointLocation
-      .map(TcpLineMicroBatchStream.checkpointedWatermark).getOrElse(0L)
+    val w = TcpLineMicroBatchStream.checkpointedWatermark(checkpointLocation)
     // sweep crash-torn segment writes (never listed as segments, but
     // they'd otherwise accumulate one per crash)
-    try walDir.foreach { dir =>
-      if (walFs.exists(dir))
-        walFs.listStatus(dir).filter(_.getPath.getName.startsWith(".tmp-"))
+    try {
+      if (walFs.exists(walDir))
+        walFs.listStatus(walDir).filter(_.getPath.getName.startsWith(".tmp-"))
           .foreach(st => walFs.delete(st.getPath, false))
     } catch { case _: Exception => () }
     val walEnd = (try listSegments() catch { case _: Exception => Seq.empty })
       .map(_._2).maxOption.getOrElse(0L)
     if (math.max(w, walEnd) > 0) {
-      if (walDir.isDefined && walEnd >= w)
+      if (walEnd >= w)
         logInfo(s"graft-socket $host:$port: resuming at offset " +
           s"${math.max(w, walEnd)}; uncommitted ranges replay from the " +
           "WAL (at-least-once)")
@@ -290,40 +286,9 @@ class TcpLineMicroBatchStream(host: String, port: Int,
 
   override def initialOffset(): Offset = TcpOffset(0L)
 
-  override def deserializeOffset(json: String): Offset = {
-    val o = json.toLong
-    alignTo(o)  // checkpointed offsets surface here first on restart
-    TcpOffset(o)
-  }
-
-  // true once this incarnation has exposed an offset of its own (first
-  // latestOffset). Before that, any external offset can only be a
-  // checkpointed high-water mark from a PREVIOUS incarnation.
-  private var minted = false
-
-  /** Legacy-mode (no WAL) restart re-seat: an external offset arriving
-    * before this incarnation has minted any offset was counted by a
-    * previous incarnation whose buffer is gone. Renumber the (new)
-    * buffer to start at the checkpointed offset so offsets stay
-    * monotone and `commit` can never be asked to drop rows we don't
-    * hold. Guarding on `minted` (not on buffer size) closes the race
-    * where the new incarnation has already buffered >= o new messages
-    * at recovery time. With a WAL this is a no-op: construction already
-    * seated `trimmed` at the WAL high-water mark, which bounds every
-    * checkpointed offset (persist-before-expose).
-    */
-  private def alignTo(o: Long): Unit = lock.synchronized {
-    if (walDir.isEmpty && !minted && o > trimmed) {
-      logWarning(s"graft-socket $host:$port: checkpointed offset $o " +
-        s"predates this incarnation (buffer base $trimmed, " +
-        s"${messages.size} new rows buffered); source has no WAL " +
-        "— the checkpoint gap is lost (at-most-once), re-aligning the " +
-        "buffer base to the checkpointed offset")
-      trimmed = o
-      persisted = math.max(persisted, o)
-      lastEnd = math.max(lastEnd, o)
-    }
-  }
+  // construction already seated `trimmed` at the WAL high-water mark,
+  // which bounds every checkpointed offset (persist-before-expose)
+  override def deserializeOffset(json: String): Offset = TcpOffset(json.toLong)
 
   /** Write rows as the WAL segment `<start>-<start+rows.length>`, via a
     * dotfile + rename so a torn write is never listed as a segment.
@@ -333,10 +298,9 @@ class TcpLineMicroBatchStream(host: String, port: Int,
   private def writeSegment(start: Long,
       rows: Array[(String, Long, Boolean)],
       allowReplace: Boolean = false): Unit = {
-    val dir = walDir.get
-    if (!walFs.exists(dir)) walFs.mkdirs(dir)
+    if (!walFs.exists(walDir)) walFs.mkdirs(walDir)
     val end = start + rows.length
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".tmp-$start-$end")
+    val tmp = new org.apache.hadoop.fs.Path(walDir, s".tmp-$start-$end")
     val out = new java.io.DataOutputStream(
       new java.io.BufferedOutputStream(walFs.create(tmp, true)))
     try rows.foreach { case (msg, ts, fresh) =>
@@ -344,7 +308,7 @@ class TcpLineMicroBatchStream(host: String, port: Int,
       out.writeLong(ts); out.writeBoolean(fresh)
       out.writeInt(bytes.length); out.write(bytes)
     } finally out.close()
-    val seg = new org.apache.hadoop.fs.Path(dir, s"$start-$end")
+    val seg = new org.apache.hadoop.fs.Path(walDir, s"$start-$end")
     // only the COMPACTION caller may replace a same-named segment (a
     // crashed compaction's output for the identical [start, end) range —
     // same deterministic content). The append path keeps rename-refusal
@@ -477,13 +441,12 @@ class TcpLineMicroBatchStream(host: String, port: Int,
     // durability BEFORE visibility: every offset the engine can plan
     // against is already on disk, so a crash between planning and
     // commit can always be replayed
-    if (walDir.isDefined) persistPending()
+    persistPending()
     lock.synchronized {
-      minted = true
       val avail = trimmed + messages.size
       // only expose what is durable (== avail unless the reader
       // appended during the segment write; the tail goes next trigger)
-      val exposable = if (walDir.isDefined) math.min(avail, persisted) else avail
+      val exposable = math.min(avail, persisted)
       // X2: meter a backlog out across triggers instead of one huge batch
       val base = math.max(trimmed, lastEnd)
       val end = maxPerTrigger.fold(exposable)(cap => math.min(exposable, base + cap))
@@ -495,25 +458,19 @@ class TcpLineMicroBatchStream(host: String, port: Int,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[TcpOffset].n
     val e = end.asInstanceOf[TcpOffset].n
-    alignTo(e)
     val (base, mem) = lock.synchronized {
       // in-memory part: clamp to the buffer range
       val lo = math.max(0L, math.min(s - trimmed, messages.size.toLong)).toInt
       val hi = math.max(lo.toLong, math.min(e - trimmed, messages.size.toLong)).toInt
       (trimmed, messages.slice(lo, hi).toArray)
     }
-    val rows =
-      if (s >= base) mem
-      else if (walDir.isDefined) {
-        // restart replay: the range head predates this incarnation's
-        // buffer — serve it from the WAL, then any in-memory tail
-        readWal(s, math.min(e, base)) ++ mem
-      } else mem
+    // restart replay: a range head that predates this incarnation's
+    // buffer is served from the WAL, then any in-memory tail
+    val rows = if (s >= base) mem else readWal(s, math.min(e, base)) ++ mem
     if (rows.length < e - s)
       logWarning(s"graft-socket $host:$port: range [$s, $e) served " +
-        s"${rows.length} of ${e - s} rows — the rest " +
-        (if (walDir.isDefined) "are missing from the WAL (segments deleted?)"
-         else "were lost at restart (no WAL)"))
+        s"${rows.length} of ${e - s} rows — the rest are missing from " +
+        "the WAL (segments deleted?)")
     Array(TcpLinePartition(rows))
   }
 
@@ -542,15 +499,13 @@ class TcpLineMicroBatchStream(host: String, port: Int,
     // fully-committed segments are no longer needed for replay; a
     // partially-committed segment (batch boundary inside it) stays.
     // Cleanup failure is non-fatal — it only costs disk, not data.
-    if (walDir.isDefined) {
-      try {
-        val segs = listSegments()
-        segs.foreach { case (_, b, p) => if (b <= e) walFs.delete(p, false) }
-        segCount = segs.count(_._2 > e)  // re-sync the estimate
-        if (segCount > walMaxSegments) compactSegments(e)
-      } catch { case ex: Exception =>
-        logWarning(s"graft-socket WAL: segment cleanup failed: $ex")
-      }
+    try {
+      val segs = listSegments()
+      segs.foreach { case (_, b, p) => if (b <= e) walFs.delete(p, false) }
+      segCount = segs.count(_._2 > e)  // re-sync the estimate
+      if (segCount > walMaxSegments) compactSegments(e)
+    } catch { case ex: Exception =>
+      logWarning(s"graft-socket WAL: segment cleanup failed: $ex")
     }
   }
 

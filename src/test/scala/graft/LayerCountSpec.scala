@@ -12,8 +12,7 @@ import java.nio.file.Files
   */
 class LayerCountSpec extends SparkTestBase {
 
-  private def tmp(): File =
-    Files.createTempDirectory("graft-layercount").toFile
+  private def tmp(): File = new File(suiteTempDir("graft-layercount"))
 
   test("absent path reports 0") {
     val d = tmp()

@@ -51,7 +51,7 @@ class MainSpec extends SparkTestBase {
   test("end-to-end: launch from a .conf file path (reference shape, P7 sink)") {
     val srv = new TcpFixtureServer
     srv.enqueue((1 to 2).map(i => s"x= $i.0 y= 2.0 z= 3.0 T= 20.0 e1= 0 e2= 0 e3= 0 e4= 0\r\n".getBytes): _*)
-    val dest = Files.createTempDirectory("graft-main-").toString
+    val dest = suiteTempDir("graft-main-")
     // the reference config verbatim except host/port/destination/pack_length
     val conf = s"""
       |[device]
@@ -68,7 +68,7 @@ class MainSpec extends SparkTestBase {
       |level = INFO
       |file = $dest/readport_$${device:port}.log
       |""".stripMargin
-    val path = Files.createTempFile("readport_", ".conf")
+    val path = java.nio.file.Paths.get(suiteTempDir("graft-main-conf"), "readport.conf")
     Files.write(path, conf.getBytes)
     val q = Main.startFromConfig(spark, path.toString, debug = false)
     try {
@@ -85,7 +85,15 @@ class MainSpec extends SparkTestBase {
       assert(packRows() == 2)
       // K5: the [logging] file (interpolated) received the rotating log
       assert(new java.io.File(s"$dest/readport_${srv.port}.log").exists())
-    } finally { q.stop(); srv.close() }
+    } finally {
+      q.stop(); srv.close()
+      // hand the test JVM back its default logging: the rotating file
+      // appender would keep writing under `dest` and re-create it after
+      // the suite deletes it
+      org.apache.logging.log4j.LogManager.getContext(false)
+        .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
+        .setConfiguration(new org.apache.logging.log4j.core.config.DefaultConfiguration())
+    }
   }
 
   test("Python logging level names map onto log4j (reference parity)") {

@@ -302,7 +302,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("spread: multi-split input passes through untouched; single-split fans out") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    val dir = suiteTempDir("graft_spread")
     // force one file per partition so the scan genuinely yields 8 splits
     spark.range(0, 1000).toDF("id").repartition(8)
       .write.mode("overwrite").parquet(s"$dir/multi")
@@ -359,7 +359,7 @@ class PlanSpec extends SparkTestBase {
     // reads co-located buckets and the plan has NO shuffle at all.
     // (Broadcast is disabled to force the SMJ path; at real scale
     // neither side would broadcast anyway.)
-    val loc = java.nio.file.Files.createTempDirectory("graft_bkt").toString
+    val loc = suiteTempDir("graft_bkt")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS bkt LOCATION '$loc'")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

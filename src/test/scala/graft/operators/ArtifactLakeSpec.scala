@@ -1,17 +1,15 @@
 package graft.operators
 
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The shared keyed-artifact installer behind MediaLake and the stored
   * vector index: marker-last, re-check-before-delete, per-writer
   * staging, lost-race-is-success. These invariants are what both
   * artifact types lean on for cross-process safety — pinned here as
-  * plain filesystem unit cases (no Spark).
+  * plain filesystem unit cases (no Spark: the base's session is lazy).
   */
-class ArtifactLakeSpec extends AnyFunSuite {
+class ArtifactLakeSpec extends graft.SparkTestBase {
 
-  private def tmp(): java.io.File =
-    java.nio.file.Files.createTempDirectory("artifact-lake-spec").toFile
+  private def tmp(): java.io.File = new java.io.File(suiteTempDir("artifact-lake-spec"))
 
   test("installs: build populates staging, marker written last, returns true") {
     val target = new java.io.File(tmp(), "art")

@@ -37,8 +37,7 @@ class BpeEscapeSpec extends SparkTestBase {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-bpe-esc").toString
+    val d = suiteTempDir("graft-bpe-esc")
     Seq(
       (0L, "f(x) calls f(x) and g(y) twice", "en", "web"),
       (1L, "f(x) and g(y) appear here too f(x)", "en", "web"),
@@ -102,8 +101,7 @@ class BpeEscapeSpec extends SparkTestBase {
     assert(esc.head._2 == "*" && esc.head._3 == "a")
     // …and the distributed reference agrees on the same corpus
     import spark.implicits._
-    val d2 = java.nio.file.Files
-      .createTempDirectory("graft-bpe-esc-tie").toString
+    val d2 = suiteTempDir("graft-bpe-esc-tie")
     Seq((0L, "(a *a", "en", "web"), (1L, "(a *a", "en", "web"))
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length($"text").cast("long"))
@@ -133,10 +131,7 @@ class BpeEscapeSpec extends SparkTestBase {
     // tokens and parse back exactly
     import com.fasterxml.jackson.databind.ObjectMapper
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Files.createTempDirectory("graft-esc-export")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try {
+    withTempRoot {
       import spark.implicits._
       val t = Tuning(bpeMerges = 10, bpeEscape = 1)
       val bpe = new Bpe(t)
@@ -165,9 +160,6 @@ class BpeEscapeSpec extends SparkTestBase {
       // the escape-code bytes, so string inspection can't test leaks)
       assert(vocab.keys.exists(tok => tok.contains("(") || tok.contains(")")),
         "paren tokens reach the exported vocabulary")
-    } finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
     }
   }
 

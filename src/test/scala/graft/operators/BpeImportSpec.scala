@@ -49,7 +49,7 @@ class BpeImportSpec extends SparkTestBase {
   }
 
   test("importTokenizer parses an external-style file (CRLF, header, blanks)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-import").toString
+    val dir = suiteTempDir("graft-import")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "merges.txt"),
       "#version: 0.2\r\nt h\r\nth e\r\n\r\n")
@@ -64,8 +64,7 @@ class BpeImportSpec extends SparkTestBase {
   test("only the FIRST line is a header: a rule whose left token starts with '#' parses") {
     // the published GPT-2 merges.txt contains rules like '# #'; only
     // line 1 may be the #version header
-    val dir =
-      java.nio.file.Files.createTempDirectory("graft-import-hash").toString
+    val dir = suiteTempDir("graft-import-hash")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "merges.txt"),
       "#version: 0.2\n# #\n## x\n")
@@ -79,8 +78,7 @@ class BpeImportSpec extends SparkTestBase {
     // only a first line spelled '#version…' is a header; a headerless
     // GPT-2-style file can legitimately open with a '# #' rule, and
     // dropping it would corrupt every segmentation it feeds
-    val dir =
-      java.nio.file.Files.createTempDirectory("graft-import-nohdr").toString
+    val dir = suiteTempDir("graft-import-nohdr")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "merges.txt"), "# #\n## x\n")
     java.nio.file.Files.writeString(
@@ -90,8 +88,7 @@ class BpeImportSpec extends SparkTestBase {
   }
 
   test("importTokenizer rejects a malformed merges line, naming it") {
-    val dir =
-      java.nio.file.Files.createTempDirectory("graft-import-bad").toString
+    val dir = suiteTempDir("graft-import-bad")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "merges.txt"), "#version: 0.2\na b c\n")
     java.nio.file.Files.writeString(

@@ -18,8 +18,7 @@ class BpePretokSpec extends SparkTestBase {
 
   private def writeCorpus(docs: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-pretok-corpus").toString
+    val d = suiteTempDir("graft-pretok-corpus")
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("web"))
       .withColumn("n_chars", length($"text").cast("long"))

@@ -83,8 +83,7 @@ class CuratedPackingSpec extends SparkTestBase {
 
   test("on a run-free corpus the curated packing degenerates to q84") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-curated").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(suiteTempDir("graft-curated"))
     // globally unique words: no 8-token window repeats, the strip is inert
     (0L until 40L).map { i =>
       (i, (0 until 20).map(j => s"u${i}x$j").mkString(" "), "en", "srcX", 0L)

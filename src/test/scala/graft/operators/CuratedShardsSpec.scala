@@ -65,8 +65,7 @@ class CuratedShardsSpec extends SparkTestBase {
 
   test("on a run-free corpus the curated shards degenerate to q87") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-curshard").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(suiteTempDir("graft-curshard"))
     (0L until 40L).map { i =>
       (i, (0 until 20).map(j => s"v${i}y$j").mkString(" "), "en", "srcX", 0L)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")

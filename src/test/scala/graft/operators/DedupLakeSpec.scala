@@ -37,13 +37,13 @@ class DedupLakeSpec extends SparkTestBase {
       d1.ensureSigIndex(spark, sf)
       assert(Dedup.sigBuilds.get() == before + 1, "first ensure must build")
       d1.ensureSigIndex(spark, sf)
-      assert(Dedup.sigBuilds.get() == before + 1, "memoized ensure rebuilt")
+      assert(Dedup.sigBuilds.get() == before + 1, "second ensure rebuilt")
 
       val dir = new java.io.File(d1.sigPath(sf))
       assert(new java.io.File(dir, "_SUCCESS").isFile)
       val stamp = mtimes(dir)
 
-      // a SECOND session: fresh instance, empty memo — must find the
+      // a SECOND session: fresh instance — must find the
       // marker and serve q32 off the stored bands without rebuilding
       val d2 = new Dedup(knobs)
       val q32 = d2.all.find(_.name == "q32_dedup_minhash_lsh").get

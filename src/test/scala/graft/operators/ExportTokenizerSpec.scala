@@ -73,12 +73,8 @@ class ExportTokenizerSpec extends SparkTestBase {
   test("escape-off export REFUSES on a paren-bearing corpus; allowLossy and escape mode export") {
     import org.apache.spark.sql.functions.{length, lit}
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-export-guard")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-export-guard-corpus").toString
+    withTempRoot {
+      val dir = suiteTempDir("graft-export-guard-corpus")
       Seq((0L, "call f(x) to compute the value"),
           (1L, "a plain second document with ordinary words"))
         .toDF("doc_id", "text")
@@ -104,9 +100,6 @@ class ExportTokenizerSpec extends SparkTestBase {
         .readTree(bytes(full, "vocab.json")).fields().asScala
         .map(_.getKey).toSet
       assert(vocab.contains("(") && vocab.contains(")"))
-    } finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
     }
   }
 }

@@ -31,13 +31,13 @@ class IndexLakeSpec extends SparkTestBase {
       s1.ensureIndex(spark, sf)
       assert(Similarity.indexBuilds.get() == before + 1, "first ensure must build")
       s1.ensureIndex(spark, sf)
-      assert(Similarity.indexBuilds.get() == before + 1, "memoized ensure rebuilt")
+      assert(Similarity.indexBuilds.get() == before + 1, "second ensure rebuilt")
 
       val dir = new java.io.File(s1.indexPath(sf))
       assert(new java.io.File(dir, "_SUCCESS").isFile)
       val stamp = mtimes(dir)
 
-      // a SECOND session: fresh instance, empty memo — must find the
+      // a SECOND session: fresh instance — must find the
       // _SUCCESS marker and serve searches off the stored artifact
       val s2 = new Similarity(knobs)
       val q43 = s2.all.find(_.name == "q43_ann_ivf").get
@@ -100,7 +100,7 @@ class IndexLakeSpec extends SparkTestBase {
   test("regenerated corpus data re-keys the artifact (no stale index served)") {
     val s1 = new Similarity(knobs)
     // a fake sf dir whose embeddings table we can mutate
-    val dir = java.nio.file.Files.createTempDirectory("graft-fp-spec").toFile
+    val dir = new java.io.File(suiteTempDir("graft-fp-spec"))
     val table = new java.io.File(dir, "embeddings.parquet")
     table.mkdirs()
     val part = new java.io.File(table, "part-0.parquet")

@@ -26,8 +26,8 @@ class MediaLakeSpec extends SparkTestBase {
   }
 
   test("a crashed writer's leftovers (dir without _SUCCESS) are healed, not wedged") {
-    // use a DIFFERENT sf dir than the other tests so planting junk at
-    // its fixture path cannot race a concurrently-running suite
+    // sf0.01's fixture: planting junk at sf0.001's would race the
+    // other suites that read it
     val sf2 = "/root/testdata/sf0.01"
     val target = new java.io.File(MediaLake.path(sf2))
     def deleteTree(f: java.io.File): Unit = {

@@ -19,8 +19,7 @@ class NfcComposeSpec extends SparkTestBase {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-nfc-spec").toString
+    val d = suiteTempDir("graft-nfc-spec")
     Seq(
       (0L, composed, "fr", "web"),
       (1L, decomposed, "fr", "web"),

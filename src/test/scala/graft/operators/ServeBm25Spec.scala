@@ -36,7 +36,7 @@ class ServeBm25Spec extends SparkTestBase {
     val before = Search.bm25Builds.get()
     search.serveBm25(spark, sf, Seq("spark")).collect()
     val after1 = Search.bm25Builds.get()
-    // a SECOND instance (fresh per-instance ready-set) must find the
+    // a SECOND instance must find the
     // on-disk marker and reuse, not rebuild
     val other = new Search(graft.config.Tuning.current)
     other.serveBm25(spark, sf, Seq("window")).collect()
@@ -100,12 +100,8 @@ class ServeBm25Spec extends SparkTestBase {
   test("after DML + compact, single-term probes answer from the generation's rebuilt cache") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{length, lit}
-    val root = java.nio.file.Files.createTempDirectory("graft-bm25hk")
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root.toString
-    try {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-bm25hk-corpus").toString
+    withTempRoot {
+      val dir = suiteTempDir("graft-bm25hk-corpus")
       Seq(
         (0L, "spark window hash stream spark spark"),
         (1L, "window functions over spark streams window"),
@@ -135,9 +131,6 @@ class ServeBm25Spec extends SparkTestBase {
       assert(rows(hot) == rows(ranked))
       assert(rows(hot).map(_._1).exists(Set(10L, 11L)),
         "the folded cache must rank the DML'd documents too")
-    } finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None => sys.props -= "graft.index.dir"
     }
   }
 

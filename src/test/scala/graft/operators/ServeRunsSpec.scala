@@ -23,8 +23,7 @@ class ServeRunsSpec extends SparkTestBase {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-serveruns-corpus").toString
+    val d = suiteTempDir("graft-serveruns-corpus")
     Seq(
       (0L, s"$span10 filler words here $span8", "en", "web"),
       (1L, s"prefix tokens then $span10 and a tail", "en", "web"),

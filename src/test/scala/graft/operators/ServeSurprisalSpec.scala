@@ -27,7 +27,6 @@ class ServeSurprisalSpec extends SparkTestBase {
         import spark.implicits._
         // corpus: a=3, b=1 → T=4, V=2, denom = 7
         val dir = writeCorpus(tmp, Seq((0L, "a a a"), (1L, "b")))
-        // a fresh TextOps so the lmReady memo can't mask the store read
         val out = new TextOps(Tuning()).serveSurprisal(spark, dir, Seq(
             (10L, "a"), (11L, "zz"), (12L, "a zz"), (13L, ""))
           .toDF("id", "text"))
@@ -234,7 +233,7 @@ class ServeSurprisalSpec extends SparkTestBase {
         val probe = Seq((1L, "x")).toDF("id", "text")
         val first = ops.serveSurprisal(spark, dir, probe).collect()
         assert(TextOps.lmBuilds.get() == before + 1)
-        // same instance (memo) AND a fresh instance (disk marker): no-op
+        // same instance AND a fresh instance find the disk marker: no-op
         ops.serveSurprisal(spark, dir, probe).collect()
         val again = new TextOps(Tuning()).serveSurprisal(spark, dir, probe)
           .collect()

@@ -14,8 +14,7 @@ class SpSpec extends SparkTestBase {
 
   private def writeCorpus(docs: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-sp-corpus").toString
+    val d = suiteTempDir("graft-sp-corpus")
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("web"))
       .withColumn("n_chars", length($"text").cast("long"))
@@ -72,7 +71,7 @@ class SpSpec extends SparkTestBase {
         .collect().map(r => r.getLong(0) ->
           (r.getLong(1), r.getSeq[String](2).toList)).toMap
       // the exported TSV drives the SAME segmentation after a parse
-      val exp = sp.exportSpModel(spark, dir)
+      val exp = sp.exportSpModel(spark, dir, suiteTempDir("graft-sp-export"))
       val model = Sp.importSpModel(exp)
       val reimported = sp.tokenizeWithSpModel(probes, model)
         .collect().map(r => r.getLong(0) ->
@@ -82,7 +81,7 @@ class SpSpec extends SparkTestBase {
       assert(served(10L)._2.mkString == "dataenginespipeline")
       assert(served(12L) == (0L, Nil))
       // malformed interchange lines are loud
-      val bad = java.nio.file.Files.createTempDirectory("graft-sp-bad")
+      val bad = java.nio.file.Paths.get(suiteTempDir("graft-sp-bad"))
       java.nio.file.Files.writeString(bad.resolve("sp.vocab"),
         "ok\t-1.5\nnotab\n")
       intercept[IllegalArgumentException](Sp.importSpModel(bad.toString))
@@ -94,7 +93,7 @@ class SpSpec extends SparkTestBase {
     val sp = new Sp(Tuning()) // spPieceLen = 4
     // a foreign model whose best piece is 8 code points — legal in a
     // real sp.vocab; the Viterbi candidate window must stretch to it
-    val dir = java.nio.file.Files.createTempDirectory("graft-sp-foreign")
+    val dir = java.nio.file.Paths.get(suiteTempDir("graft-sp-foreign"))
     java.nio.file.Files.writeString(dir.resolve("sp.vocab"),
       "pipeline\t-0.5\npipe\t-2.0\nline\t-2.0\np\t-9.0\ni\t-9.0\n" +
         "e\t-9.0\nl\t-9.0\nn\t-9.0\n")

@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
 class SyntheticCorpusSpec extends SparkTestBase {
 
   private lazy val dir = {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-synth-spec").toString
+    val root = suiteTempDir("graft-synth-spec")
     SyntheticCorpus.ensure(spark, 600, 250, root)
   }
 
@@ -32,8 +31,7 @@ class SyntheticCorpusSpec extends SparkTestBase {
     val d2 = SyntheticCorpus.ensure(spark, 600, 250,
       new java.io.File(dir).getParent)
     assert(d2 == dir) // same key → same installed artifact
-    val root2 = java.nio.file.Files
-      .createTempDirectory("graft-synth-spec2").toString
+    val root2 = suiteTempDir("graft-synth-spec2")
     val d3 = SyntheticCorpus.ensure(spark, 600, 250, root2)
     val a = spark.read.parquet(s"$dir/documents.parquet")
       .orderBy("doc_id").collect().toSeq

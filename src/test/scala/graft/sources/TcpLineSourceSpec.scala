@@ -144,21 +144,25 @@ class TcpLineSourceSpec extends SparkTestBase {
   }
 
   test("restart from checkpoint beyond the in-memory range: empty replay, no crash") {
-    // Simulates driver recovery: Spark re-reads checkpointed offsets from
-    // a previous incarnation whose in-memory buffer is gone. The old
-    // behavior crash-looped in commit() (IndexOutOfBounds on remove) and
-    // then misaligned new rows; the fix re-seats offset arithmetic at the
-    // checkpointed high-water mark and serves the lost range empty.
-    val s = new TcpLineMicroBatchStream("localhost", 1, None)
-    val start = s.deserializeOffset("400")
-    val end = s.deserializeOffset("500")
-    val parts = s.planInputPartitions(start, end)
-    assert(parts.length == 1 &&
-      parts(0).asInstanceOf[TcpLinePartition].rows.isEmpty)
-    s.commit(end)  // must be a no-op, not an exception
-    // new messages get offsets at/after the checkpointed mark
-    assert(s.latestOffset().asInstanceOf[TcpOffset].n == 500L)
-    s.stop()
+    withTempDir("graft-walc-") { tmp =>
+      // Simulates driver recovery with the WAL gone: Spark re-reads
+      // checkpointed offsets from a previous incarnation whose buffer and
+      // WAL segments are both lost. The old behavior crash-looped in
+      // commit() (IndexOutOfBounds on remove) and then misaligned new
+      // rows; the range must plan empty, commit cleanly, and new
+      // offsets must resume at the committed mark.
+      val s = new TcpLineMicroBatchStream("localhost", 1, None, None,
+        s"$tmp/sources/0")
+      val start = s.deserializeOffset("400")
+      val end = s.deserializeOffset("500")
+      val parts = s.planInputPartitions(start, end)
+      assert(parts.length == 1 &&
+        parts(0).asInstanceOf[TcpLinePartition].rows.isEmpty)
+      s.commit(end)  // must be a no-op, not an exception
+      // new messages get offsets at/after the checkpointed mark
+      assert(s.latestOffset().asInstanceOf[TcpOffset].n == 500L)
+      s.stop()
+    }
   }
 
   test("WAL: planned-but-uncommitted ranges replay after restart — zero loss (X3)") {
@@ -168,50 +172,51 @@ class TcpLineSourceSpec extends SparkTestBase {
     // GONE (no server) — must serve the planned-but-uncommitted range
     // [2, 5) byte-identically from the WAL: the at-least-once upgrade
     // over the round-2 source, which served that range empty.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-wal-")
-      .toString + "/sources/0"
-    val srv = new TcpFixtureServer
-    srv.enqueue((1 to 5).map(i => s"wal $i\n".getBytes): _*)
-    var rowsA: Array[(String, Long, Boolean)] = null
-    val a = new TcpLineMicroBatchStream("localhost", srv.port, None, None, Some(ckpt))
-    try {
-      val deadline = System.currentTimeMillis() + 30000
-      var end = 0L
-      while (end < 5 && System.currentTimeMillis() < deadline) {
-        end = a.latestOffset().asInstanceOf[TcpOffset].n
-        Thread.sleep(100)
-      }
-      assert(end == 5, "incarnation A never exposed all 5 messages")
-      rowsA = a.planInputPartitions(TcpOffset(0), TcpOffset(5))(0)
-        .asInstanceOf[TcpLinePartition].rows
-      assert(rowsA.map(_._1).toSeq == (1 to 5).map(i => s"wal $i"))
-      a.commit(TcpOffset(2))
-    } finally { a.stop(); srv.close() }
-    val b = new TcpLineMicroBatchStream("localhost", 1, None, None, Some(ckpt))
-    try {
-      val rowsB = b.planInputPartitions(TcpOffset(2), TcpOffset(5))(0)
-        .asInstanceOf[TcpLinePartition].rows
-      // full rows — payload, arrival micros, fresh flag — survive the
-      // WAL round-trip identically
-      assert(rowsB.toSeq == rowsA.drop(2).toSeq,
-        "replayed range differs from what incarnation A planned")
-      b.commit(TcpOffset(5))
-      // new offsets continue from the WAL high-water mark, and the
-      // committed segment is gone: a second restart starts clean
-      assert(b.latestOffset().asInstanceOf[TcpOffset].n == 5L)
-    } finally b.stop()
-    // third incarnation: everything committed, WAL empty — the resume
-    // point comes from the query's offset log (written by the engine in
-    // a real run; fabricated here), and the source starts clean at 5
-    val root = java.nio.file.Paths.get(ckpt).getParent.getParent
-    java.nio.file.Files.createDirectories(root.resolve("offsets"))
-    java.nio.file.Files.writeString(root.resolve("offsets/0"), "v1\n{}\n5\n")
-    val c = new TcpLineMicroBatchStream("localhost", 1, None, None, Some(ckpt))
-    try {
-      assert(c.latestOffset().asInstanceOf[TcpOffset].n == 5L)
-      assert(c.planInputPartitions(TcpOffset(5), TcpOffset(5))(0)
-        .asInstanceOf[TcpLinePartition].rows.isEmpty)
-    } finally c.stop()
+    withTempDir("graft-wal-") { tmp =>
+      val ckpt = s"$tmp/sources/0"
+      val srv = new TcpFixtureServer
+      srv.enqueue((1 to 5).map(i => s"wal $i\n".getBytes): _*)
+      var rowsA: Array[(String, Long, Boolean)] = null
+      val a = new TcpLineMicroBatchStream("localhost", srv.port, None, None, ckpt)
+      try {
+        val deadline = System.currentTimeMillis() + 30000
+        var end = 0L
+        while (end < 5 && System.currentTimeMillis() < deadline) {
+          end = a.latestOffset().asInstanceOf[TcpOffset].n
+          Thread.sleep(100)
+        }
+        assert(end == 5, "incarnation A never exposed all 5 messages")
+        rowsA = a.planInputPartitions(TcpOffset(0), TcpOffset(5))(0)
+          .asInstanceOf[TcpLinePartition].rows
+        assert(rowsA.map(_._1).toSeq == (1 to 5).map(i => s"wal $i"))
+        a.commit(TcpOffset(2))
+      } finally { a.stop(); srv.close() }
+      val b = new TcpLineMicroBatchStream("localhost", 1, None, None, ckpt)
+      try {
+        val rowsB = b.planInputPartitions(TcpOffset(2), TcpOffset(5))(0)
+          .asInstanceOf[TcpLinePartition].rows
+        // full rows — payload, arrival micros, fresh flag — survive the
+        // WAL round-trip identically
+        assert(rowsB.toSeq == rowsA.drop(2).toSeq,
+          "replayed range differs from what incarnation A planned")
+        b.commit(TcpOffset(5))
+        // new offsets continue from the WAL high-water mark, and the
+        // committed segment is gone: a second restart starts clean
+        assert(b.latestOffset().asInstanceOf[TcpOffset].n == 5L)
+      } finally b.stop()
+      // third incarnation: everything committed, WAL empty — the resume
+      // point comes from the query's offset log (written by the engine in
+      // a real run; fabricated here), and the source starts clean at 5
+      val root = java.nio.file.Paths.get(ckpt).getParent.getParent
+      java.nio.file.Files.createDirectories(root.resolve("offsets"))
+      java.nio.file.Files.writeString(root.resolve("offsets/0"), "v1\n{}\n5\n")
+      val c = new TcpLineMicroBatchStream("localhost", 1, None, None, ckpt)
+      try {
+        assert(c.latestOffset().asInstanceOf[TcpOffset].n == 5L)
+        assert(c.planInputPartitions(TcpOffset(5), TcpOffset(5))(0)
+          .asInstanceOf[TcpLinePartition].rows.isEmpty)
+      } finally c.stop()
+    }
   }
 
   test("WAL via the engine: a batch that fails before commit replays with its data") {
@@ -224,31 +229,32 @@ class TcpLineSourceSpec extends SparkTestBase {
     val srv = new TcpFixtureServer
     srv.enqueue("crash a\ncrash b\ncrash c\n".getBytes)
     srv.enqueue(Array.emptyByteArray)  // second connection: nothing
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-walq-").toString
-    def stream() = spark.readStream.format("graft-socket")
-      .option("host", "localhost").option("port", srv.port).load()
-    val q1 = stream().writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        if (df.count() > 0) throw new IllegalStateException("sink crash")
-      }.start()
-    try q1.awaitTermination(60000) catch { case _: Exception => () }
-    assert(q1.exception.isDefined, "first incarnation should have died mid-batch")
-    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q2 = stream().writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        df.collect().foreach(r => got.add(r.getString(0)))
-      }.start()
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      while (got.size < 3 && System.currentTimeMillis() < deadline) {
-        q2.processAllAvailable(); Thread.sleep(200)
-      }
-      val msgs = got.toArray(Array.empty[String]).toSeq.sorted
-      assert(msgs == Seq("crash a", "crash b", "crash c"),
-        s"replayed batch lost data: $msgs")
-    } finally { q2.stop(); srv.close() }
+    withTempDir("graft-walq-") { ckpt =>
+      def stream() = spark.readStream.format("graft-socket")
+        .option("host", "localhost").option("port", srv.port).load()
+      val q1 = stream().writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          if (df.count() > 0) throw new IllegalStateException("sink crash")
+        }.start()
+      try q1.awaitTermination(60000) catch { case _: Exception => () }
+      assert(q1.exception.isDefined, "first incarnation should have died mid-batch")
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val q2 = stream().writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          df.collect().foreach(r => got.add(r.getString(0)))
+        }.start()
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        while (got.size < 3 && System.currentTimeMillis() < deadline) {
+          q2.processAllAvailable(); Thread.sleep(200)
+        }
+        val msgs = got.toArray(Array.empty[String]).toSeq.sorted
+        assert(msgs == Seq("crash a", "crash b", "crash c"),
+          s"replayed batch lost data: $msgs")
+      } finally { q2.stop(); srv.close() }
+    }
   }
 
   test("maxMessagesPerTrigger splits a burst across micro-batches (X2)") {
@@ -302,80 +308,82 @@ class TcpLineSourceSpec extends SparkTestBase {
     // checkpoint). With walMaxSegments = 4, the per-trigger hygiene
     // check must compact the backlog while preserving byte-identical
     // replay of the whole uncommitted range after a crash.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-walh-")
-      .toString + "/sources/0"
-    val srv = new TcpFixtureServer
-    val total = 24
-    val a = new TcpLineMicroBatchStream("localhost", srv.port, None, None,
-      Some(ckpt), walMaxSegments = 4)
-    var rowsA: Array[(String, Long, Boolean)] = null
-    try {
-      for (i <- 1 to total) {
-        srv.enqueue(s"hyg $i\n".getBytes)
-        val deadline = System.currentTimeMillis() + 30000
-        var end = 0L
-        // one trigger (= one persisted segment when data arrived) per
-        // message: the shape that maximizes segment churn
-        while (end < i && System.currentTimeMillis() < deadline) {
-          end = a.latestOffset().asInstanceOf[TcpOffset].n
-          if (end < i) Thread.sleep(20)
+    withTempDir("graft-walh-") { tmp =>
+      val ckpt = s"$tmp/sources/0"
+      val srv = new TcpFixtureServer
+      val total = 24
+      val a = new TcpLineMicroBatchStream("localhost", srv.port, None, None,
+        ckpt, walMaxSegments = 4)
+      var rowsA: Array[(String, Long, Boolean)] = null
+      try {
+        for (i <- 1 to total) {
+          srv.enqueue(s"hyg $i\n".getBytes)
+          val deadline = System.currentTimeMillis() + 30000
+          var end = 0L
+          // one trigger (= one persisted segment when data arrived) per
+          // message: the shape that maximizes segment churn
+          while (end < i && System.currentTimeMillis() < deadline) {
+            end = a.latestOffset().asInstanceOf[TcpOffset].n
+            if (end < i) Thread.sleep(20)
+          }
+          assert(end == i, s"message $i never surfaced")
         }
-        assert(end == i, s"message $i never surfaced")
-      }
-      // count real segments only (not hadoop-local .crc shadows / tmp)
-      val walFiles = java.nio.file.Files.list(
-          java.nio.file.Paths.get(ckpt, "wal")).toArray
-        .map(p => p.asInstanceOf[java.nio.file.Path].getFileName.toString)
-        .filter(_.matches("""\d+-\d+"""))
-      assert(walFiles.length <= 5,
-        s"WAL not compacted: ${walFiles.length} segments for $total triggers")
-      rowsA = a.planInputPartitions(TcpOffset(0), TcpOffset(total))(0)
-        .asInstanceOf[TcpLinePartition].rows
-      assert(rowsA.map(_._1).toSeq == (1 to total).map(i => s"hyg $i"))
-    } finally { a.stop(); srv.close() }
-    // crash: nothing committed. A fresh incarnation with the device
-    // GONE must replay the full range byte-identically from the
-    // compacted WAL.
-    val b = new TcpLineMicroBatchStream("localhost", 1, None, None, Some(ckpt))
-    try {
-      assert(b.latestOffset().asInstanceOf[TcpOffset].n == total.toLong)
-      val rowsB = b.planInputPartitions(TcpOffset(0), TcpOffset(total))(0)
-        .asInstanceOf[TcpLinePartition].rows
-      assert(rowsB.toSeq == rowsA.toSeq,
-        "replay after compaction differs from what incarnation A served")
-    } finally b.stop()
+        // count real segments only (not hadoop-local .crc shadows / tmp)
+        val walFiles = java.nio.file.Files.list(
+            java.nio.file.Paths.get(ckpt, "wal")).toArray
+          .map(p => p.asInstanceOf[java.nio.file.Path].getFileName.toString)
+          .filter(_.matches("""\d+-\d+"""))
+        assert(walFiles.length <= 5,
+          s"WAL not compacted: ${walFiles.length} segments for $total triggers")
+        rowsA = a.planInputPartitions(TcpOffset(0), TcpOffset(total))(0)
+          .asInstanceOf[TcpLinePartition].rows
+        assert(rowsA.map(_._1).toSeq == (1 to total).map(i => s"hyg $i"))
+      } finally { a.stop(); srv.close() }
+      // crash: nothing committed. A fresh incarnation with the device
+      // GONE must replay the full range byte-identically from the
+      // compacted WAL.
+      val b = new TcpLineMicroBatchStream("localhost", 1, None, None, ckpt)
+      try {
+        assert(b.latestOffset().asInstanceOf[TcpOffset].n == total.toLong)
+        val rowsB = b.planInputPartitions(TcpOffset(0), TcpOffset(total))(0)
+          .asInstanceOf[TcpLinePartition].rows
+        assert(rowsB.toSeq == rowsA.toSeq,
+          "replay after compaction differs from what incarnation A served")
+      } finally b.stop()
+    }
   }
 
   test("WAL replay dedupes overlapping segments (compaction crash window)") {
     // A crash between compaction's rename and its deletes legally
     // leaves the merged segment AND its sources on disk. Replay must
     // serve each offset once.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-walo-")
-      .toString + "/sources/0"
-    val walPath = java.nio.file.Paths.get(ckpt, "wal")
-    java.nio.file.Files.createDirectories(walPath)
-    def writeSeg(start: Int, msgs: Seq[String]): Unit = {
-      val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-        java.nio.file.Files.newOutputStream(
-          walPath.resolve(s"$start-${start + msgs.length}"))))
-      try msgs.zipWithIndex.foreach { case (m, j) =>
-        val bytes = m.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-        out.writeLong(1000L * (start + j)); out.writeBoolean(false)
-        out.writeInt(bytes.length); out.write(bytes)
-      } finally out.close()
+    withTempDir("graft-walo-") { tmp =>
+      val ckpt = s"$tmp/sources/0"
+      val walPath = java.nio.file.Paths.get(ckpt, "wal")
+      java.nio.file.Files.createDirectories(walPath)
+      def writeSeg(start: Int, msgs: Seq[String]): Unit = {
+        val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+          java.nio.file.Files.newOutputStream(
+            walPath.resolve(s"$start-${start + msgs.length}"))))
+        try msgs.zipWithIndex.foreach { case (m, j) =>
+          val bytes = m.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+          out.writeLong(1000L * (start + j)); out.writeBoolean(false)
+          out.writeInt(bytes.length); out.write(bytes)
+        } finally out.close()
+      }
+      val all = (0 until 4).map(i => s"ovl $i")
+      writeSeg(0, all)            // the compacted segment 0-4
+      writeSeg(0, all.take(2))    // its un-deleted sources 0-2, 2-4
+      writeSeg(2, all.drop(2))
+      val c = new TcpLineMicroBatchStream("localhost", 1, None, None, ckpt)
+      try {
+        assert(c.latestOffset().asInstanceOf[TcpOffset].n == 4L)
+        val rows = c.planInputPartitions(TcpOffset(0), TcpOffset(4))(0)
+          .asInstanceOf[TcpLinePartition].rows
+        assert(rows.map(_._1).toSeq == all, "overlap must not duplicate rows")
+        assert(rows.map(_._2).toSeq == Seq(0L, 1000L, 2000L, 3000L))
+      } finally c.stop()
     }
-    val all = (0 until 4).map(i => s"ovl $i")
-    writeSeg(0, all)            // the compacted segment 0-4
-    writeSeg(0, all.take(2))    // its un-deleted sources 0-2, 2-4
-    writeSeg(2, all.drop(2))
-    val c = new TcpLineMicroBatchStream("localhost", 1, None, None, Some(ckpt))
-    try {
-      assert(c.latestOffset().asInstanceOf[TcpOffset].n == 4L)
-      val rows = c.planInputPartitions(TcpOffset(0), TcpOffset(4))(0)
-        .asInstanceOf[TcpLinePartition].rows
-      assert(rows.map(_._1).toSeq == all, "overlap must not duplicate rows")
-      assert(rows.map(_._2).toSeq == Seq(0L, 1000L, 2000L, 3000L))
-    } finally c.stop()
   }
 
   test("compaction retry after a crash in the rename-to-delete window prunes, not rewrites") {
@@ -384,43 +392,44 @@ class TcpLineSourceSpec extends SparkTestBase {
     // [start, end) name and fail its rename forever (repeated
     // full-backlog IO). The fixed path detects the spanning segment and
     // finishes the deletes.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-walr-")
-      .toString + "/sources/0"
-    val walPath = java.nio.file.Paths.get(ckpt, "wal")
-    java.nio.file.Files.createDirectories(walPath)
-    def writeSeg(start: Int, msgs: Seq[String]): Unit = {
-      val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-        java.nio.file.Files.newOutputStream(
-          walPath.resolve(s"$start-${start + msgs.length}"))))
-      try msgs.zipWithIndex.foreach { case (m, j) =>
-        val bytes = m.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-        out.writeLong(1000L * (start + j)); out.writeBoolean(false)
-        out.writeInt(bytes.length); out.write(bytes)
-      } finally out.close()
+    withTempDir("graft-walr-") { tmp =>
+      val ckpt = s"$tmp/sources/0"
+      val walPath = java.nio.file.Paths.get(ckpt, "wal")
+      java.nio.file.Files.createDirectories(walPath)
+      def writeSeg(start: Int, msgs: Seq[String]): Unit = {
+        val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+          java.nio.file.Files.newOutputStream(
+            walPath.resolve(s"$start-${start + msgs.length}"))))
+        try msgs.zipWithIndex.foreach { case (m, j) =>
+          val bytes = m.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+          out.writeLong(1000L * (start + j)); out.writeBoolean(false)
+          out.writeInt(bytes.length); out.write(bytes)
+        } finally out.close()
+      }
+      val all = (0 until 8).map(i => s"ret $i")
+      writeSeg(0, all)                       // the crashed compaction's merge 0-8
+      (0 until 8).foreach(i => writeSeg(i, Seq(all(i))))  // its 8 stale sources
+      // device gone; walMaxSegments = 4 < 9 live segments, so the commit
+      // path's hygiene check invokes compaction, which must PRUNE the 8
+      // stale singles (the spanning 0-8 already covers the backlog), not
+      // rewrite-and-fail on the existing name
+      val a = new TcpLineMicroBatchStream("localhost", 1, None, None,
+        ckpt, walMaxSegments = 4)
+      try {
+        assert(a.latestOffset().asInstanceOf[TcpOffset].n == 8L)
+        a.commit(TcpOffset(0))   // nothing durable yet — pure hygiene pass
+        def segs() = java.nio.file.Files.list(walPath).toArray
+          .map(p => p.asInstanceOf[java.nio.file.Path].getFileName.toString)
+          .filter(_.matches("""\d+-\d+"""))
+        val after = segs()
+        assert(after.contains("0-8"), s"spanning segment deleted: ${after.toSeq}")
+        assert(after.length == 1, s"stale sources not pruned: ${after.toSeq}")
+        // and the whole range still replays exactly once
+        val rows = a.planInputPartitions(TcpOffset(0), TcpOffset(8))(0)
+          .asInstanceOf[TcpLinePartition].rows
+        assert(rows.map(_._1).toSeq == all)
+      } finally a.stop()
     }
-    val all = (0 until 8).map(i => s"ret $i")
-    writeSeg(0, all)                       // the crashed compaction's merge 0-8
-    (0 until 8).foreach(i => writeSeg(i, Seq(all(i))))  // its 8 stale sources
-    // device gone; walMaxSegments = 4 < 9 live segments, so the commit
-    // path's hygiene check invokes compaction, which must PRUNE the 8
-    // stale singles (the spanning 0-8 already covers the backlog), not
-    // rewrite-and-fail on the existing name
-    val a = new TcpLineMicroBatchStream("localhost", 1, None, None,
-      Some(ckpt), walMaxSegments = 4)
-    try {
-      assert(a.latestOffset().asInstanceOf[TcpOffset].n == 8L)
-      a.commit(TcpOffset(0))   // nothing durable yet — pure hygiene pass
-      def segs() = java.nio.file.Files.list(walPath).toArray
-        .map(p => p.asInstanceOf[java.nio.file.Path].getFileName.toString)
-        .filter(_.matches("""\d+-\d+"""))
-      val after = segs()
-      assert(after.contains("0-8"), s"spanning segment deleted: ${after.toSeq}")
-      assert(after.length == 1, s"stale sources not pruned: ${after.toSeq}")
-      // and the whole range still replays exactly once
-      val rows = a.planInputPartitions(TcpOffset(0), TcpOffset(8))(0)
-        .asInstanceOf[TcpLinePartition].rows
-      assert(rows.map(_._1).toSeq == all)
-    } finally a.stop()
   }
 
   test("WAL segment format: hostile payloads round-trip via an independent writer") {
@@ -431,39 +440,40 @@ class TcpLineSourceSpec extends SparkTestBase {
     // returns them byte-exactly: empty messages, every ISO-8859-1 high
     // byte, embedded '\r', a 64 KiB line, and split points at segment
     // boundaries.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-walf-")
-      .toString + "/sources/0"
-    val walPath = java.nio.file.Paths.get(ckpt, "wal")
-    java.nio.file.Files.createDirectories(walPath)
-    val highBytes = new String((128 to 255).map(_.toByte).toArray,
-      java.nio.charset.StandardCharsets.ISO_8859_1)
-    val msgs: IndexedSeq[(String, Long, Boolean)] = IndexedSeq(
-      ("", 1L, true),                       // empty frame
-      (highBytes, 2L, false),               // all high bytes
-      ("with\rcarriage", 3L, false),        // embedded CR survives
-      ("x" * 65536, 4L, false),             // long line
-      ("plain", 5L, true))
-    def writeSeg(start: Int, upto: Int): Unit = {
-      val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-        java.nio.file.Files.newOutputStream(walPath.resolve(s"$start-$upto"))))
-      try (start until upto).foreach { i =>
-        val (m, ts, fr) = msgs(i)
-        val bytes = m.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-        out.writeLong(ts); out.writeBoolean(fr)
-        out.writeInt(bytes.length); out.write(bytes)
-      } finally out.close()
+    withTempDir("graft-walf-") { tmp =>
+      val ckpt = s"$tmp/sources/0"
+      val walPath = java.nio.file.Paths.get(ckpt, "wal")
+      java.nio.file.Files.createDirectories(walPath)
+      val highBytes = new String((128 to 255).map(_.toByte).toArray,
+        java.nio.charset.StandardCharsets.ISO_8859_1)
+      val msgs: IndexedSeq[(String, Long, Boolean)] = IndexedSeq(
+        ("", 1L, true),                       // empty frame
+        (highBytes, 2L, false),               // all high bytes
+        ("with\rcarriage", 3L, false),        // embedded CR survives
+        ("x" * 65536, 4L, false),             // long line
+        ("plain", 5L, true))
+      def writeSeg(start: Int, upto: Int): Unit = {
+        val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+          java.nio.file.Files.newOutputStream(walPath.resolve(s"$start-$upto"))))
+        try (start until upto).foreach { i =>
+          val (m, ts, fr) = msgs(i)
+          val bytes = m.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+          out.writeLong(ts); out.writeBoolean(fr)
+          out.writeInt(bytes.length); out.write(bytes)
+        } finally out.close()
+      }
+      writeSeg(0, 2); writeSeg(2, 3); writeSeg(3, 5)
+      val src = new TcpLineMicroBatchStream("localhost", 1, None, None, ckpt)
+      try {
+        assert(src.latestOffset().asInstanceOf[TcpOffset].n == 5L)
+        val rows = src.planInputPartitions(TcpOffset(0), TcpOffset(5))(0)
+          .asInstanceOf[TcpLinePartition].rows
+        assert(rows.toSeq == msgs, "WAL round-trip altered a payload")
+        // a mid-segment range replays exactly its slice
+        val mid = src.planInputPartitions(TcpOffset(1), TcpOffset(4))(0)
+          .asInstanceOf[TcpLinePartition].rows
+        assert(mid.toSeq == msgs.slice(1, 4))
+      } finally src.stop()
     }
-    writeSeg(0, 2); writeSeg(2, 3); writeSeg(3, 5)
-    val src = new TcpLineMicroBatchStream("localhost", 1, None, None, Some(ckpt))
-    try {
-      assert(src.latestOffset().asInstanceOf[TcpOffset].n == 5L)
-      val rows = src.planInputPartitions(TcpOffset(0), TcpOffset(5))(0)
-        .asInstanceOf[TcpLinePartition].rows
-      assert(rows.toSeq == msgs, "WAL round-trip altered a payload")
-      // a mid-segment range replays exactly its slice
-      val mid = src.planInputPartitions(TcpOffset(1), TcpOffset(4))(0)
-        .asInstanceOf[TcpLinePartition].rows
-      assert(mid.toSeq == msgs.slice(1, 4))
-    } finally src.stop()
   }
 }

@@ -88,40 +88,42 @@ class EventStreamsSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     def ts(h: Int, m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
     val mem = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sess-ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-sess-out").toString
-    // the memory sink cannot recover from a checkpoint; the parquet
-    // sink (the production shape) can — its commit log also dedups a
-    // replayed batch, which is half of what this test pins
-    def start() = EventStreams.sessionize(
-        mem.toDF().toDF("user_id", "ts", "value"),
-        gap = "30 minutes", watermark = "10 minutes")
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    val q1 = start()
-    try {
-      // session A for user 1, still OPEN (watermark hasn't passed it)
-      mem.addData((1L, ts(9, 0), 1.0), (1L, ts(9, 5), 2.0))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // restart from the checkpoint: the open session's window state must
-    // be restored, extended by a pre-gap event, then closed by a late
-    // watermark advance — emitted exactly once with ALL three events
-    val q2 = start()
-    try {
-      mem.addData((1L, ts(9, 20), 4.0))
-      q2.processAllAvailable()
-      mem.addData((2L, ts(13, 0), 9.0))
-      q2.processAllAvailable()
-      val rows = spark.read.parquet(outDir)
-        .filter($"user_id" === 1L)
-        .select($"n_events", $"session_value").collect()
-        .map(r => (r.getLong(0), r.getDouble(1)))
-      assert(rows.toSeq == Seq((3L, 7.0)),
-        s"restored session wrong: ${rows.mkString(", ")}")
-    } finally q2.stop()
+    withTempDir("graft-sess-") { tmp =>
+      val ckpt = mkdir(tmp, "ckpt")
+      val outDir = mkdir(tmp, "out")
+      // the memory sink cannot recover from a checkpoint; the parquet
+      // sink (the production shape) can — its commit log also dedups a
+      // replayed batch, which is half of what this test pins
+      def start() = EventStreams.sessionize(
+          mem.toDF().toDF("user_id", "ts", "value"),
+          gap = "30 minutes", watermark = "10 minutes")
+        .writeStream.format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      val q1 = start()
+      try {
+        // session A for user 1, still OPEN (watermark hasn't passed it)
+        mem.addData((1L, ts(9, 0), 1.0), (1L, ts(9, 5), 2.0))
+        q1.processAllAvailable()
+      } finally q1.stop()
+      // restart from the checkpoint: the open session's window state must
+      // be restored, extended by a pre-gap event, then closed by a late
+      // watermark advance — emitted exactly once with ALL three events
+      val q2 = start()
+      try {
+        mem.addData((1L, ts(9, 20), 4.0))
+        q2.processAllAvailable()
+        mem.addData((2L, ts(13, 0), 9.0))
+        q2.processAllAvailable()
+        val rows = spark.read.parquet(outDir)
+          .filter($"user_id" === 1L)
+          .select($"n_events", $"session_value").collect()
+          .map(r => (r.getLong(0), r.getDouble(1)))
+        assert(rows.toSeq == Seq((3L, 7.0)),
+          s"restored session wrong: ${rows.mkString(", ")}")
+      } finally q2.stop()
+    }
   }
 
   test("sessionize under a hot key: one user owning 10% of events stays exact") {

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkTestBase
 import graft.config.DeviceConfig
 import graft.sources.TcpFixtureServer
@@ -104,27 +102,29 @@ class IngestPipelineSpec extends SparkTestBase {
       |pack_length = 3
       |destination = ./ignored
       |""".stripMargin)
-    val dest = Files.createTempDirectory("graft-ingest-").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val q = IngestPipeline.start(spark, cfg, dest, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
-    try {
-      // 7 msgs alternate level 1/0 → group1 gets 4 (1 pack of 3),
-      // group0 gets 3 (1 pack of 3)
-      val deadline = System.currentTimeMillis() + 60000
-      def readOut() =
-        try spark.read.parquet(dest) catch { case _: Exception => spark.emptyDataFrame }
-      while (System.currentTimeMillis() < deadline &&
-          (readOut().isEmpty || readOut().count() < 6)) Thread.sleep(500)
-      val out = spark.read.parquet(dest)
-      assert(out.count() == 6)
-      // partition-column values come back via path-type inference (int)
-      assert(out.select($"level".cast("long")).distinct().collect()
-        .map(_.getLong(0)).toSet == Set(0L, 1L))
-      // partition columns present; rh/temp/time preserved per record
-      assert(out.columns.toSet == Set("rh", "temp", "time", "level", "pack_seq", "pack_pos"))
-      assert(out.filter($"level" === 1 && $"pack_pos" === 0).count() == 1)
-    } finally { q.stop(); srv.close() }
+    withTempDir("graft-ingest-") { tmp =>
+      val dest = mkdir(tmp, "dest")
+      val ckpt = mkdir(tmp, "ckpt")
+      val q = IngestPipeline.start(spark, cfg, dest, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
+      try {
+        // 7 msgs alternate level 1/0 → group1 gets 4 (1 pack of 3),
+        // group0 gets 3 (1 pack of 3)
+        val deadline = System.currentTimeMillis() + 60000
+        def readOut() =
+          try spark.read.parquet(dest) catch { case _: Exception => spark.emptyDataFrame }
+        while (System.currentTimeMillis() < deadline &&
+            (readOut().isEmpty || readOut().count() < 6)) Thread.sleep(500)
+        val out = spark.read.parquet(dest)
+        assert(out.count() == 6)
+        // partition-column values come back via path-type inference (int)
+        assert(out.select($"level".cast("long")).distinct().collect()
+          .map(_.getLong(0)).toSet == Set(0L, 1L))
+        // partition columns present; rh/temp/time preserved per record
+        assert(out.columns.toSet == Set("rh", "temp", "time", "level", "pack_seq", "pack_pos"))
+        assert(out.filter($"level" === 1 && $"pack_pos" === 0).count() == 1)
+      } finally { q.stop(); srv.close() }
+    }
   }
 
   test("X3: stop + restart from checkpoint — state and offsets recover") {
@@ -148,48 +148,50 @@ class IngestPipelineSpec extends SparkTestBase {
       |pack_length = 2
       |destination = ./ignored
       |""".stripMargin)
-    val dest = Files.createTempDirectory("graft-restart-").toString
-    val ckpt = Files.createTempDirectory("graft-restart-ckpt-").toString
-    def readCount() =
-      try spark.read.parquet(dest).count() catch { case _: Exception => 0L }
-    val q1 = IngestPipeline.start(spark, cfg, dest, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
-    try {
-      val deadline1 = System.currentTimeMillis() + 60000
-      while (readCount() < 2 && System.currentTimeMillis() < deadline1)
-        Thread.sleep(500)
-      q1.processAllAvailable()  // commit everything read so far
-      assert(readCount() == 2)  // first pack on disk, one row in state
-    } finally q1.stop()
-    // second incarnation: fresh source instance, same checkpoint. The
-    // "device" comes back on the SAME port as a fresh server — a fresh
-    // script queue, so the stopped query's lingering connection churn
-    // can't consume the new script.
-    srv.close()
-    // the old listener's kernel teardown can lag close() — retry the rebind
-    def rebind(port: Int): TcpFixtureServer = {
-      val deadline = System.currentTimeMillis() + 15000
-      while (true) {
-        try return new TcpFixtureServer(port)
-        catch {
-          case _: java.net.BindException if System.currentTimeMillis() < deadline =>
-            Thread.sleep(250)
+    withTempDir("graft-restart-") { tmp =>
+      val dest = mkdir(tmp, "dest")
+      val ckpt = mkdir(tmp, "ckpt")
+      def readCount() =
+        try spark.read.parquet(dest).count() catch { case _: Exception => 0L }
+      val q1 = IngestPipeline.start(spark, cfg, dest, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
+      try {
+        val deadline1 = System.currentTimeMillis() + 60000
+        while (readCount() < 2 && System.currentTimeMillis() < deadline1)
+          Thread.sleep(500)
+        q1.processAllAvailable()  // commit everything read so far
+        assert(readCount() == 2)  // first pack on disk, one row in state
+      } finally q1.stop()
+      // second incarnation: fresh source instance, same checkpoint. The
+      // "device" comes back on the SAME port as a fresh server — a fresh
+      // script queue, so the stopped query's lingering connection churn
+      // can't consume the new script.
+      srv.close()
+      // the old listener's kernel teardown can lag close() — retry the rebind
+      def rebind(port: Int): TcpFixtureServer = {
+        val deadline = System.currentTimeMillis() + 15000
+        while (true) {
+          try return new TcpFixtureServer(port)
+          catch {
+            case _: java.net.BindException if System.currentTimeMillis() < deadline =>
+              Thread.sleep(250)
+          }
         }
+        throw new IllegalStateException("unreachable")
       }
-      throw new IllegalStateException("unreachable")
+      val srv2 = rebind(srv.port)
+      srv2.enqueue((4 to 6).map(i => s"07 RH= $i.0 %RH T= 10.0 'C \r\n".getBytes): _*)
+      val q2 = IngestPipeline.start(spark, cfg, dest, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
+      try {
+        val deadline2 = System.currentTimeMillis() + 60000
+        while (readCount() < 6 && System.currentTimeMillis() < deadline2)
+          Thread.sleep(500)
+        // buffered row 3 completed a pack with row 4; rows 5+6 packed next
+        assert(readCount() == 6)
+        assert(q2.exception.isEmpty)
+      } finally { q2.stop(); srv2.close() }
     }
-    val srv2 = rebind(srv.port)
-    srv2.enqueue((4 to 6).map(i => s"07 RH= $i.0 %RH T= 10.0 'C \r\n".getBytes): _*)
-    val q2 = IngestPipeline.start(spark, cfg, dest, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
-    try {
-      val deadline2 = System.currentTimeMillis() + 60000
-      while (readCount() < 6 && System.currentTimeMillis() < deadline2)
-        Thread.sleep(500)
-      // buffered row 3 completed a pack with row 4; rows 5+6 packed next
-      assert(readCount() == 6)
-      assert(q2.exception.isEmpty)
-    } finally { q2.stop(); srv2.close() }
   }
 
   test("BASELINE streaming envelope: 5000 msgs sustained, zero dropped windows") {
@@ -216,23 +218,25 @@ class IngestPipelineSpec extends SparkTestBase {
       |pack_length = 100
       |destination = ./ignored
       |""".stripMargin)
-    val dest = Files.createTempDirectory("graft-tput-").toString
-    val ckpt = Files.createTempDirectory("graft-tput-ckpt-").toString
-    val t0 = System.nanoTime()
-    val q = IngestPipeline.start(spark, cfg, dest, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"))
-    try {
-      def readCount() =
-        try spark.read.parquet(dest).count() catch { case _: Exception => 0L }
-      val deadline = System.currentTimeMillis() + 60000
-      while (readCount() < 5000 && System.currentTimeMillis() < deadline)
-        Thread.sleep(250)
-      val secs = (System.nanoTime() - t0) / 1e9
-      // 5000 msgs, pack 100, one group → all 50 windows must commit
-      assert(readCount() == 5000, s"dropped windows after $secs s")
-      info(f"end-to-end ${5000 / secs}%.0f msg/s (reference station envelope: 60 msg/s)")
-      assert(secs < 60.0)
-    } finally { q.stop(); srv.close() }
+    withTempDir("graft-tput-") { tmp =>
+      val dest = mkdir(tmp, "dest")
+      val ckpt = mkdir(tmp, "ckpt")
+      val t0 = System.nanoTime()
+      val q = IngestPipeline.start(spark, cfg, dest, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"))
+      try {
+        def readCount() =
+          try spark.read.parquet(dest).count() catch { case _: Exception => 0L }
+        val deadline = System.currentTimeMillis() + 60000
+        while (readCount() < 5000 && System.currentTimeMillis() < deadline)
+          Thread.sleep(250)
+        val secs = (System.nanoTime() - t0) / 1e9
+        // 5000 msgs, pack 100, one group → all 50 windows must commit
+        assert(readCount() == 5000, s"dropped windows after $secs s")
+        info(f"end-to-end ${5000 / secs}%.0f msg/s (reference station envelope: 60 msg/s)")
+        assert(secs < 60.0)
+      } finally { q.stop(); srv.close() }
+    }
   }
 
   test("filename-template sink: one file per pack, reference naming (P7/K1)") {
@@ -250,34 +254,36 @@ class IngestPipelineSpec extends SparkTestBase {
       |pack_length = 2
       |destination = ./ignored
       |""".stripMargin)
-    val dest = Files.createTempDirectory("graft-tmpl-").toString
-    val ckpt = Files.createTempDirectory("graft-tmpl-ckpt-").toString
-    val q = IngestPipeline.startWithFilenameTemplate(spark, cfg, dest, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      def files() = new java.io.File(dest).listFiles()
-        .filter(_.getName.startsWith("MSU_M7_")).toSeq
-      // wait until both pack files are fully committed (readable with
-      // their 2 rows), not merely listed
-      def totalRows() =
-        try { val fs = files(); if (fs.size < 2) -1L
-          else fs.map(f => spark.read.parquet(f.getPath).count()).sum }
-        catch { case _: Exception => -1L }
-      // 5 msgs, pack 2 → 2 full packs → 2 files; 5th message stays buffered
-      while (totalRows() < 4 && System.currentTimeMillis() < deadline)
-        Thread.sleep(500)
-      assert(files().size == 2)
-      assert(files().forall(_.getName.matches(
-        """MSU_M7_\d{4}-\d{2}-\d{2}_\d{2}-\d{2}-\d{2}_\d+\.parquet""")))
-      // read each pack file individually (multiple .parquet-suffixed
-      // roots in one read confuse file listing)
-      val perFile = files().map(f => spark.read.parquet(f.getPath))
-      assert(perFile.map(_.count()).sum == 4)
-      assert(perFile.forall(_.count() == 2))  // exactly one full pack each
-      // group column stripped from the data — it lives in the filename
-      assert(perFile.forall(!_.columns.contains("level")))
-    } finally { q.stop(); srv.close() }
+    withTempDir("graft-tmpl-") { tmp =>
+      val dest = mkdir(tmp, "dest")
+      val ckpt = mkdir(tmp, "ckpt")
+      val q = IngestPipeline.startWithFilenameTemplate(spark, cfg, dest, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        def files() = new java.io.File(dest).listFiles()
+          .filter(_.getName.startsWith("MSU_M7_")).toSeq
+        // wait until both pack files are fully committed (readable with
+        // their 2 rows), not merely listed
+        def totalRows() =
+          try { val fs = files(); if (fs.size < 2) -1L
+            else fs.map(f => spark.read.parquet(f.getPath).count()).sum }
+          catch { case _: Exception => -1L }
+        // 5 msgs, pack 2 → 2 full packs → 2 files; 5th message stays buffered
+        while (totalRows() < 4 && System.currentTimeMillis() < deadline)
+          Thread.sleep(500)
+        assert(files().size == 2)
+        assert(files().forall(_.getName.matches(
+          """MSU_M7_\d{4}-\d{2}-\d{2}_\d{2}-\d{2}-\d{2}_\d+\.parquet""")))
+        // read each pack file individually (multiple .parquet-suffixed
+        // roots in one read confuse file listing)
+        val perFile = files().map(f => spark.read.parquet(f.getPath))
+        assert(perFile.map(_.count()).sum == 4)
+        assert(perFile.forall(_.count() == 2))  // exactly one full pack each
+        // group column stripped from the data — it lives in the filename
+        assert(perFile.forall(!_.columns.contains("level")))
+      } finally { q.stop(); srv.close() }
+    }
   }
 
   test("filename-template sink: sentinel-valued (NULL) group key packs cleanly") {
@@ -299,26 +305,28 @@ class IngestPipelineSpec extends SparkTestBase {
       |pack_length = 2
       |destination = ./ignored
       |""".stripMargin)
-    val dest = Files.createTempDirectory("graft-null-").toString
-    val ckpt = Files.createTempDirectory("graft-null-ckpt-").toString
-    val q = IngestPipeline.startWithFilenameTemplate(spark, cfg, dest, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      // group fragment empty → stem is MSU_M_<date>
-      def files() = new java.io.File(dest).listFiles()
-        .filter(_.getName.matches("""MSU_M_\d{4}.*\.parquet""")).toSeq
-      // wait until the pack file is committed (readable), not just created
-      def packRows() =
-        try files().headOption.fold(-1L)(f => spark.read.parquet(f.getPath).count())
-        catch { case _: Exception => -1L }
-      while (packRows() < 2 && System.currentTimeMillis() < deadline)
-        Thread.sleep(500)
-      assert(files().size == 1)
-      val out = spark.read.parquet(files().head.getPath)
-      assert(out.count() == 2)
-      assert(!out.columns.contains("level"))
-    } finally { q.stop(); srv.close() }
+    withTempDir("graft-null-") { tmp =>
+      val dest = mkdir(tmp, "dest")
+      val ckpt = mkdir(tmp, "ckpt")
+      val q = IngestPipeline.startWithFilenameTemplate(spark, cfg, dest, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        // group fragment empty → stem is MSU_M_<date>
+        def files() = new java.io.File(dest).listFiles()
+          .filter(_.getName.matches("""MSU_M_\d{4}.*\.parquet""")).toSeq
+        // wait until the pack file is committed (readable), not just created
+        def packRows() =
+          try files().headOption.fold(-1L)(f => spark.read.parquet(f.getPath).count())
+          catch { case _: Exception => -1L }
+        while (packRows() < 2 && System.currentTimeMillis() < deadline)
+          Thread.sleep(500)
+        assert(files().size == 1)
+        val out = spark.read.parquet(files().head.getPath)
+        assert(out.count() == 2)
+        assert(!out.columns.contains("level"))
+      } finally { q.stop(); srv.close() }
+    }
   }
 
   test("STATION-scale kill/replay: 4 concurrent devices, zero dropped windows (X3/X4)") {
@@ -360,57 +368,58 @@ class IngestPipelineSpec extends SparkTestBase {
     val devs = sonics.map { case (k, srv) =>
       (s"S$k", cfgFor(s"S$k", srv.port, sonicPack, 50), sonicMsgs)
     } :+ (("P4", cfgFor("P4", probeSrv.port, 3, 4), probeMsgs))
-    val dirs = devs.map { case (name, _, _) =>
-      name -> (Files.createTempDirectory(s"graft-stn-$name-").toString,
-               Files.createTempDirectory(s"graft-stn-$name-ckpt-").toString)
-    }.toMap
-    def readCount(dest: String) =
-      try spark.read.parquet(dest).count() catch { case _: Exception => 0L }
-    val trig = org.apache.spark.sql.streaming.Trigger.ProcessingTime("200 milliseconds")
-    // phase 1: run the whole station; kill while the sonics' metered
-    // backlog (50 msgs/trigger) is still draining
-    val phase1 = devs.map { case (name, cfg, _) =>
-      val (dest, ckpt) = dirs(name)
-      name -> IngestPipeline.start(spark, cfg, dest, ckpt, trigger = trig)
-    }.toMap
-    try {
-      val deadline = System.currentTimeMillis() + 90000
-      def drained(min: Long) = devs.forall { case (name, _, total) =>
-        val target = if (total == sonicMsgs) min else 6L
-        readCount(dirs(name)._1) >= target
-      }
-      while (!drained(400) && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      assert(drained(400), "station never reached the kill point")
-    } finally phase1.values.foreach(_.stop())   // hard stop, mid-drain
-    sonics.foreach(_._2.close()); probeSrv.close()
-    // phase 2: every device gone (connection refused, 1 s retry loop);
-    // the four restarted queries drain their WALs + state stores
-    val phase2 = devs.map { case (name, cfg, _) =>
-      val (dest, ckpt) = dirs(name)
-      name -> IngestPipeline.start(spark, cfg, dest, ckpt, trigger = trig)
-    }.toMap
-    try {
-      val deadline = System.currentTimeMillis() + 90000
-      def complete() = devs.forall { case (name, _, total) =>
-        readCount(dirs(name)._1) >= total
-      }
-      while (!complete() && System.currentTimeMillis() < deadline)
-        Thread.sleep(200)
-      devs.foreach { case (name, _, total) =>
-        val n = readCount(dirs(name)._1)
-        assert(n == total, s"$name: $n of $total rows after station replay")
-      }
-      phase2.values.foreach(q => assert(q.exception.isEmpty))
-      // zero dropped windows, structurally: every committed pack is FULL
-      devs.foreach { case (name, cfg, total) =>
-        val out = spark.read.parquet(dirs(name)._1)
-        val perPack = out.groupBy("level", "pack_seq").count()
-          .select("count").distinct().collect().map(_.getLong(0)).toSet
-        assert(perPack == Set(cfg.packLength.toLong),
-          s"$name: partial packs on disk: $perPack")
-      }
-    } finally phase2.values.foreach(_.stop())
+    withTempDir("graft-stn-") { tmp =>
+      val dirs = devs.map { case (name, _, _) =>
+        name -> (mkdir(tmp, name), mkdir(tmp, s"$name-ckpt"))
+      }.toMap
+      def readCount(dest: String) =
+        try spark.read.parquet(dest).count() catch { case _: Exception => 0L }
+      val trig = org.apache.spark.sql.streaming.Trigger.ProcessingTime("200 milliseconds")
+      // phase 1: run the whole station; kill while the sonics' metered
+      // backlog (50 msgs/trigger) is still draining
+      val phase1 = devs.map { case (name, cfg, _) =>
+        val (dest, ckpt) = dirs(name)
+        name -> IngestPipeline.start(spark, cfg, dest, ckpt, trigger = trig)
+      }.toMap
+      try {
+        val deadline = System.currentTimeMillis() + 90000
+        def drained(min: Long) = devs.forall { case (name, _, total) =>
+          val target = if (total == sonicMsgs) min else 6L
+          readCount(dirs(name)._1) >= target
+        }
+        while (!drained(400) && System.currentTimeMillis() < deadline)
+          Thread.sleep(100)
+        assert(drained(400), "station never reached the kill point")
+      } finally phase1.values.foreach(_.stop())   // hard stop, mid-drain
+      sonics.foreach(_._2.close()); probeSrv.close()
+      // phase 2: every device gone (connection refused, 1 s retry loop);
+      // the four restarted queries drain their WALs + state stores
+      val phase2 = devs.map { case (name, cfg, _) =>
+        val (dest, ckpt) = dirs(name)
+        name -> IngestPipeline.start(spark, cfg, dest, ckpt, trigger = trig)
+      }.toMap
+      try {
+        val deadline = System.currentTimeMillis() + 90000
+        def complete() = devs.forall { case (name, _, total) =>
+          readCount(dirs(name)._1) >= total
+        }
+        while (!complete() && System.currentTimeMillis() < deadline)
+          Thread.sleep(200)
+        devs.foreach { case (name, _, total) =>
+          val n = readCount(dirs(name)._1)
+          assert(n == total, s"$name: $n of $total rows after station replay")
+        }
+        phase2.values.foreach(q => assert(q.exception.isEmpty))
+        // zero dropped windows, structurally: every committed pack is FULL
+        devs.foreach { case (name, cfg, total) =>
+          val out = spark.read.parquet(dirs(name)._1)
+          val perPack = out.groupBy("level", "pack_seq").count()
+            .select("count").distinct().collect().map(_.getLong(0)).toSet
+          assert(perPack == Set(cfg.packLength.toLong),
+            s"$name: partial packs on disk: $perPack")
+        }
+      } finally phase2.values.foreach(_.stop())
+    }
   }
 
   test("SOAK: repeated kill cycles keep WAL segments and state-store size bounded") {
@@ -441,112 +450,113 @@ class IngestPipelineSpec extends SparkTestBase {
       |pack_length = $pack
       |destination = ./ignored
       |""".stripMargin)
-    val dirs = (Seq("S1", "S2", "S3", "P4")).map { name =>
-      name -> (Files.createTempDirectory(s"graft-soak-$name-").toString,
-               Files.createTempDirectory(s"graft-soak-$name-ckpt-").toString)
-    }.toMap
-    def readCount(dest: String) =
-      try spark.read.parquet(dest).count() catch { case _: Exception => 0L }
-    def walSegs(ckpt: String): Int = {
-      val p = java.nio.file.Paths.get(ckpt, "sources", "0", "wal")
-      if (!java.nio.file.Files.isDirectory(p)) 0
-      else java.nio.file.Files.list(p).toArray
-        .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
-        .count(_.matches("""\d+-\d+"""))
-    }
-    def dirBytes(root: String): Long = {
-      val p = java.nio.file.Paths.get(root)
-      if (!java.nio.file.Files.isDirectory(p)) 0L
-      else java.nio.file.Files.walk(p).toArray
-        .map(_.asInstanceOf[java.nio.file.Path])
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(java.nio.file.Files.size(_)).sum
-    }
-    def stateBytes(ckpt: String): Long = dirBytes(s"$ckpt/state")
-    val trig = org.apache.spark.sql.streaming.Trigger.ProcessingTime("150 milliseconds")
-    val stateSizes = Array.fill(cycles)(Map.empty[String, Long])
-    for (c <- 0 until cycles) {
-      val sonicSrvs = (1 to 3).map { k =>
-        val srv = new TcpFixtureServer
-        val msgs = (c * perSonic + 1 to (c + 1) * perSonic)
-          .map(i => s"0$k RH= ${i % 97}.${i % 10} %RH T= ${i % 30}.0 'C \r\n")
-        srv.enqueueScript(graft.sources.TcpFixtureServer.Send(msgs.mkString.getBytes))
-        s"S$k" -> srv
+    withTempDir("graft-soak-") { tmp =>
+      val dirs = (Seq("S1", "S2", "S3", "P4")).map { name =>
+        name -> (mkdir(tmp, name), mkdir(tmp, s"$name-ckpt"))
       }.toMap
-      val probeSrv = new TcpFixtureServer
-      probeSrv.enqueueScript(graft.sources.TcpFixtureServer.Send(
-        (c * perProbe + 1 to (c + 1) * perProbe)
-          .map(i => s"07 RH= $i.0 %RH T= 10.0 'C \r\n").mkString.getBytes))
-      val devs = (1 to 3).map { k =>
-        (s"S$k", cfgFor(s"S$k", sonicSrvs(s"S$k").port, 25, 40))
-      } :+ (("P4", cfgFor("P4", probeSrv.port, 3, 4)))
-      val qs = devs.map { case (name, cfg) =>
+      def readCount(dest: String) =
+        try spark.read.parquet(dest).count() catch { case _: Exception => 0L }
+      def walSegs(ckpt: String): Int = {
+        val p = java.nio.file.Paths.get(ckpt, "sources", "0", "wal")
+        if (!java.nio.file.Files.isDirectory(p)) 0
+        else java.nio.file.Files.list(p).toArray
+          .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+          .count(_.matches("""\d+-\d+"""))
+      }
+      def dirBytes(root: String): Long = {
+        val p = java.nio.file.Paths.get(root)
+        if (!java.nio.file.Files.isDirectory(p)) 0L
+        else java.nio.file.Files.walk(p).toArray
+          .map(_.asInstanceOf[java.nio.file.Path])
+          .filter(java.nio.file.Files.isRegularFile(_))
+          .map(java.nio.file.Files.size(_)).sum
+      }
+      def stateBytes(ckpt: String): Long = dirBytes(s"$ckpt/state")
+      val trig = org.apache.spark.sql.streaming.Trigger.ProcessingTime("150 milliseconds")
+      val stateSizes = Array.fill(cycles)(Map.empty[String, Long])
+      for (c <- 0 until cycles) {
+        val sonicSrvs = (1 to 3).map { k =>
+          val srv = new TcpFixtureServer
+          val msgs = (c * perSonic + 1 to (c + 1) * perSonic)
+            .map(i => s"0$k RH= ${i % 97}.${i % 10} %RH T= ${i % 30}.0 'C \r\n")
+          srv.enqueueScript(graft.sources.TcpFixtureServer.Send(msgs.mkString.getBytes))
+          s"S$k" -> srv
+        }.toMap
+        val probeSrv = new TcpFixtureServer
+        probeSrv.enqueueScript(graft.sources.TcpFixtureServer.Send(
+          (c * perProbe + 1 to (c + 1) * perProbe)
+            .map(i => s"07 RH= $i.0 %RH T= 10.0 'C \r\n").mkString.getBytes))
+        val devs = (1 to 3).map { k =>
+          (s"S$k", cfgFor(s"S$k", sonicSrvs(s"S$k").port, 25, 40))
+        } :+ (("P4", cfgFor("P4", probeSrv.port, 3, 4)))
+        val qs = devs.map { case (name, cfg) =>
+          val (dest, ckpt) = dirs(name)
+          name -> IngestPipeline.start(spark, cfg, dest, ckpt, trigger = trig)
+        }.toMap
+        try {
+          // kill mid-drain: each sonic has committed PART of this cycle's
+          // burst (the reader WAL-persisted all of it long before)
+          val deadline = System.currentTimeMillis() + 90000
+          def midway() = (1 to 3).forall { k =>
+            readCount(dirs(s"S$k")._1) >= c * perSonic + 75
+          }
+          while (!midway() && System.currentTimeMillis() < deadline)
+            Thread.sleep(100)
+          assert(midway(), s"cycle $c never reached its kill point")
+        } finally {
+          qs.values.foreach(_.stop())
+          sonicSrvs.values.foreach(_.close()); probeSrv.close()
+        }
+        dirs.foreach { case (name, (_, ckpt)) =>
+          val segs = walSegs(ckpt)
+          assert(segs <= 9, s"$name cycle $c: WAL grew to $segs segments")
+        }
+        stateSizes(c) = dirs.map { case (name, (_, ckpt)) =>
+          name -> stateBytes(ckpt)
+        }
+      }
+      // final phase: every device gone — drain the last backlog from WAL
+      val devs = (1 to 3).map(k => (s"S$k", cfgFor(s"S$k", 1, 25, 40))) :+
+        (("P4", cfgFor("P4", 1, 3, 4)))
+      val totals = Map("S1" -> (cycles * perSonic).toLong,
+        "S2" -> (cycles * perSonic).toLong, "S3" -> (cycles * perSonic).toLong,
+        "P4" -> (cycles * perProbe).toLong)
+      val fin = devs.map { case (name, cfg) =>
         val (dest, ckpt) = dirs(name)
         name -> IngestPipeline.start(spark, cfg, dest, ckpt, trigger = trig)
       }.toMap
       try {
-        // kill mid-drain: each sonic has committed PART of this cycle's
-        // burst (the reader WAL-persisted all of it long before)
         val deadline = System.currentTimeMillis() + 90000
-        def midway() = (1 to 3).forall { k =>
-          readCount(dirs(s"S$k")._1) >= c * perSonic + 75
+        def complete() = totals.forall { case (n, t) => readCount(dirs(n)._1) >= t }
+        while (!complete() && System.currentTimeMillis() < deadline)
+          Thread.sleep(200)
+        totals.foreach { case (name, t) =>
+          assert(readCount(dirs(name)._1) == t,
+            s"$name: ${readCount(dirs(name)._1)} of $t rows after soak")
         }
-        while (!midway() && System.currentTimeMillis() < deadline)
-          Thread.sleep(100)
-        assert(midway(), s"cycle $c never reached its kill point")
+        // structural zero-loss: every committed pack is full
+        devs.foreach { case (name, cfg) =>
+          val perPack = spark.read.parquet(dirs(name)._1)
+            .groupBy("level", "pack_seq").count()
+            .select("count").distinct().collect().map(_.getLong(0)).toSet
+          assert(perPack == Set(cfg.packLength.toLong),
+            s"$name: partial packs after soak: $perPack")
+        }
+        // state-store boundedness: the last cycle's footprint is within
+        // 4x the first cycle's (retention keeps a sliding window of
+        // deltas/snapshots — flat across cycles, not linear in them);
+        // the 64 KiB floor absorbs tiny-file noise on near-empty stores
+        dirs.foreach { case (name, _) =>
+          val first = stateSizes(0)(name)
+          val last = stateSizes(cycles - 1)(name)
+          assert(last <= math.max(first * 4, 65536L),
+            s"$name: state store grew $first -> $last bytes across cycles")
+        }
       } finally {
-        qs.values.foreach(_.stop())
-        sonicSrvs.values.foreach(_.close()); probeSrv.close()
+        fin.values.foreach(_.stop())
+        spark.conf.unset("spark.sql.streaming.minBatchesToRetain")
+        spark.conf.unset("spark.sql.streaming.stateStore.maintenanceInterval")
       }
-      dirs.foreach { case (name, (_, ckpt)) =>
-        val segs = walSegs(ckpt)
-        assert(segs <= 9, s"$name cycle $c: WAL grew to $segs segments")
-      }
-      stateSizes(c) = dirs.map { case (name, (_, ckpt)) =>
-        name -> stateBytes(ckpt)
-      }
-    }
-    // final phase: every device gone — drain the last backlog from WAL
-    val devs = (1 to 3).map(k => (s"S$k", cfgFor(s"S$k", 1, 25, 40))) :+
-      (("P4", cfgFor("P4", 1, 3, 4)))
-    val totals = Map("S1" -> (cycles * perSonic).toLong,
-      "S2" -> (cycles * perSonic).toLong, "S3" -> (cycles * perSonic).toLong,
-      "P4" -> (cycles * perProbe).toLong)
-    val fin = devs.map { case (name, cfg) =>
-      val (dest, ckpt) = dirs(name)
-      name -> IngestPipeline.start(spark, cfg, dest, ckpt, trigger = trig)
-    }.toMap
-    try {
-      val deadline = System.currentTimeMillis() + 90000
-      def complete() = totals.forall { case (n, t) => readCount(dirs(n)._1) >= t }
-      while (!complete() && System.currentTimeMillis() < deadline)
-        Thread.sleep(200)
-      totals.foreach { case (name, t) =>
-        assert(readCount(dirs(name)._1) == t,
-          s"$name: ${readCount(dirs(name)._1)} of $t rows after soak")
-      }
-      // structural zero-loss: every committed pack is full
-      devs.foreach { case (name, cfg) =>
-        val perPack = spark.read.parquet(dirs(name)._1)
-          .groupBy("level", "pack_seq").count()
-          .select("count").distinct().collect().map(_.getLong(0)).toSet
-        assert(perPack == Set(cfg.packLength.toLong),
-          s"$name: partial packs after soak: $perPack")
-      }
-      // state-store boundedness: the last cycle's footprint is within
-      // 4x the first cycle's (retention keeps a sliding window of
-      // deltas/snapshots — flat across cycles, not linear in them);
-      // the 64 KiB floor absorbs tiny-file noise on near-empty stores
-      dirs.foreach { case (name, _) =>
-        val first = stateSizes(0)(name)
-        val last = stateSizes(cycles - 1)(name)
-        assert(last <= math.max(first * 4, 65536L),
-          s"$name: state store grew $first -> $last bytes across cycles")
-      }
-    } finally {
-      fin.values.foreach(_.stop())
-      spark.conf.unset("spark.sql.streaming.minBatchesToRetain")
-      spark.conf.unset("spark.sql.streaming.stateStore.maintenanceInterval")
     }
   }
 }

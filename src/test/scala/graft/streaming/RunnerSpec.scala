@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkTestBase
 import graft.config.DeviceConfig
 import graft.sources.TcpFixtureServer
@@ -34,28 +32,30 @@ class RunnerSpec extends SparkTestBase {
       "01 RH= 1.0 %RH T= 10.0 'C \r\n".getBytes,
       "not a sensor line\n".getBytes,
       "02 RH= 2.0 %RH T= 20.0 'C \r\n".getBytes)
-    val dest = Files.createTempDirectory("graft-hbm-").toString
-    val ckpt = Files.createTempDirectory("graft-hbm-ckpt-").toString
-    val q = IngestPipeline.start(spark, cfgFor(srv.port, "H"), dest, ckpt,
-      trigger = Trigger.ProcessingTime("500 milliseconds"))
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      def dropSeen() = events.toArray.map(_.toString)
-        .exists(s => s.contains("\"dropped\"") && s.contains("\"regex_drop\":1"))
-      while (!dropSeen() && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable(); Thread.sleep(200)
+    withTempDir("graft-hbm-") { tmp =>
+      val dest = mkdir(tmp, "dest")
+      val ckpt = mkdir(tmp, "ckpt")
+      val q = IngestPipeline.start(spark, cfgFor(srv.port, "H"), dest, ckpt,
+        trigger = Trigger.ProcessingTime("500 milliseconds"))
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        def dropSeen() = events.toArray.map(_.toString)
+          .exists(s => s.contains("\"dropped\"") && s.contains("\"regex_drop\":1"))
+        while (!dropSeen() && System.currentTimeMillis() < deadline) {
+          q.processAllAvailable(); Thread.sleep(200)
+        }
+        assert(dropSeen(), "no progress event carried the regex_drop counter")
+        // K4 host-health parity (hb_client.sh:3-17): every progress event
+        // carries the /proc-derived host fields beside the query metrics
+        val progress = events.toArray.map(_.toString)
+          .filter(_.contains("\"event\":\"progress\""))
+        assert(progress.nonEmpty && progress.forall(s =>
+          s.contains("\"host\":{") && s.contains("\"disk_used_pct\":") &&
+            s.contains("\"ram_used_pct\":") && s.contains("\"load1\":")),
+          "progress events missing host-health fields")
+      } finally {
+        q.stop(); srv.close(); spark.streams.removeListener(listener)
       }
-      assert(dropSeen(), "no progress event carried the regex_drop counter")
-      // K4 host-health parity (hb_client.sh:3-17): every progress event
-      // carries the /proc-derived host fields beside the query metrics
-      val progress = events.toArray.map(_.toString)
-        .filter(_.contains("\"event\":\"progress\""))
-      assert(progress.nonEmpty && progress.forall(s =>
-        s.contains("\"host\":{") && s.contains("\"disk_used_pct\":") &&
-          s.contains("\"ram_used_pct\":") && s.contains("\"load1\":")),
-        "progress events missing host-health fields")
-    } finally {
-      q.stop(); srv.close(); spark.streams.removeListener(listener)
     }
   }
 
@@ -80,24 +80,26 @@ class RunnerSpec extends SparkTestBase {
     val srvB = new TcpFixtureServer
     srvA.enqueue((1 to 4).map(i => s"01 RH= $i.0 %RH T= 10.0 'C \r\n".getBytes): _*)
     srvB.enqueue((1 to 4).map(i => s"02 RH= $i.0 %RH T= 20.0 'C \r\n".getBytes): _*)
-    val destRoot = Files.createTempDirectory("graft-station-").toString
-    val ckptRoot = Files.createTempDirectory("graft-station-ckpt-").toString
-    val queries = Runner.runStation(spark,
-      Seq(cfgFor(srvA.port, "A"), cfgFor(srvB.port, "B")),
-      destRoot, ckptRoot, Trigger.ProcessingTime("500 milliseconds"))
-    try {
-      assert(queries.length == 2)
-      val deadline = System.currentTimeMillis() + 60000
-      // read each sink at ITS root so its _spark_metadata commit log is
-      // honored (reading across roots would see in-flight files)
-      def countOf(dev: String) =
-        try spark.read.parquet(s"$destRoot/station=MSU/device=$dev").count()
-        catch { case _: Exception => 0L }
-      while (countOf("A") + countOf("B") < 8 &&
-        System.currentTimeMillis() < deadline) Thread.sleep(500)
-      // 4 msgs per device, pack_length 2 → 2 full packs each → 4 rows each
-      assert(countOf("A") == 4)
-      assert(countOf("B") == 4)
-    } finally { queries.foreach(_.stop()); srvA.close(); srvB.close() }
+    withTempDir("graft-station-") { tmp =>
+      val destRoot = mkdir(tmp, "dest")
+      val ckptRoot = mkdir(tmp, "ckpt")
+      val queries = Runner.runStation(spark,
+        Seq(cfgFor(srvA.port, "A"), cfgFor(srvB.port, "B")),
+        destRoot, ckptRoot, Trigger.ProcessingTime("500 milliseconds"))
+      try {
+        assert(queries.length == 2)
+        val deadline = System.currentTimeMillis() + 60000
+        // read each sink at ITS root so its _spark_metadata commit log is
+        // honored (reading across roots would see in-flight files)
+        def countOf(dev: String) =
+          try spark.read.parquet(s"$destRoot/station=MSU/device=$dev").count()
+          catch { case _: Exception => 0L }
+        while (countOf("A") + countOf("B") < 8 &&
+          System.currentTimeMillis() < deadline) Thread.sleep(500)
+        // 4 msgs per device, pack_length 2 → 2 full packs each → 4 rows each
+        assert(countOf("A") == 4)
+        assert(countOf("B") == 4)
+      } finally { queries.foreach(_.stop()); srvA.close(); srvB.close() }
+    }
   }
 }
