@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
-"""Dev helper: render a graft.ScaleProbe JSON line as the markdown
-table SCALING.md's probe sections use. Shows the chosen pass for each
+"""Dev helper: render a graft.Probe JSON line (`Probe scale` or
+`Probe serve`; the older SCALEPROBE_*/SERVEPROBE_* files too) as the
+markdown table SCALING.md's probe sections use. Shows the chosen pass for each
 mult plus the per-step log-log slope; flags any slope over 1.5.
 
 Usage: python3 scripts/probe_table.py probe.json [pass]

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan (and row count) of one
   * registered query — the `.explain("formatted")` iteration loop the
   * scale work depends on.
@@ -14,14 +12,7 @@ object Explain {
     val sfDir = args.drop(1).headOption.filterNot(_.startsWith("--"))
       .getOrElse("/root/testdata/sf0.001")
     val run = args.contains("--run")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("graft-explain", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val df =
       if (name == "entry") SparkEntry.entry(spark)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Dev measurement tool (guide §1): run ONE registered query through the
@@ -17,16 +16,7 @@ object ProfileQ {
     val name = args.headOption.getOrElse(sys.error("usage: ProfileQ <query> [sfDir]"))
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val passes = args.drop(2).headOption.map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-profile", 32)
 
     // same prewarm as Bench: stores must exist so pass-1 times serving,
     // not the one-time build

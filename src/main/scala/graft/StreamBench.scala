@@ -5,8 +5,7 @@ import java.net.ServerSocket
 
 import graft.config.DeviceConfig
 import graft.streaming.IngestPipeline
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming throughput of record — the measured counterpart of
   * BASELINE.md's station envelope (README.md:68: ~60 msg/s aggregate
@@ -123,96 +122,98 @@ object StreamBench {
     val probePacksPerLevel = 50
     val probeMsgs = probeLevels * probePack * probePacksPerLevel
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-stream-bench", 32)
 
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-stream-bench").toString
     val devices = Seq("S1", "S2", "S3").map { n =>
       (n, new Blast(sonicPayload(msgsPerSonic)), true, sonicPack,
         msgsPerSonic.toLong)
     } :+ (("PR", new Blast(probePayload(probeMsgs)), false, probePack,
       probeMsgs.toLong))
+    val rootDir = java.nio.file.Files
+      .createTempDirectory("graft-stream-bench").toFile
+    val root = rootDir.toString
+    val queries = scala.collection.mutable.Buffer.empty[StreamingQuery]
+    def stopQueries(): Unit =
+      queries.foreach(q => try q.stop() catch { case _: Exception => })
 
-    val queries = devices.map { case (n, srv, sonic, pack, _) =>
-      val cfg = cfgFor(n, srv.port, sonic, pack)
-      IngestPipeline.start(spark, cfg, s"$root/$n/data", s"$root/$n/ckpt",
-        Trigger.ProcessingTime("500 milliseconds"))
-    }
+    // the JSON line and the exit status; the finally below runs before
+    // any exit, so every path stops the queries and closes the servers
+    // (nothing writes under the root any more) and then deletes the
+    // sink/checkpoint root
+    val (line, ok) =
+      try {
+        devices.foreach { case (n, srv, sonic, pack, _) =>
+          val cfg = cfgFor(n, srv.port, sonic, pack)
+          queries += IngestPipeline.start(spark, cfg, s"$root/$n/data",
+            s"$root/$n/ckpt", Trigger.ProcessingTime("500 milliseconds"))
+        }
 
-    val totalMsgs = devices.map(_._5).sum
-    val expected: Map[String, Long] = devices.map { case (n, _, _, _, m) =>
-      n -> m  // whole packs by construction: every message must commit
-    }.toMap
+        val totalMsgs = devices.map(_._5).sum
 
-    def committedRows(n: String): Long =
-      try spark.read.parquet(s"$root/$n/data").count()
-      catch { case _: Exception => 0L }
+        def committedRows(n: String): Long =
+          try spark.read.parquet(s"$root/$n/data").count()
+          catch { case _: Exception => 0L }
 
-    val deadline = System.nanoTime() + 30L * 60 * 1000 * 1000 * 1000
-    var done = false
-    while (!done && System.nanoTime() < deadline) {
-      Thread.sleep(500)
-      done = devices.forall { case (n, _, _, _, m) => committedRows(n) == m }
-    }
-    val t1 = System.nanoTime()
-    queries.foreach(q => try q.stop() catch { case _: Exception => })
+        val deadline = System.nanoTime() + 30L * 60 * 1000 * 1000 * 1000
+        var done = false
+        while (!done && System.nanoTime() < deadline) {
+          Thread.sleep(500)
+          // whole packs by construction: every message must commit
+          done = devices.forall { case (n, _, _, _, m) => committedRows(n) == m }
+        }
+        val t1 = System.nanoTime()
+        stopQueries()
 
-    // timeout/never-connected guard: a hung run must still EMIT its
-    // failure JSON line (the bench's contract is one parseable line per
-    // run) — computing min over zero accepted connections, or a rate
-    // from a clock that never started, would crash before reporting
-    val accepted = devices.map(_._2.acceptedAtNanos).filter(_ > 0)
-    if (!done || accepted.isEmpty) {
-      devices.foreach(_._2.close())
-      val committed = devices.map { case (n, _, _, _, m) =>
-        s""""$n":{"committed":${committedRows(n)},"expected":$m}""" }.mkString(",")
-      try spark.stop() catch { case _: Exception => }
-      println(
-        s"""{"metric":"stream_bench","messages":$totalMsgs,""" +
-          s""""elapsed_s":-1.0,"msg_per_s":-1.0,"x_reference_60msgs":-1.0,""" +
-          s""""zero_dropped_packs":false,"timed_out":${!done},""" +
-          s""""never_connected":${accepted.isEmpty},"devices":{$committed}}""")
-      System.out.flush()
-      sys.exit(1)
-    }
-    val t0 = accepted.min
+        // timeout/never-connected guard: a hung run must still EMIT its
+        // failure JSON line (the bench's contract is one parseable line
+        // per run) — computing min over zero accepted connections, or a
+        // rate from a clock that never started, would crash before
+        // reporting
+        val accepted = devices.map(_._2.acceptedAtNanos).filter(_ > 0)
+        if (!done || accepted.isEmpty) {
+          val committed = devices.map { case (n, _, _, _, m) =>
+            s""""$n":{"committed":${committedRows(n)},"expected":$m}""" }.mkString(",")
+          (s"""{"metric":"stream_bench","messages":$totalMsgs,""" +
+            s""""elapsed_s":-1.0,"msg_per_s":-1.0,"x_reference_60msgs":-1.0,""" +
+            s""""zero_dropped_packs":false,"timed_out":${!done},""" +
+            s""""never_connected":${accepted.isEmpty},"devices":{$committed}}""",
+            false)
+        } else {
+          val t0 = accepted.min
 
-    // zero-dropped-packs audit: every pack present, every pack full —
-    // pack_seq is per KEY (the probe's levels each count 0..n), so the
-    // audit groups on the partition pair
-    val packReport = devices.map { case (n, _, sonic, pack, m) =>
-      val keyCol = if (sonic) "_device" else "level"
-      val df = spark.read.parquet(s"$root/$n/data")
-      val perPack = df.groupBy(keyCol, "pack_seq").count().collect()
-        .map(_.getLong(2)).toSeq
-      val nPacks = perPack.size.toLong
-      val full = perPack.forall(_ == pack.toLong)
-      (n, nPacks, full && nPacks * pack == m)
-    }
-    val allOk = done && packReport.forall(_._3)
+          // zero-dropped-packs audit: every pack present, every pack
+          // full — pack_seq is per KEY (the probe's levels each count
+          // 0..n), so the audit groups on the partition pair
+          val packReport = devices.map { case (n, _, sonic, pack, m) =>
+            val keyCol = if (sonic) "_device" else "level"
+            val df = spark.read.parquet(s"$root/$n/data")
+            val perPack = df.groupBy(keyCol, "pack_seq").count().collect()
+              .map(_.getLong(2)).toSeq
+            val nPacks = perPack.size.toLong
+            val full = perPack.forall(_ == pack.toLong)
+            (n, nPacks, full && nPacks * pack == m)
+          }
+          val allOk = packReport.forall(_._3)
 
-    devices.foreach(_._2.close())
-    spark.stop()
-
-    val elapsed = (t1 - t0) / 1e9
-    val rate = totalMsgs / elapsed
-    def num(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    val packs = packReport.map { case (n, c, ok) =>
-      s""""$n":{"packs":$c,"complete":$ok}""" }.mkString(",")
-    println(
-      s"""{"metric":"stream_bench","messages":$totalMsgs,""" +
-        s""""elapsed_s":${num(elapsed)},"msg_per_s":${num(rate)},""" +
-        s""""x_reference_60msgs":${num(rate / 60.0)},""" +
-        s""""zero_dropped_packs":$allOk,"devices":{$packs}}""")
+          val elapsed = (t1 - t0) / 1e9
+          val rate = totalMsgs / elapsed
+          def num(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+          val packs = packReport.map { case (n, c, ok) =>
+            s""""$n":{"packs":$c,"complete":$ok}""" }.mkString(",")
+          (s"""{"metric":"stream_bench","messages":$totalMsgs,""" +
+            s""""elapsed_s":${num(elapsed)},"msg_per_s":${num(rate)},""" +
+            s""""x_reference_60msgs":${num(rate / 60.0)},""" +
+            s""""zero_dropped_packs":$allOk,"devices":{$packs}}""",
+            allOk)
+        }
+      } finally {
+        stopQueries()
+        devices.foreach(_._2.close())
+        try spark.stop() catch { case _: Exception => }
+        org.apache.commons.io.FileUtils.deleteQuietly(rootDir)
+      }
+    println(line)
     System.out.flush()
-    if (!allOk) sys.exit(1)
+    if (!ok) sys.exit(1)
   }
 }

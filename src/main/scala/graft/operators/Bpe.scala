@@ -696,10 +696,10 @@ final class Bpe(val tuning: Tuning) extends Serializable {
     capped.withColumn("seg", segInit($"w"))
   }
 
-  /** The bounded TRAINING vocabulary — the spec/probe hook for the
+  /** The bounded TRAINING vocabulary — the spec hook for the
     * driver-memory contract (BpeSpec asserts row count ≤ the cap and
     * min freq ≥ the floor on exactly what [[trainLocalMerges]]
-    * collects; BpeProbe measures the cap biting on a real lexicon).
+    * collects).
     */
   private[graft] def trainingVocab(s: SparkSession, d: String): DataFrame =
     vocab(s, d, sampled = true)

@@ -351,17 +351,25 @@ final class Sp(val tuning: Tuning) extends Serializable {
 
   /** Export the stored model as the SentencePiece `.vocab` TSV
     * (piece ⭾ log-probability, UTF-8) — scores round-trip exactly via
-    * `Double.toString`. Returns the export dir.
+    * `Double.toString`. Returns the export dir: `outDir`, or by default
+    * the keyed `<model root>-export` dir next to the model, installed
+    * once like the model itself.
     */
   def exportSpModel(s: SparkSession, d: String,
       outDir: String = null): String = {
-    val model = storedModel(s, d)
-    val dir = Option(outDir).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft-sp-export").toString)
-    new java.io.File(dir).mkdirs()
-    ArtifactLake.writeLines(new java.io.File(dir, "sp.vocab"),
-      model.map { case (p, lp) => s"$p\t$lp" })
-    dir
+    def write(dir: java.io.File): Unit = {
+      if (!dir.mkdirs() && !dir.isDirectory)
+        throw new java.io.IOException(s"export dir create failed: $dir")
+      ArtifactLake.writeLines(new java.io.File(dir, "sp.vocab"),
+        storedModel(s, d).map { case (p, lp) => s"$p\t$lp" })
+    }
+    Option(outDir) match {
+      case Some(dir) => write(new java.io.File(dir)); dir
+      case None =>
+        val dir = s"${spPath(d)}-export"
+        ArtifactLake.ensure(new java.io.File(dir))(write)
+        dir
+    }
   }
 
   // ------------------------------------------------------------------

@@ -87,13 +87,8 @@ object Backfill {
     * capture order (see [[CountWindow.packByCount]]'s ordering note).
     */
   def fromEchoCapture(spark: SparkSession, path: String,
-      cfg: DeviceConfig): DataFrame = {
-    val parsed = IngestPipeline.parseStage(rawCapture(spark, path), cfg)
-    val keyed = cfg.groupBy match {
-      case Some(_) => parsed
-      case None    => parsed.withColumn("_device", lit(cfg.device))
-    }
-    val keyCol = cfg.groupBy.map(_.name).getOrElse("_device")
-    CountWindow.packByCount(keyed.orderBy("time"), keyCol, cfg.packLength)
-  }
+      cfg: DeviceConfig): DataFrame =
+    IngestPipeline.packStage(
+      IngestPipeline.parseStage(rawCapture(spark, path), cfg), cfg,
+      _.orderBy("time"))._1
 }

@@ -82,6 +82,27 @@ object IngestPipeline {
       .select(cfg.variables.map(col) :+ col("time"): _*)
   }
 
+  /** G1-G2 over parsed rows: the pack key is the `group_by` column,
+    * or a `_device` literal when the config has none; `order` runs
+    * between keying and packing. Returns the packed frame and its key
+    * column.
+    */
+  private[streaming] def packStage(parsed: DataFrame, cfg: DeviceConfig,
+      order: DataFrame => DataFrame = identity): (DataFrame, String) = {
+    val keyed =
+      if (cfg.groupBy.isDefined) parsed
+      else parsed.withColumn("_device", lit(cfg.device))
+    val keyCol = cfg.groupBy.map(_.name).getOrElse("_device")
+    (CountWindow.packByCount(order(keyed), keyCol, cfg.packLength), keyCol)
+  }
+
+  /** The live device's socket → parse → pack plan. */
+  private def packedStream(spark: SparkSession,
+      cfg: DeviceConfig): (DataFrame, String) =
+    packStage(parseStage(
+      rawStream(spark, cfg.host, cfg.port, cfg.timeoutSec, cfg.maxPerTrigger,
+        cfg.walMaxSegments), cfg), cfg)
+
   /** Full pipeline: socket → parse → count-window pack → Parquet,
     * partitioned by the group key (G1; the reference encodes it in the
     * filename, P5/P7 — `partitionBy` likewise strips it from data files)
@@ -93,15 +114,7 @@ object IngestPipeline {
   def start(spark: SparkSession, cfg: DeviceConfig, dest: String,
       checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
-    val parsed = parseStage(
-      rawStream(spark, cfg.host, cfg.port, cfg.timeoutSec, cfg.maxPerTrigger,
-        cfg.walMaxSegments), cfg)
-    val keyed = cfg.groupBy match {
-      case Some(g) => parsed
-      case None    => parsed.withColumn("_device", lit(cfg.device))
-    }
-    val keyCol = cfg.groupBy.map(_.name).getOrElse("_device")
-    val packed = CountWindow.packByCount(keyed, keyCol, cfg.packLength)
+    val (packed, keyCol) = packedStream(spark, cfg)
     packed.writeStream
       .format("parquet")
       .option("path", dest)
@@ -122,15 +135,7 @@ object IngestPipeline {
   def startWithFilenameTemplate(spark: SparkSession, cfg: DeviceConfig,
       dest: String, checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
-    val parsed = parseStage(
-      rawStream(spark, cfg.host, cfg.port, cfg.timeoutSec, cfg.maxPerTrigger,
-        cfg.walMaxSegments), cfg)
-    val keyed = cfg.groupBy match {
-      case Some(_) => parsed
-      case None    => parsed.withColumn("_device", lit(cfg.device))
-    }
-    val keyCol = cfg.groupBy.map(_.name).getOrElse("_device")
-    val packed = CountWindow.packByCount(keyed, keyCol, cfg.packLength)
+    val (packed, keyCol) = packedStream(spark, cfg)
     packed.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // persist BEFORE multiple actions: re-evaluating a stateful

@@ -52,7 +52,7 @@ class DhashLakeSpec extends SparkTestBase {
         // 11's bytes under a fresh id: the serve's only materialized
         // frame is the probe signatures (1000 rows, never corpus-shaped
         // — the large-probe localCheckpoint audit; the m-decade twin is
-        // ServeProbe's bigdhash cell)
+        // `Probe serve` bigdhash cell)
         val probes = spark.range(1000)
           .map(i => (5000L + i, MediaFixtures.jpeg(11L)))
           .toDF("doc_id", "blob")

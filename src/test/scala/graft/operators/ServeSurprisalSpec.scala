@@ -180,8 +180,8 @@ class ServeSurprisalSpec extends SparkTestBase {
         // prune list overflows, so every n-gram table takes the
         // distributed semi-join fallback — and the serve's only
         // materialized frame stays the PROBE-sized one (the large-probe
-        // localCheckpoint audit; the m-decade twin is ServeProbe's
-        // bigsurp3 cell). Generated executor-side: the batch never
+        // localCheckpoint audit; the m-decade twin is the
+        // `Probe serve` bigsurp3 cell). Generated executor-side: the batch never
         // touches the driver.
         val probe = spark.range(20000)
           .selectExpr("id", "concat('w', id % 8000, ' a b c d e') AS text")

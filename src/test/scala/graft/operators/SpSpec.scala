@@ -88,6 +88,23 @@ class SpSpec extends SparkTestBase {
     }
   }
 
+  test("exportSpModel without an outDir reuses one keyed dir under the store root") {
+    withTempRoot {
+      val sp = new Sp(Tuning())
+      val dir = writeCorpus(Seq((0L, "the data engine data"),
+        (1L, "engine the pipeline")))
+      val first = sp.exportSpModel(spark, dir)
+      val again = sp.exportSpModel(spark, dir)
+      assert(first == again)
+      val root = new java.io.File(sys.props("graft.index.dir")).getCanonicalPath
+      assert(new java.io.File(first).getCanonicalPath.startsWith(root + "/"))
+      val explicit = sp.exportSpModel(spark, dir, suiteTempDir("graft-sp-export"))
+      def vocab(d: String) =
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(d, "sp.vocab"))
+      assert(vocab(first).sameElements(vocab(explicit)))
+    }
+  }
+
   test("imported pieces LONGER than spPieceLen still match (foreign-model face)") {
     import spark.implicits._
     val sp = new Sp(Tuning()) // spPieceLen = 4

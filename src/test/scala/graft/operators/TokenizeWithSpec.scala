@@ -93,8 +93,8 @@ class TokenizeWithSpec extends SparkTestBase {
   test("encodes a distributed corpus on a deep locally-trained table") {
     import spark.implicits._
     // sf0.001's vocabulary exhausts its repeating pairs at ~89 merges —
-    // well past the registry default; the REAL depth cell (32k merges
-    // over the 500k-doc Zipf corpus) lives in BpeProbe/BPEPROBE_r12
+    // well past the registry default; the 32k-merge depth over the
+    // 500k-doc Zipf corpus was measured once (BPEPROBE_r12.json)
     val deep = bpe.trainLocalMerges(spark, sf, 1500)
     assert(deep.size > 60, s"sf0.001 must train past the knob default (got ${deep.size})")
     val texts = graft.Tables.t(spark, sf, "documents")
