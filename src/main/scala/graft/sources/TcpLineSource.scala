@@ -34,7 +34,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * extraction stays byte-exact against binary device payloads
   * (SURVEY.md §7 hard part (c)).
   *
-  * Scale posture: one stream per device, accumulated on the driver —
+  * Scale posture: one stream per device, framed on the driver and
+  * written to the WAL there, read back by the batch's task —
   * identical to the reference's one-process-per-device envelope
   * (~60 msg/s/station). A thousand devices are a thousand independent
   * queries (or a Kafka front-end); this source is the edge adapter,
@@ -141,6 +142,74 @@ object TcpLineMicroBatchStream
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new org.apache.hadoop.conf.Configuration())
+
+  private val SegName = """^(\d+)-(\d+)$""".r
+
+  /** All WAL segments under `walDir` as (startOffset, endOffset, path),
+    * sorted; segments are non-overlapping by construction.
+    */
+  def listSegments(walFs: org.apache.hadoop.fs.FileSystem,
+      walDir: org.apache.hadoop.fs.Path): Seq[(Long, Long, org.apache.hadoop.fs.Path)] =
+    if (!walFs.exists(walDir)) Seq.empty
+    else walFs.listStatus(walDir).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case SegName(a, b) => Some((a.toLong, b.toLong, st.getPath))
+        case _ => None
+      }
+    }.sortBy(_._1)
+
+  /** Read rows [s, e) out of the WAL — the read path of every batch,
+    * fresh or replayed after a restart. The cursor tracks the next
+    * offset still needed, which both skips already-served prefixes and
+    * DEDUPES overlapping segments — the legal state a crash between
+    * compaction's rename and its deletes leaves behind.
+    */
+  def readWal(walFs: org.apache.hadoop.fs.FileSystem,
+      walDir: org.apache.hadoop.fs.Path,
+      s: Long, e: Long): Array[(String, Long, Boolean)] = {
+    val out = ArrayBuffer[(String, Long, Boolean)]()
+    var cursor = s
+    if (s < e) listSegments(walFs, walDir).foreach { case (a, b, p) =>
+      if (b > cursor && a < e) {
+        val in = new java.io.DataInputStream(
+          new BufferedInputStream(walFs.open(p)))
+        try {
+          var off = a
+          val hi = math.min(b, e)
+          while (off < hi) {
+            val ts = in.readLong(); val fresh = in.readBoolean()
+            val bytes = new Array[Byte](in.readInt()); in.readFully(bytes)
+            if (off >= cursor)
+              out += ((new String(bytes,
+                java.nio.charset.StandardCharsets.ISO_8859_1), ts, fresh))
+            off += 1
+          }
+          cursor = math.max(cursor, hi)
+        } finally in.close()
+      }
+    }
+    out.toArray
+  }
+
+  /** The task side of a batch: read its [[TcpWalRange]] from the WAL. */
+  def reader(range: TcpWalRange,
+      conf: org.apache.hadoop.conf.Configuration): PartitionReader[InternalRow] = {
+    val dir = new org.apache.hadoop.fs.Path(range.walDir)
+    val rows = readWal(dir.getFileSystem(conf), dir, range.start, range.end)
+    if (rows.length < range.end - range.start)
+      logWarning(s"graft-socket WAL $dir: range [${range.start}, ${range.end}) " +
+        s"served ${rows.length} of ${range.end - range.start} rows — the " +
+        "rest are missing from the WAL (segments deleted?)")
+    new PartitionReader[InternalRow] {
+      private var i = -1
+      override def next(): Boolean = { i += 1; i < rows.length }
+      override def get(): InternalRow = {
+        val (msg, ts, fresh) = rows(i)
+        InternalRow(UTF8String.fromString(msg), ts, fresh)
+      }
+      override def close(): Unit = ()
+    }
+  }
 }
 
 /** @param maxPerTrigger X2 admission cap: at most this many messages per
@@ -150,18 +219,21 @@ object TcpLineMicroBatchStream
   *   across triggers, so a post-stall burst can't produce one giant
   *   batch that blows executor memory.
   *
-  * REPLAYABLE across restarts via a write-ahead log (round 3): framed
-  * messages are persisted as WAL segments under the source checkpoint
-  * BEFORE their offsets are exposed to the engine, so any range the
-  * engine can have planned is durable. On restart the new incarnation
-  * numbers its buffer from the WAL high-water mark and serves replayed
-  * (planned-but-uncommitted) ranges out of the WAL — at-least-once
-  * end-to-end, upgraded to exactly-once by the offset-tracked parquet
-  * sink. Committed segments are deleted on commit, so the WAL holds
-  * only in-flight batches. The one remaining gap matches the
-  * reference's process-local queue (readport.py:445-455): messages
-  * buffered but never yet exposed in ANY offset die with the process,
-  * exactly as the reference loses its queue on a crash.
+  * Every batch reads its range from a write-ahead log (round 3): framed
+  * messages wait in the driver buffer only until the next trigger
+  * writes them as one WAL segment under the source checkpoint, BEFORE
+  * their offsets are exposed to the engine; the buffer then drops them.
+  * A batch's one partition is its range `(walDir, start, end)`, and its
+  * task reads those rows back out of the WAL, so a fresh batch and a
+  * batch replayed after a restart run the same code. On restart the
+  * new incarnation numbers its buffer from the WAL high-water mark —
+  * at-least-once end-to-end, upgraded to exactly-once by the
+  * offset-tracked parquet sink. Committed segments are deleted on
+  * commit, so the WAL holds only in-flight batches. The one remaining
+  * gap matches the reference's process-local queue
+  * (readport.py:445-455): messages buffered but never yet persisted die
+  * with the process, exactly as the reference loses its queue on a
+  * crash.
   *
   * @param checkpointLocation the source checkpoint dir Spark passes to
   *   `toMicroBatchStream`; the WAL lives in its `wal` subdir.
@@ -170,29 +242,17 @@ class TcpLineMicroBatchStream(host: String, port: Int,
     timeoutSec: Option[Double], maxPerTrigger: Option[Long],
     checkpointLocation: String, walMaxSegments: Int = 8)
     extends MicroBatchStream with org.apache.spark.internal.Logging {
-  import TcpLineMicroBatchStream.sessionHadoopConf
+  import TcpLineMicroBatchStream.{listSegments, readWal, sessionHadoopConf}
 
   private val lock = new Object
-  // (message, arrival micros, fresh) — indexed from `trimmed`
+  // (message, arrival micros, fresh) not yet in the WAL; messages(0)
+  // sits at global offset `persisted`
   private val messages = ArrayBuffer[(String, Long, Boolean)]()
 
   // --- WAL state
   private val walDir = new org.apache.hadoop.fs.Path(checkpointLocation, "wal")
   private lazy val walFs: org.apache.hadoop.fs.FileSystem =
     walDir.getFileSystem(sessionHadoopConf())
-  private val SegName = """^(\d+)-(\d+)$""".r
-
-  /** All WAL segments as (startOffset, endOffset, path), sorted;
-    * segments are non-overlapping by construction.
-    */
-  private def listSegments(): Seq[(Long, Long, org.apache.hadoop.fs.Path)] =
-    if (!walFs.exists(walDir)) Seq.empty
-    else walFs.listStatus(walDir).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case SegName(a, b) => Some((a.toLong, b.toLong, st.getPath))
-        case _ => None
-      }
-    }.sortBy(_._1)
 
   // Resume point, computed at CONSTRUCTION so a restarted incarnation
   // numbers its buffer correctly from the very first engine call
@@ -209,7 +269,7 @@ class TcpLineMicroBatchStream(host: String, port: Int,
         walFs.listStatus(walDir).filter(_.getPath.getName.startsWith(".tmp-"))
           .foreach(st => walFs.delete(st.getPath, false))
     } catch { case _: Exception => () }
-    val walEnd = (try listSegments() catch { case _: Exception => Seq.empty })
+    val walEnd = (try listSegments(walFs, walDir) catch { case _: Exception => Seq.empty })
       .map(_._2).maxOption.getOrElse(0L)
     if (math.max(w, walEnd) > 0) {
       if (walEnd >= w)
@@ -225,15 +285,34 @@ class TcpLineMicroBatchStream(host: String, port: Int,
     math.max(w, walEnd)
   }
 
-  // buffer base: messages(0) sits at global offset `trimmed`
-  private var trimmed = resumeAt
+  // Offset bookkeeping, all on the engine's trigger thread (persist /
+  // expose / commit / compact run there); the reader thread only
+  // appends to `messages`.
   // highest offset durable in the WAL; only durable offsets are exposed
   private var persisted = resumeAt
+  // highest end offset exposed to the engine or committed by it; the
+  // admission cap advances from here (Spark may plan the next trigger
+  // before the previous commit lands)
+  private var lastEnd = resumeAt
+  // the trigger-time compaction's floor: the highest committed offset,
+  // or the resume point until the first commit (an older incarnation's
+  // segments all end at or below it and are left to the commit path)
+  private var compactFloor = resumeAt
+  // live-segment estimate, so the per-trigger hygiene check costs no FS
+  // listing; re-synced from the real listing at each commit
+  private var segCount = 0
+
   private val stopped = new AtomicBoolean(false)
   @volatile private var readerThread: Thread = _
   @volatile private var activeSocket: Socket = _
   // hoisted: a per-message sys.props lookup would sit on the hot path
   private val traceEnabled = sys.props.contains("graft.socket.trace")
+
+  // the session's Hadoop conf for the tasks' WAL reads, shipped once per
+  // stream rather than inside every batch
+  private lazy val walConf =
+    org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(sessionHadoopConf()))
 
   private def ensureReader(): Unit = lock.synchronized {
     if (readerThread == null) {
@@ -286,7 +365,7 @@ class TcpLineMicroBatchStream(host: String, port: Int,
 
   override def initialOffset(): Offset = TcpOffset(0L)
 
-  // construction already seated `trimmed` at the WAL high-water mark,
+  // construction already seated `persisted` at the WAL high-water mark,
   // which bounds every checkpointed offset (persist-before-expose)
   override def deserializeOffset(json: String): Offset = TcpOffset(json.toLong)
 
@@ -320,32 +399,22 @@ class TcpLineMicroBatchStream(host: String, port: Int,
         s"graft-socket WAL: rename failed for segment [$start, $end)")
   }
 
-  // live-segment estimate, maintained on the trigger thread (persist /
-  // commit / compact all run there) so the per-trigger hygiene check
-  // costs no FS listing; re-synced from the real listing at each commit
-  private var segCount = 0
-
-  /** Append the not-yet-durable buffer suffix as one WAL segment.
-    * Called on the engine's trigger thread; file IO runs OUTSIDE the
-    * buffer lock so the reader thread keeps ingesting during the write.
+  /** Move the whole buffer into the WAL as one segment, then drop it
+    * from the buffer. File IO runs OUTSIDE the buffer lock so the
+    * reader thread keeps ingesting during the write; what it appends
+    * meanwhile stays buffered for the next trigger.
     */
   private def persistPending(): Unit = {
-    val (segStart, slice) = lock.synchronized {
-      val avail = trimmed + messages.size
-      if (avail > persisted)
-        (persisted,
-          messages.slice((persisted - trimmed).toInt, messages.size).toArray)
-      else (persisted, Array.empty[(String, Long, Boolean)])
-    }
+    val slice = lock.synchronized(messages.toArray)
     if (slice.nonEmpty) {
-      writeSegment(segStart, slice)
-      lock.synchronized { persisted = math.max(persisted, segStart + slice.length) }
+      writeSegment(persisted, slice)
+      lock.synchronized(messages.remove(0, slice.length))
+      persisted += slice.length
       segCount += 1
       // hygiene even when the sink never commits (a long-running batch
       // or a stalled downstream): without this, one segment per trigger
       // accumulates thousands of small files under the checkpoint
-      if (segCount > walMaxSegments)
-        compactSegments(lock.synchronized(trimmed))
+      if (segCount > walMaxSegments) compactSegments(compactFloor)
     }
   }
 
@@ -355,13 +424,14 @@ class TcpLineMicroBatchStream(host: String, port: Int,
     * segment covers [max(committed, first live start), last live end)
     * and is renamed into place BEFORE the old segments are deleted, so
     * a crash anywhere in between leaves overlapping-but-consistent
-    * segments that [[readWal]]'s cursor dedupes on replay. Cost is one
-    * rewrite of the uncommitted backlog per `walMaxSegments` triggers —
-    * zero in the steady state where the sink commits every trigger (the
-    * commit-path delete keeps the count at 1-2).
+    * segments that [[TcpLineMicroBatchStream.readWal]]'s cursor dedupes.
+    * Cost is one rewrite of the uncommitted backlog per
+    * `walMaxSegments` triggers — zero in the steady state where the
+    * sink commits every trigger (the commit-path delete keeps the count
+    * at 1-2).
     */
   private def compactSegments(committed: Long): Unit = try {
-    val live = listSegments().filter(_._2 > committed)
+    val live = listSegments(walFs, walDir).filter(_._2 > committed)
     segCount = live.length
     if (live.length > walMaxSegments) {
       val start = math.max(committed, live.map(_._1).min)
@@ -381,7 +451,7 @@ class TcpLineMicroBatchStream(host: String, port: Int,
           s"stale WAL segments overlapped by [$start, $end)")
         return
       }
-      val rows = readWal(start, end)
+      val rows = readWal(walFs, walDir, start, end)
       // only compact a gapless backlog: a hole (manually deleted
       // segment) must not be papered over with a mislabeled range
       if (rows.length == (end - start).toInt) {
@@ -400,107 +470,43 @@ class TcpLineMicroBatchStream(host: String, port: Int,
     logWarning(s"graft-socket WAL: compaction failed: $ex")
   }
 
-  /** Read rows [s, e) back out of the WAL (restart replay path). The
-    * cursor tracks the next offset still needed, which both skips
-    * already-served prefixes and DEDUPES overlapping segments — the
-    * legal state a crash between compaction's rename and its deletes
-    * leaves behind.
-    */
-  private def readWal(s: Long, e: Long): Array[(String, Long, Boolean)] = {
-    val out = ArrayBuffer[(String, Long, Boolean)]()
-    var cursor = s
-    listSegments().foreach { case (a, b, p) =>
-      if (b > cursor && a < e) {
-        val in = new java.io.DataInputStream(
-          new BufferedInputStream(walFs.open(p)))
-        try {
-          var off = a
-          val hi = math.min(b, e)
-          while (off < hi) {
-            val ts = in.readLong(); val fresh = in.readBoolean()
-            val bytes = new Array[Byte](in.readInt()); in.readFully(bytes)
-            if (off >= cursor)
-              out += ((new String(bytes,
-                java.nio.charset.StandardCharsets.ISO_8859_1), ts, fresh))
-            off += 1
-          }
-          cursor = math.max(cursor, hi)
-        } finally in.close()
-      }
-    }
-    out.toArray
-  }
-
-  // highest end offset exposed to the engine; the admission cap advances
-  // from here (not from `trimmed` — Spark may plan the next trigger
-  // before the previous commit lands)
-  private var lastEnd = 0L
-
   override def latestOffset(): Offset = {
     ensureReader()
     // durability BEFORE visibility: every offset the engine can plan
-    // against is already on disk, so a crash between planning and
+    // against is already in the WAL, so a crash between planning and
     // commit can always be replayed
     persistPending()
-    lock.synchronized {
-      val avail = trimmed + messages.size
-      // only expose what is durable (== avail unless the reader
-      // appended during the segment write; the tail goes next trigger)
-      val exposable = math.min(avail, persisted)
-      // X2: meter a backlog out across triggers instead of one huge batch
-      val base = math.max(trimmed, lastEnd)
-      val end = maxPerTrigger.fold(exposable)(cap => math.min(exposable, base + cap))
-      lastEnd = math.max(lastEnd, end)
-      TcpOffset(end)
-    }
+    // X2: meter a backlog out across triggers instead of one huge batch
+    val end = maxPerTrigger.fold(persisted)(cap => math.min(persisted, lastEnd + cap))
+    lastEnd = math.max(lastEnd, end)
+    TcpOffset(end)
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[TcpOffset].n
-    val e = end.asInstanceOf[TcpOffset].n
-    val (base, mem) = lock.synchronized {
-      // in-memory part: clamp to the buffer range
-      val lo = math.max(0L, math.min(s - trimmed, messages.size.toLong)).toInt
-      val hi = math.max(lo.toLong, math.min(e - trimmed, messages.size.toLong)).toInt
-      (trimmed, messages.slice(lo, hi).toArray)
-    }
-    // restart replay: a range head that predates this incarnation's
-    // buffer is served from the WAL, then any in-memory tail
-    val rows = if (s >= base) mem else readWal(s, math.min(e, base)) ++ mem
-    if (rows.length < e - s)
-      logWarning(s"graft-socket $host:$port: range [$s, $e) served " +
-        s"${rows.length} of ${e - s} rows — the rest are missing from " +
-        "the WAL (segments deleted?)")
-    Array(TcpLinePartition(rows))
-  }
+  // persist-before-expose puts every plannable range in the WAL, so the
+  // partition only names it; fresh and replayed batches read it alike
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    Array(TcpWalRange(walDir.toString,
+      start.asInstanceOf[TcpOffset].n, end.asInstanceOf[TcpOffset].n))
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    (partition: InputPartition) => new PartitionReader[InternalRow] {
-      private val rows = partition.asInstanceOf[TcpLinePartition].rows
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = {
-        val (msg, ts, fresh) = rows(i)
-        InternalRow(UTF8String.fromString(msg), ts, fresh)
-      }
-      override def close(): Unit = ()
-    }
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val conf = walConf
+    (partition: InputPartition) =>
+      TcpLineMicroBatchStream.reader(partition.asInstanceOf[TcpWalRange], conf.value.value)
+  }
 
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[TcpOffset].n
-    lock.synchronized {
-      // clamp to the buffer: a checkpoint-replayed commit beyond the
-      // in-memory range must not index past what we hold
-      val drop = math.max(0L, math.min(e - trimmed, messages.size.toLong)).toInt
-      if (drop > 0) messages.remove(0, drop)
-      if (e > trimmed) trimmed = e
-      if (e > persisted) persisted = e
-    }
+    // a checkpoint-replayed commit beyond anything this incarnation
+    // persisted (its WAL gone): buffered, never-exposed messages number
+    // on from the committed mark
+    persisted = math.max(persisted, e)
+    lastEnd = math.max(lastEnd, e)
+    compactFloor = math.max(compactFloor, e)
     // fully-committed segments are no longer needed for replay; a
     // partially-committed segment (batch boundary inside it) stays.
     // Cleanup failure is non-fatal — it only costs disk, not data.
     try {
-      val segs = listSegments()
+      val segs = listSegments(walFs, walDir)
       segs.foreach { case (_, b, p) => if (b <= e) walFs.delete(p, false) }
       segCount = segs.count(_._2 > e)  // re-sync the estimate
       if (segCount > walMaxSegments) compactSegments(e)
@@ -530,5 +536,6 @@ class TcpLineMicroBatchStream(host: String, port: Int,
   }
 }
 
-case class TcpLinePartition(rows: Array[(String, Long, Boolean)])
+/** One batch's input: the WAL range [start, end) its task reads. */
+case class TcpWalRange(walDir: String, start: Long, end: Long)
     extends InputPartition

@@ -68,6 +68,53 @@ class TcpFixtureServer(bindPort: Int = 0) {
 class TcpLineSourceSpec extends SparkTestBase {
   import spark.implicits._
 
+  private def javaBytes(o: AnyRef): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    try out.writeObject(o) finally out.close()
+    bytes.toByteArray
+  }
+
+  private def javaRoundTrip[A <: AnyRef](o: A): A = {
+    val in = new java.io.ObjectInputStream(
+      new java.io.ByteArrayInputStream(javaBytes(o)))
+    try in.readObject().asInstanceOf[A] finally in.close()
+  }
+
+  /** A planned partition's rows, read the way a batch task reads them:
+    * the stream's reader factory and the partition, each shipped
+    * through Java serialization.
+    */
+  private def rowsOf(s: TcpLineMicroBatchStream,
+      p: org.apache.spark.sql.connector.read.InputPartition)
+      : Array[(String, Long, Boolean)] = {
+    val r = javaRoundTrip(s.createReaderFactory()).createReader(javaRoundTrip(p))
+    try {
+      val out = Array.newBuilder[(String, Long, Boolean)]
+      while (r.next()) {
+        val row = r.get()
+        out += ((row.getUTF8String(0).toString, row.getLong(1), row.getBoolean(2)))
+      }
+      out.result()
+    } finally r.close()
+  }
+
+  /** Write `rows` as the WAL segment `<start>-<start+rows.length>` with
+    * an encoder independent of the source's (ts:i64, fresh:bool,
+    * len:i32, ISO-8859-1 bytes).
+    */
+  private def writeWalSegment(walPath: java.nio.file.Path, start: Int,
+      rows: Seq[(String, Long, Boolean)]): Unit = {
+    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+      java.nio.file.Files.newOutputStream(
+        walPath.resolve(s"$start-${start + rows.length}"))))
+    try rows.foreach { case (m, ts, fresh) =>
+      val bytes = m.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+      out.writeLong(ts); out.writeBoolean(fresh)
+      out.writeInt(bytes.length); out.write(bytes)
+    } finally out.close()
+  }
+
   test("framing: fragmented and coalesced writes yield whole messages (fixture A6)") {
     val srv = new TcpFixtureServer
     // fragmentation: "mess" + "age 2\n"; coalescing: two messages in one write
@@ -157,7 +204,7 @@ class TcpLineSourceSpec extends SparkTestBase {
       val end = s.deserializeOffset("500")
       val parts = s.planInputPartitions(start, end)
       assert(parts.length == 1 &&
-        parts(0).asInstanceOf[TcpLinePartition].rows.isEmpty)
+        rowsOf(s, parts(0)).isEmpty)
       s.commit(end)  // must be a no-op, not an exception
       // new messages get offsets at/after the checkpointed mark
       assert(s.latestOffset().asInstanceOf[TcpOffset].n == 500L)
@@ -186,15 +233,13 @@ class TcpLineSourceSpec extends SparkTestBase {
           Thread.sleep(100)
         }
         assert(end == 5, "incarnation A never exposed all 5 messages")
-        rowsA = a.planInputPartitions(TcpOffset(0), TcpOffset(5))(0)
-          .asInstanceOf[TcpLinePartition].rows
+        rowsA = rowsOf(a, a.planInputPartitions(TcpOffset(0), TcpOffset(5))(0))
         assert(rowsA.map(_._1).toSeq == (1 to 5).map(i => s"wal $i"))
         a.commit(TcpOffset(2))
       } finally { a.stop(); srv.close() }
       val b = new TcpLineMicroBatchStream("localhost", 1, None, None, ckpt)
       try {
-        val rowsB = b.planInputPartitions(TcpOffset(2), TcpOffset(5))(0)
-          .asInstanceOf[TcpLinePartition].rows
+        val rowsB = rowsOf(b, b.planInputPartitions(TcpOffset(2), TcpOffset(5))(0))
         // full rows — payload, arrival micros, fresh flag — survive the
         // WAL round-trip identically
         assert(rowsB.toSeq == rowsA.drop(2).toSeq,
@@ -213,8 +258,7 @@ class TcpLineSourceSpec extends SparkTestBase {
       val c = new TcpLineMicroBatchStream("localhost", 1, None, None, ckpt)
       try {
         assert(c.latestOffset().asInstanceOf[TcpOffset].n == 5L)
-        assert(c.planInputPartitions(TcpOffset(5), TcpOffset(5))(0)
-          .asInstanceOf[TcpLinePartition].rows.isEmpty)
+        assert(rowsOf(c, c.planInputPartitions(TcpOffset(5), TcpOffset(5))(0)).isEmpty)
       } finally c.stop()
     }
   }
@@ -335,8 +379,7 @@ class TcpLineSourceSpec extends SparkTestBase {
           .filter(_.matches("""\d+-\d+"""))
         assert(walFiles.length <= 5,
           s"WAL not compacted: ${walFiles.length} segments for $total triggers")
-        rowsA = a.planInputPartitions(TcpOffset(0), TcpOffset(total))(0)
-          .asInstanceOf[TcpLinePartition].rows
+        rowsA = rowsOf(a, a.planInputPartitions(TcpOffset(0), TcpOffset(total))(0))
         assert(rowsA.map(_._1).toSeq == (1 to total).map(i => s"hyg $i"))
       } finally { a.stop(); srv.close() }
       // crash: nothing committed. A fresh incarnation with the device
@@ -345,8 +388,7 @@ class TcpLineSourceSpec extends SparkTestBase {
       val b = new TcpLineMicroBatchStream("localhost", 1, None, None, ckpt)
       try {
         assert(b.latestOffset().asInstanceOf[TcpOffset].n == total.toLong)
-        val rowsB = b.planInputPartitions(TcpOffset(0), TcpOffset(total))(0)
-          .asInstanceOf[TcpLinePartition].rows
+        val rowsB = rowsOf(b, b.planInputPartitions(TcpOffset(0), TcpOffset(total))(0))
         assert(rowsB.toSeq == rowsA.toSeq,
           "replay after compaction differs from what incarnation A served")
       } finally b.stop()
@@ -361,16 +403,9 @@ class TcpLineSourceSpec extends SparkTestBase {
       val ckpt = s"$tmp/sources/0"
       val walPath = java.nio.file.Paths.get(ckpt, "wal")
       java.nio.file.Files.createDirectories(walPath)
-      def writeSeg(start: Int, msgs: Seq[String]): Unit = {
-        val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-          java.nio.file.Files.newOutputStream(
-            walPath.resolve(s"$start-${start + msgs.length}"))))
-        try msgs.zipWithIndex.foreach { case (m, j) =>
-          val bytes = m.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          out.writeLong(1000L * (start + j)); out.writeBoolean(false)
-          out.writeInt(bytes.length); out.write(bytes)
-        } finally out.close()
-      }
+      def writeSeg(start: Int, msgs: Seq[String]): Unit =
+        writeWalSegment(walPath, start,
+          msgs.zipWithIndex.map { case (m, j) => (m, 1000L * (start + j), false) })
       val all = (0 until 4).map(i => s"ovl $i")
       writeSeg(0, all)            // the compacted segment 0-4
       writeSeg(0, all.take(2))    // its un-deleted sources 0-2, 2-4
@@ -378,8 +413,7 @@ class TcpLineSourceSpec extends SparkTestBase {
       val c = new TcpLineMicroBatchStream("localhost", 1, None, None, ckpt)
       try {
         assert(c.latestOffset().asInstanceOf[TcpOffset].n == 4L)
-        val rows = c.planInputPartitions(TcpOffset(0), TcpOffset(4))(0)
-          .asInstanceOf[TcpLinePartition].rows
+        val rows = rowsOf(c, c.planInputPartitions(TcpOffset(0), TcpOffset(4))(0))
         assert(rows.map(_._1).toSeq == all, "overlap must not duplicate rows")
         assert(rows.map(_._2).toSeq == Seq(0L, 1000L, 2000L, 3000L))
       } finally c.stop()
@@ -396,16 +430,9 @@ class TcpLineSourceSpec extends SparkTestBase {
       val ckpt = s"$tmp/sources/0"
       val walPath = java.nio.file.Paths.get(ckpt, "wal")
       java.nio.file.Files.createDirectories(walPath)
-      def writeSeg(start: Int, msgs: Seq[String]): Unit = {
-        val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-          java.nio.file.Files.newOutputStream(
-            walPath.resolve(s"$start-${start + msgs.length}"))))
-        try msgs.zipWithIndex.foreach { case (m, j) =>
-          val bytes = m.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          out.writeLong(1000L * (start + j)); out.writeBoolean(false)
-          out.writeInt(bytes.length); out.write(bytes)
-        } finally out.close()
-      }
+      def writeSeg(start: Int, msgs: Seq[String]): Unit =
+        writeWalSegment(walPath, start,
+          msgs.zipWithIndex.map { case (m, j) => (m, 1000L * (start + j), false) })
       val all = (0 until 8).map(i => s"ret $i")
       writeSeg(0, all)                       // the crashed compaction's merge 0-8
       (0 until 8).foreach(i => writeSeg(i, Seq(all(i))))  // its 8 stale sources
@@ -425,8 +452,7 @@ class TcpLineSourceSpec extends SparkTestBase {
         assert(after.contains("0-8"), s"spanning segment deleted: ${after.toSeq}")
         assert(after.length == 1, s"stale sources not pruned: ${after.toSeq}")
         // and the whole range still replays exactly once
-        val rows = a.planInputPartitions(TcpOffset(0), TcpOffset(8))(0)
-          .asInstanceOf[TcpLinePartition].rows
+        val rows = rowsOf(a, a.planInputPartitions(TcpOffset(0), TcpOffset(8))(0))
         assert(rows.map(_._1).toSeq == all)
       } finally a.stop()
     }
@@ -452,27 +478,40 @@ class TcpLineSourceSpec extends SparkTestBase {
         ("with\rcarriage", 3L, false),        // embedded CR survives
         ("x" * 65536, 4L, false),             // long line
         ("plain", 5L, true))
-      def writeSeg(start: Int, upto: Int): Unit = {
-        val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-          java.nio.file.Files.newOutputStream(walPath.resolve(s"$start-$upto"))))
-        try (start until upto).foreach { i =>
-          val (m, ts, fr) = msgs(i)
-          val bytes = m.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          out.writeLong(ts); out.writeBoolean(fr)
-          out.writeInt(bytes.length); out.write(bytes)
-        } finally out.close()
-      }
+      def writeSeg(start: Int, upto: Int): Unit =
+        writeWalSegment(walPath, start, msgs.slice(start, upto))
       writeSeg(0, 2); writeSeg(2, 3); writeSeg(3, 5)
       val src = new TcpLineMicroBatchStream("localhost", 1, None, None, ckpt)
       try {
         assert(src.latestOffset().asInstanceOf[TcpOffset].n == 5L)
-        val rows = src.planInputPartitions(TcpOffset(0), TcpOffset(5))(0)
-          .asInstanceOf[TcpLinePartition].rows
+        val rows = rowsOf(src, src.planInputPartitions(TcpOffset(0), TcpOffset(5))(0))
         assert(rows.toSeq == msgs, "WAL round-trip altered a payload")
         // a mid-segment range replays exactly its slice
-        val mid = src.planInputPartitions(TcpOffset(1), TcpOffset(4))(0)
-          .asInstanceOf[TcpLinePartition].rows
+        val mid = rowsOf(src, src.planInputPartitions(TcpOffset(1), TcpOffset(4))(0))
         assert(mid.toSeq == msgs.slice(1, 4))
+      } finally src.stop()
+    }
+  }
+
+  test("a planned partition names its WAL range: same size for 10 and 10 000 rows") {
+    // Spark ships the partition inside every task, so it must only name
+    // [start, end): the rows stay in the WAL, and a partition that
+    // carried them would grow the task binary with the batch.
+    withTempDir("graft-wals-") { tmp =>
+      val ckpt = s"$tmp/sources/0"
+      val walPath = java.nio.file.Paths.get(ckpt, "wal")
+      java.nio.file.Files.createDirectories(walPath)
+      writeWalSegment(walPath, 0, (0 until 10000).map(i => (s"size $i", i.toLong, false)))
+      val src = new TcpLineMicroBatchStream("localhost", 1, None, None, ckpt)
+      try {
+        assert(src.latestOffset().asInstanceOf[TcpOffset].n == 10000L)
+        def planned(end: Long) = src.planInputPartitions(TcpOffset(0), TcpOffset(end))(0)
+        val small = javaBytes(planned(10)).length
+        val large = javaBytes(planned(10000)).length
+        assert(large < 1024, s"10 000-row partition serializes to $large bytes")
+        assert(large == small, s"partition size grows with rows: $small -> $large bytes")
+        val rows = rowsOf(src, planned(10000))
+        assert(rows.length == 10000 && rows.last == (("size 9999", 9999L, false)))
       } finally src.stop()
     }
   }

@@ -286,6 +286,67 @@ class IngestPipelineSpec extends SparkTestBase {
     }
   }
 
+  test("filename-template sink: a batch replayed after a lost commit duplicates no pack") {
+    // The crash window: a batch's packs are on disk but its commit-log
+    // entry is not, so the restarted query replays the batch. Pack names
+    // carry the write second, so a replay that rewrote its packs would
+    // leave each (group, pack_seq) twice under two names.
+    val srv = new TcpFixtureServer
+    srv.enqueue((1 to 4).map(i => s"07 RH= $i.5 %RH T= 1$i.0 'C \r\n".getBytes): _*)
+    val cfg = DeviceConfig.load(s"""
+      |[device]
+      |station = MSU
+      |name = M
+      |host = localhost
+      |port = ${srv.port}
+      |[parser]
+      |regex = ^(?P<level>\\S+) RH= *(?P<rh>\\S+) %RH T= *(?P<temp>\\S+) .C\\s*$$
+      |group_by = level:int
+      |pack_length = 2
+      |destination = ./ignored
+      |""".stripMargin)
+    withTempDir("graft-tmplr-") { tmp =>
+      val dest = mkdir(tmp, "dest")
+      val ckpt = mkdir(tmp, "ckpt")
+      def run() = IngestPipeline.startWithFilenameTemplate(spark, cfg, dest, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
+      def packFiles() = new java.io.File(dest).listFiles().map(_.getName)
+        .filter(_.startsWith("MSU_M7_")).toSeq
+      def committedRows() =
+        try { val fs = packFiles(); if (fs.size < 2) -1L
+          else fs.map(f => spark.read.parquet(s"$dest/$f").count()).sum }
+        catch { case _: Exception => -1L }
+      val q1 = run()
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        // 4 msgs, pack 2 → 2 packs; the last message completes the
+        // second, so the newest batch wrote a pack
+        while (committedRows() < 4 && System.currentTimeMillis() < deadline)
+          Thread.sleep(500)
+        q1.processAllAvailable()
+        assert(packFiles().size == 2)
+      } finally { q1.stop(); srv.close() }
+      val commits = new java.io.File(ckpt, "commits")
+      val newest = commits.list().flatMap(_.toLongOption).max
+      assert(new java.io.File(commits, newest.toString).delete())
+      new java.io.File(commits, s".$newest.crc").delete()
+      Thread.sleep(1100)  // a rewrite now lands under a different second
+      // device gone: the replayed batch reads its range from the WAL
+      val q2 = run()
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        while (!new java.io.File(commits, newest.toString).exists &&
+            System.currentTimeMillis() < deadline) Thread.sleep(200)
+        assert(new java.io.File(commits, newest.toString).exists,
+          s"batch $newest was not replayed")
+        assert(q2.exception.isEmpty)
+      } finally q2.stop()
+      val seqs = packFiles().map(_.stripSuffix(".parquet").split('_').last.toLong)
+      assert(seqs.size == 2 && seqs.distinct.size == 2,
+        s"expected one file per (group, pack_seq): ${packFiles().sorted}")
+    }
+  }
+
   test("filename-template sink: sentinel-valued (NULL) group key packs cleanly") {
     // A record whose group variable is the /// sentinel survives parsing
     // with a NULL key (readport.py:259-262 is the reference crash edge);
