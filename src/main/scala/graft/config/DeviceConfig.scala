@@ -68,21 +68,13 @@ final case class DeviceConfig(
   /** Filename template of the persisted window (reference
     * readport.py:560-563): `{station}_{device}{group}_{date}`.
     */
-  def fileStem(groupValue: Option[Any], date: java.time.Instant): String =
-    stemPrefix(groupValue) + java.time.format.DateTimeFormatter
+  def fileStem(groupValue: Option[Any], date: java.time.Instant): String = {
+    val g = groupValue.map(_.toString).getOrElse("")
+    val d = java.time.format.DateTimeFormatter
       .ofPattern("yyyy-MM-dd_HH-mm-ss").withZone(java.time.ZoneOffset.UTC)
       .format(date)
-
-  /** Regex matching [[fileStem]] of this group at ANY date: the prefix
-    * literally, then exactly the fixed-width date field. A group value
-    * may itself contain `_`, so a looser pattern (a glob) could match
-    * another group's files.
-    */
-  def fileStemPattern(groupValue: Option[Any]): String =
-    Pattern.quote(stemPrefix(groupValue)) + """\d{4}-\d{2}-\d{2}_\d{2}-\d{2}-\d{2}"""
-
-  private def stemPrefix(groupValue: Option[Any]): String =
-    s"${station}_$device${groupValue.map(_.toString).getOrElse("")}_"
+    s"${station}_$device${g}_$d"
+  }
 }
 
 object DeviceConfig {

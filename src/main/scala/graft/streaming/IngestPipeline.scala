@@ -135,30 +135,25 @@ object IngestPipeline {
     * Idempotent on replay: a batch replayed after a crash between its
     * pack writes and its commit-log entry re-emits the same
     * `(group, pack_seq)`, which `{date}` (the write instant) would
-    * otherwise name anew. A pack whose output for that group and
-    * `pack_seq` already holds `_SUCCESS`, under any date, is skipped.
+    * otherwise name anew. So `{date}` is the batch's timestamp: in a
+    * streaming plan `current_timestamp()` reads the `batchTimestampMs`
+    * that the offset log records before the batch runs and restores on
+    * replay, so the replay writes the same paths and `overwrite`
+    * replaces the first attempt's files.
     */
   def startWithFilenameTemplate(spark: SparkSession, cfg: DeviceConfig,
       dest: String, checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
     val (packed, keyCol) = packedStream(spark, cfg)
-    packed.writeStream
+    packed.withColumn("_batch_ms", unix_millis(current_timestamp())).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // persist BEFORE multiple actions: re-evaluating a stateful
         // batch plan would replay flatMapGroupsWithState against
         // already-committed state and lose pack rows
         batch.persist()
         try {
-          val packs = batch.select(col(keyCol), col("pack_seq"))
+          val packs = batch.select(col(keyCol), col("pack_seq"), col("_batch_ms"))
             .distinct().collect()
-          // one listing per pack-emitting batch; only a name match costs
-          // a `_SUCCESS` probe
-          val destPath = new org.apache.hadoop.fs.Path(dest)
-          lazy val destFs =
-            destPath.getFileSystem(spark.sessionState.newHadoopConf())
-          lazy val existing =
-            if (!destFs.exists(destPath)) Array.empty[org.apache.hadoop.fs.Path]
-            else destFs.listStatus(destPath).map(_.getPath)
           packs.foreach { r =>
             val g = r.get(0)
             val seq = r.getLong(1)
@@ -166,15 +161,13 @@ object IngestPipeline {
             // legal NULL (readport.py:259-262) — it becomes an empty
             // group fragment in the name, and the pack filter must use
             // <=> (null === null is NULL, silently dropping the pack)
-            val group = cfg.groupBy.flatMap(_ => Option(g))
-            val done = s"${cfg.fileStemPattern(group)}_$seq\\.parquet".r
-            if (!existing.exists(p => done.matches(p.getName) &&
-                destFs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))))
-              batch.filter(col(keyCol) <=> lit(g) && col("pack_seq") === seq)
-                .drop(keyCol, "pack_seq")  // P5: group lives in the name
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(s"$dest/${cfg.fileStem(group, java.time.Instant.now())}_$seq.parquet")
+            val stem = cfg.fileStem(cfg.groupBy.flatMap(_ => Option(g)),
+              java.time.Instant.ofEpochMilli(r.getLong(2)))
+            batch.filter(col(keyCol) <=> lit(g) && col("pack_seq") === seq)
+              .drop(keyCol, "pack_seq", "_batch_ms")  // P5: group lives in the name
+              .coalesce(1)
+              .write.mode("overwrite")
+              .parquet(s"$dest/${stem}_$seq.parquet")
           }
         } finally batch.unpersist()
       }

@@ -347,6 +347,47 @@ class IngestPipelineSpec extends SparkTestBase {
     }
   }
 
+  test("filename-template sink: a fresh checkpoint writes packs beside an earlier run's") {
+    // pack_seq restarts at 0 with a new checkpoint, so an earlier run's
+    // MSU_M7_<date>_0.parquet in the same dest must not stand in for
+    // this run's pack 0
+    val srv = new TcpFixtureServer
+    srv.enqueue((1 to 2).map(i => s"07 RH= $i.5 %RH T= 1$i.0 'C \r\n".getBytes): _*)
+    val cfg = DeviceConfig.load(s"""
+      |[device]
+      |station = MSU
+      |name = M
+      |host = localhost
+      |port = ${srv.port}
+      |[parser]
+      |regex = ^(?P<level>\\S+) RH= *(?P<rh>\\S+) %RH T= *(?P<temp>\\S+) .C\\s*$$
+      |group_by = level:int
+      |pack_length = 2
+      |destination = ./ignored
+      |""".stripMargin)
+    withTempDir("graft-tmplf-") { tmp =>
+      val dest = mkdir(tmp, "dest")
+      val ckpt = mkdir(tmp, "ckpt")
+      val earlier = new java.io.File(dest, "MSU_M7_2020-01-01_00-00-00_0.parquet")
+      assert(earlier.mkdir() && new java.io.File(earlier, "_SUCCESS").createNewFile())
+      val q = IngestPipeline.startWithFilenameTemplate(spark, cfg, dest, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
+      def fresh() = new java.io.File(dest).listFiles().toSeq
+        .filter(f => f.getName.startsWith("MSU_M7_") && f.getName != earlier.getName)
+      def freshRows() =
+        try fresh().map(f => spark.read.parquet(f.getPath).count()).sum
+        catch { case _: Exception => -1L }
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        while (freshRows() < 2 && System.currentTimeMillis() < deadline)
+          Thread.sleep(500)
+        assert(fresh().map(_.getName.stripSuffix(".parquet").split('_').last) == Seq("0"),
+          s"expected this run's pack 0: ${new java.io.File(dest).list().sorted.toSeq}")
+        assert(freshRows() == 2)
+      } finally { q.stop(); srv.close() }
+    }
+  }
+
   test("filename-template sink: sentinel-valued (NULL) group key packs cleanly") {
     // A record whose group variable is the /// sentinel survives parsing
     // with a NULL key (readport.py:259-262 is the reference crash edge);
